@@ -1,27 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to every core: the bench contract is local[32] on the
-    // 32-cpu driver box, and an unset env var must not quietly run 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // unpersisting truncated-lineage checkpoints between queries is
-    // deliberate (PinnedRdds cleanup) — the per-RDD warning it triggers
-    // would flood the output hundreds of times per run
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession.local()
     if (sys.env.contains("GRAFT_DEBUG_STAGES"))
       spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onStageCompleted(
@@ -166,8 +147,7 @@ object Bench {
     // failed + a pointer to the full per-query map on disk — so any
     // bounded tail ends in a parseable record. The full line and
     // bench_full.json keep their exact prior shape; nothing is removed
-    // or renamed (measurement-contract fix, documented in
-    // OPTIMIZATION_r14.md).
+    // or renamed.
     println(s"""{"metric":"total","unit":"sec","sf":"$sfDir","value":$total,"failed":$failedJson,"full":"bench_full.json"}""")
     // the driver artifact persists only the tail of stdout, which
     // truncates the per-query map to the slow tail — ALSO write the

@@ -2,23 +2,43 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Registry of persisted RDD ids that outlive per-query cleanup.
+/** The registry of per-session views and of the persisted RDD ids that
+  * outlive per-query cleanup.
   *
   * Derived tables shared by several queries (e.g. the co-purchase graph
   * behind g_cc / g_triangles / g_label_prop) are materialized once per
   * (session, input dir) — the library equivalent of a materialized
-  * view. The Bench/Verify harnesses unpersist loop state between
-  * queries; ids registered here are skipped so the shared table
-  * survives the run.
+  * view. [[view]] memoizes them; [[pinning]] records which persisted
+  * RDDs a build created. The Bench/Verify harnesses unpersist loop
+  * state between queries; ids registered here are skipped so the
+  * shared table survives the run.
   *
-  * Ids are scoped by applicationId: RDD ids restart at 0 in a new
+  * Everything is scoped by applicationId: RDD ids restart at 0 in a new
   * SparkContext, so an unscoped set would wrongly shield a later
-  * context's unrelated RDDs from cleanup.
+  * context's unrelated RDDs from cleanup, and an unscoped memo would
+  * serve frames bound to a dead context.
   */
 object PinnedRdds {
   private val ids = scala.collection.mutable.Set.empty[(String, Int)]
+  private val views = scala.collection.mutable.Map.empty[(String, String, String), Any]
 
   private def app(spark: SparkSession): String = spark.sparkContext.applicationId
+
+  /** The view `name` over input `dir`, built at most once per session.
+    *
+    * Single-flight: the build runs under this object's (reentrant)
+    * monitor, so a concurrent caller waits for the first build instead
+    * of running — and pinning — a second copy, and a build may itself
+    * read other views. A build that throws memoizes nothing. `build`
+    * chooses its own pin scope: wrap the whole body in [[pinning]], or
+    * only the final checkpoint so the per-round checkpoints of a loop
+    * stay droppable. A build must not wait on a streaming query whose
+    * batches read views: the stream thread would block on the monitor.
+    */
+  def view[T](spark: SparkSession, dir: String, name: String)(build: => T): T = synchronized {
+    val key = (app(spark), dir, name)
+    views.getOrElse(key, { val v = build; views(key) = v; v }).asInstanceOf[T]
+  }
 
   /** Run `body` (which materializes via localCheckpoint) and pin every
     * persistent RDD it created.

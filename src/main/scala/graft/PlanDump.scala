@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `.explain("formatted")` output for named declared queries to
   * files — the optimization rounds' plan-evidence artifact
   * (plans/rNN/<query>_<tag>.txt). Usage:
@@ -13,18 +11,7 @@ object PlanDump {
     require(args.length == 3, "usage: PlanDump <outDir> <tag> <names,comma-sep>")
     val Array(outDir, tag, namesCsv) = args
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val qs = SparkEntry.queries
     // GRAFT_DUMP_LOOP=1: additionally capture the PER-ROUND loop-body
@@ -42,8 +29,12 @@ object PlanDump {
           rounds += ((t, qe.explainString(
             org.apache.spark.sql.execution.FormattedMode)))
         }
-      val df = qs(name)(spark, sfDir)
-      if (dumpLoop) { df.count(); PlanAudit.hook = null }
+      val df =
+        try {
+          val d = qs(name)(spark, sfDir)
+          if (dumpLoop) d.count()
+          d
+        } finally PlanAudit.hook = null
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.write(

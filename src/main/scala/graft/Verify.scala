@@ -1,30 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // see Bench: the checkpoint-unpersist warning is expected cleanup
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // optional comma-separated name filter for local iteration (driver
     // leaves it unset → full run), same contract as Bench
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .foreach { case (name, fn) =>
@@ -32,6 +18,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
       }
       // free checkpointed loop state between queries (same as Bench);
       // pinned materialized views survive
@@ -53,5 +40,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

@@ -41,12 +41,10 @@ object Algorithms {
     * stays HARD-bounded by the cutover guard itself (≤ finishBelow
     * uncolored rows plus ≤ 50× finishBelow live edges ≈ 55 MB worst
     * case — the same bounded-driver-codebook envelope, just with its
-    * own measured constant). GRAFT_COLOR_FINISH overrides for A/Bs.
+    * own measured constant).
     */
   private[graft] val ColoringFinishBound: Long =
-    sys.env.get("GRAFT_COLOR_FINISH").map(_.toLong)
-      .getOrElse(sys.env.get("GRAFT_STRAGGLER_BOUND")
-        .map(_.toLong * 32 / 10).getOrElse(64000L))
+    sys.env.get("GRAFT_STRAGGLER_BOUND").map(_.toLong * 32 / 10).getOrElse(64000L)
 
   private def hintSmall(df: DataFrame, rows: Long): DataFrame =
     if (rows <= BroadcastRowBound) broadcast(df) else df
@@ -97,15 +95,6 @@ object Algorithms {
     else capParts(df).localCheckpoint()
   }
 
-  /** Shuffle width for an iteration loop, derived from the known input
-    * size: roughly one partition per 50k rows, clamped to cluster width.
-    * AQE is off inside the loops (see [[withoutAqe]]), so nothing else
-    * right-sizes the per-round exchanges — and a fixpoint loop over a
-    * small frontier otherwise pays `defaultParallelism` task launches
-    * per stage per round for microseconds of per-task work. At real
-    * scale `rows/50k` exceeds any cluster width and this is simply
-    * `defaultParallelism`; the clamp only bites when state is small.
-    */
   /** Shuffle width for an iteration loop. Target rows/partition is the
     * measured per-task fixed-cost floor: at 50k rows/task the rank
     * loops spent more wall-clock scheduling 32 tasks/stage than
@@ -113,14 +102,12 @@ object Algorithms {
     * 3.6 s, g_pagerank 5.7 → 4.2 s at 250k). At cluster scale the
     * `defaultParallelism` cap dominates long before the target does —
     * the knob only narrows SMALL loop states, where fewer, fuller
-    * tasks are strictly better.
+    * tasks are strictly better. [[graft.operators.Ntile]] sizes its
+    * range shuffle by the same rule.
     */
-  private[graph] def loopWidth(df: DataFrame, rows: Long): Int = {
+  private[graft] def loopWidth(df: DataFrame, rows: Long): Int = {
     val para = df.sparkSession.sparkContext.defaultParallelism
-    val target = sys.props.get("graft.loopTargetRows")
-      .orElse(sys.env.get("GRAFT_LOOP_TARGET_ROWS"))
-      .map(_.toLong).getOrElse(250000L)
-    math.max(1, math.min(para.toLong, rows / target + 1L).toInt)
+    math.max(1, math.min(para.toLong, rows / 250000L + 1L).toInt)
   }
 
   /** Run `body` with AQE off and the loop's shuffle width pinned.
@@ -135,7 +122,6 @@ object Algorithms {
     val conf = df.sparkSession.conf
     val prev = conf.get("spark.sql.adaptive.enabled", "true")
     val prevParts = conf.get("spark.sql.shuffle.partitions", "200")
-    val prevCodegen = conf.get("spark.sql.codegen.wholeStage", "true")
     val prevIdInName = conf.get("spark.sql.codegen.useIdInClassName", "true")
     conf.set("spark.sql.adaptive.enabled", "false")
     width.foreach(w => conf.set("spark.sql.shuffle.partitions", w.toString))
@@ -147,12 +133,9 @@ object Algorithms {
     // 28 → 7 compiles and 5.2 → 4.1 s with the id off). The id exists
     // only for profiler readability; scope it off inside the loops.
     conf.set("spark.sql.codegen.useIdInClassName", "false")
-    if (sys.env.contains("GRAFT_NO_CODEGEN"))
-      conf.set("spark.sql.codegen.wholeStage", "false")
     try body finally {
       conf.set("spark.sql.adaptive.enabled", prev)
       conf.set("spark.sql.shuffle.partitions", prevParts)
-      conf.set("spark.sql.codegen.wholeStage", prevCodegen)
       conf.set("spark.sql.codegen.useIdInClassName", prevIdInName)
     }
   }
@@ -940,12 +923,10 @@ object Algorithms {
     // explicit scan-agg of the initial vector
     var nextDm: Option[() => Double] = None
     for (i <- 1 to iters) {
-      val t0 = System.nanoTime()
       val dm = nextDm.map(_.apply()).getOrElse {
         pr.filter(col("outdeg").isNull)
           .agg(coalesce(sum(col("pr")), lit(0.0))).first().getDouble(0)
       }
-      val t1 = System.nanoTime()
       // shuffle-hash, not broadcast: a broadcast build is its own job
       // with a driver collect — two of those per iteration cost more in
       // orchestration latency than re-exchanging a rank vector that is
@@ -975,15 +956,12 @@ object Algorithms {
             lit(damping) * (coalesce(col("contrib"), lit(0.0)) + dmCol * col("tele"))).as("pr"))
         .observe(metricName,
           sum(when(col("outdeg").isNull, col("pr")).otherwise(lit(0.0))).as("dm"))
-      if (i == 2 && sys.env.contains("GRAFT_DEBUG_PLAN")) observed.explain("formatted")
       // checkpoint every round: pr feeds three branches of the next
       // iteration's plan — lazy chaining recomputes the subtree
       // exponentially
       pr = graft.PlanAudit.tap("rank.round", observed).localCheckpoint()
       nextDm = Some(() =>
         observed.queryExecution.observedMetrics(metricName).getDouble(0))
-      if (sys.env.contains("GRAFT_DEBUG_TIMING"))
-        System.err.println(f"[pr] iter $i dm=${(t1 - t0) / 1e9}%.2fs step=${(System.nanoTime() - t1) / 1e9}%.2fs")
     }
     pr.select(col("gid"), col("pr"))
     } // withoutAqe
@@ -1292,7 +1270,6 @@ object Algorithms {
       var round = 0
       while (uncolRows > 0 && round < maxIter) {
         round += 1
-        val __t0 = System.nanoTime()
         // tentative = mex over the carried colored-neighbor colors
         // (round 1 under the A/B knob: the hash palette instead of the
         // uniform 0 — cs is empty, so there is nothing to mex around)
@@ -1346,8 +1323,6 @@ object Algorithms {
           .observe(mUncol, count(lit(1)).as("n"))
         uncol = uncolF.localCheckpoint()
         uncolRows = uncolF.queryExecution.observedMetrics(mUncol).getLong(0)
-        if (sys.env.contains("GRAFT_DEBUG_LOOP"))
-          println(f"round $round uncol=$uncolRows dt=${(System.nanoTime() - __t0) / 1e9}%.2f")
         if (uncolRows > 0) {
           eLive = eLive
             .join(hintSmall(loserIds.select(col("gid").as("sa")), loserRows),

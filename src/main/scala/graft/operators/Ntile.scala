@@ -64,16 +64,20 @@ object Ntile {
     val pre = pre0.localCheckpoint()
     val rows = pre0.queryExecution.observedMetrics("graft_ntile_n")
       .getLong(0)
-    val para = df.sparkSession.sparkContext.defaultParallelism
-    val targetRows = 250000L // the measured per-task fixed-cost floor
     val parts =
       if (numPartitions > 0) numPartitions
-      else math.max(1L, math.min(para.toLong, rows / targetRows + 1L)).toInt
+      else graft.graph.Algorithms.loopWidth(df, rows)
     // sorted-order ids: materialize once (two consumers: counts + rows)
     val ranged = pre.repartitionByRange(parts, order: _*)
       .sortWithinPartitions(order: _*)
       .withColumn("_nt_mid", monotonically_increasing_id())
       .localCheckpoint()
+    // `ranged` no longer reads the input copy: free it now rather than
+    // at the caller's next cleanup
+    pre.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(blocking = false)
+      case _ =>
+    }
     val base = ranged
       .withColumn("_nt_pid", shiftrightunsigned(col("_nt_mid"), 33))
       .withColumn("_nt_lrn", col("_nt_mid").bitwiseAND(lit((1L << 33) - 1)) + 1)

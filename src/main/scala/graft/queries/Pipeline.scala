@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.PinnedRdds.{pinning, view}
 import graft.functions.FnvHash64
 import graft.pipeline.{Ann, Dedup, Importance, Multimodal, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -59,25 +60,18 @@ object Pipeline {
     * from it (r6 verdict item #6 — the re-derivation was the only
     * reason three faces each paid the signature scan).
     */
-  private val lshBucketsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
   private def lshBucketsCached(spark: SparkSession, dir: String): DataFrame =
-    lshBucketsCache.getOrElseUpdate((spark.sparkContext.applicationId, dir),
-      graft.PinnedRdds.pinning(spark) {
-        Dedup.minhashBandBuckets(
-          Tables.load(spark, dir, "documents"), "doc_id", "text", shingleN = 3)
-          .localCheckpoint()
-      })
-
-  private val lshPairsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
+    view(spark, dir, "lshBuckets")(pinning(spark) {
+      Dedup.minhashBandBuckets(
+        Tables.load(spark, dir, "documents"), "doc_id", "text", shingleN = 3)
+        .localCheckpoint()
+    })
 
   private def lshPairsCached(spark: SparkSession, dir: String): DataFrame =
-    lshPairsCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    view(spark, dir, "lshPairs") {
       val pairs = Dedup.lshCandidatesFromBuckets(lshBucketsCached(spark, dir))
-      graft.PinnedRdds.pinning(spark) { pairs.localCheckpoint() }
-    })
+      pinning(spark) { pairs.localCheckpoint() }
+    }
 
   /** The deterministic k=8 k-means fit over the embeddings table —
     * pinned per (session, dir) like the LSH signature pass: FOUR faces
@@ -85,36 +79,29 @@ object Pipeline {
     * screen) and a deployment fits the corpus codebook once, not per
     * query.
     */
-  private val kmeansCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
   private def kmeansCached(spark: SparkSession, dir: String): DataFrame =
-    kmeansCache.getOrElseUpdate((spark.sparkContext.applicationId, dir),
-      graft.PinnedRdds.pinning(spark) {
-        graft.pipeline.Cluster.kmeansAssign(
-          Tables.load(spark, dir, "embeddings"), "vec_id", "embedding",
-          k = 8, rounds = 2).localCheckpoint()
-      })
+    view(spark, dir, "kmeans")(pinning(spark) {
+      graft.pipeline.Cluster.kmeansAssign(
+        Tables.load(spark, dir, "embeddings"), "vec_id", "embedding",
+        k = 8, rounds = 2).localCheckpoint()
+    })
 
   /** The m=4 × k=16 product-quantization fit (codebooks + encoded code
     * table) — pinned per (session, dir) like the full-space k-means:
     * the encode face and the ADC search face read ONE fit.
     */
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (Int, Seq[Seq[(Int, Array[Double])]], DataFrame)]
-
   private def pqCached(spark: SparkSession, dir: String)
       : (Int, Seq[Seq[(Int, Array[Double])]], DataFrame) =
-    pqCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    view(spark, dir, "pq") {
       val emb = Tables.load(spark, dir, "embeddings")
       val (sub, books) = graft.pipeline.Cluster.pqFit(
         emb, "vec_id", "embedding", m = 4, k = 16, rounds = 2)
-      val codes = graft.PinnedRdds.pinning(spark) {
+      val codes = pinning(spark) {
         graft.pipeline.Cluster.pqAssign(emb, "vec_id", "embedding", sub, books)
           .localCheckpoint()
       }
       (sub, books, codes)
-    })
+    }
 
   /** The IVF-PQ index — 16 coarse lists × (m=4, k=16) residual-PQ
     * codebooks + the encoded code table — pinned per (session, dir):
@@ -122,25 +109,21 @@ object Pipeline {
     * deployed billion-vector composition of the IVF and PQ halves
     * (VERDICT r7 next-round #1).
     */
-  private val ivfPqCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String),
-      (Seq[(Int, Array[Double])], Int, Seq[Seq[(Int, Array[Double])]], DataFrame)]
-
   def ivfPqCachedPublic(spark: SparkSession, dir: String)
       : (Seq[(Int, Array[Double])], Int, Seq[Seq[(Int, Array[Double])]], DataFrame) =
     ivfPqCached(spark, dir)
 
   private def ivfPqCached(spark: SparkSession, dir: String)
       : (Seq[(Int, Array[Double])], Int, Seq[Seq[(Int, Array[Double])]], DataFrame) =
-    ivfPqCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    view(spark, dir, "ivfPq") {
       val emb = Tables.load(spark, dir, "embeddings")
       val coarse = graft.pipeline.Cluster.kmeansFit(
         emb, "vec_id", "embedding", k = 16, rounds = 2)
       val (sub, books, codes) = graft.pipeline.Cluster.ivfPqFit(
         emb, "vec_id", "embedding", coarse, m = 4, k = 16, rounds = 2)
-      val pinned = graft.PinnedRdds.pinning(spark) { codes.localCheckpoint() }
+      val pinned = pinning(spark) { codes.localCheckpoint() }
       (coarse, sub, books, pinned)
-    })
+    }
 
   /** The materialized search-invariants of the pruned exact-kNN path
     * (unit vectors, member-vector table, list radii) — pinned per
@@ -150,17 +133,13 @@ object Pipeline {
     * index fit, one invariant bake, many query batches — the 100 TB
     * serving shape.
     */
-  private val knnIdxCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), graft.pipeline.Cluster.ExactKnnIndex]
-
   private def knnIdxCached(spark: SparkSession,
       dir: String): graft.pipeline.Cluster.ExactKnnIndex =
-    knnIdxCache.getOrElseUpdate((spark.sparkContext.applicationId, dir),
-      graft.PinnedRdds.pinning(spark) {
-        val (coarse, _, _, codes) = ivfPqCached(spark, dir)
-        graft.pipeline.Cluster.prepareExactKnn(codes, coarse,
-          Tables.load(spark, dir, "embeddings"), "vec_id", "embedding")
-      })
+    view(spark, dir, "knnIdx")(pinning(spark) {
+      val (coarse, _, _, codes) = ivfPqCached(spark, dir)
+      graft.pipeline.Cluster.prepareExactKnn(codes, coarse,
+        Tables.load(spark, dir, "embeddings"), "vec_id", "embedding")
+    })
 
   /** Build the pinned pipeline materialized views ahead of queries —
     * same load-time contract as [[GraphOps.warmViews]].
@@ -190,18 +169,14 @@ object Pipeline {
     * the previous ingest left behind (the ccBase/basePr discipline
     * applied to the dedup family).
     */
-  private val lshBaseBucketsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
   private def lshBaseBucketsCached(spark: SparkSession, dir: String): DataFrame =
-    lshBaseBucketsCache.getOrElseUpdate((spark.sparkContext.applicationId, dir),
-      graft.PinnedRdds.pinning(spark) {
-        Dedup.minhashBandBuckets(
-          Tables.load(spark, dir, "documents")
-            .filter(col("doc_id") % 10 =!= 0),
-          "doc_id", "text", shingleN = 3)
-          .localCheckpoint()
-      })
+    view(spark, dir, "lshBaseBuckets")(pinning(spark) {
+      Dedup.minhashBandBuckets(
+        Tables.load(spark, dir, "documents")
+          .filter(col("doc_id") % 10 =!= 0),
+        "doc_id", "text", shingleN = 3)
+        .localCheckpoint()
+    })
 
   /** Incremental LSH near-dup maintenance face: the document batch
     * with doc_id ≡ 0 mod 10 arrives and folds into the pinned base
@@ -283,16 +258,13 @@ object Pipeline {
     * them into canonical clusters); pinned per (session, dir) like the
     * LSH bucket invariants: one all-pairs verify per corpus snapshot.
     */
-  private val cosinePairsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
   private def cosinePairsCached(spark: SparkSession, dir: String): DataFrame =
-    cosinePairsCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    view(spark, dir, "cosinePairs") {
       val pairs = Dedup.embedCosineAllPairs(
         Tables.load(spark, dir, "embeddings"), "vec_id", "embedding",
         threshold = 0.4)
-      graft.PinnedRdds.pinning(spark) { pairs.localCheckpoint() }
-    })
+      pinning(spark) { pairs.localCheckpoint() }
+    }
 
   def pDedupEmbed(spark: SparkSession, dir: String): DataFrame =
     cosinePairsCached(spark, dir)
@@ -519,19 +491,14 @@ object Pipeline {
        JOIN sz sb ON sb.doc_id = id_b
        WHERE 2 * i >= sa.sz + sb.sz - i"""
 
-  private val ssjoinIdxCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Dedup.SsjoinIndex]
-
   private def ssjoinIdxCached(spark: SparkSession,
       dir: String): Dedup.SsjoinIndex =
-    ssjoinIdxCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir),
-      graft.PinnedRdds.pinning(spark) {
-        Dedup.ssjoinIndex(
-          Tables.load(spark, dir, "documents")
-            .filter(col("doc_id") % 10 =!= 0),
-          "doc_id", "text")
-      })
+    view(spark, dir, "ssjoinIdx")(pinning(spark) {
+      Dedup.ssjoinIndex(
+        Tables.load(spark, dir, "documents")
+          .filter(col("doc_id") % 10 =!= 0),
+        "doc_id", "text")
+    })
 
   /** INCREMENTAL prefix-join maintenance (the incremental-family
     * discipline on the newest dedup member): the doc_id ≡ 0 mod 10
@@ -565,18 +532,13 @@ object Pipeline {
     * previous ingest left behind (the lshBaseBuckets discipline applied
     * to the containment family).
     */
-  private val containmentIdxCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Dedup.ContainmentIndex]
-
   private def containmentIdxCached(spark: SparkSession,
       dir: String): Dedup.ContainmentIndex =
-    containmentIdxCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir),
-      graft.PinnedRdds.pinning(spark) {
-        Dedup.containmentIndex(
-          Tables.load(spark, dir, "documents").filter(col("doc_id") % 10 =!= 0),
-          "doc_id", "text")
-      })
+    view(spark, dir, "containmentIdx")(pinning(spark) {
+      Dedup.containmentIndex(
+        Tables.load(spark, dir, "documents").filter(col("doc_id") % 10 =!= 0),
+        "doc_id", "text")
+    })
 
   /** INCREMENTAL containment face: the doc_id ≡ 0 mod 10 batch folds
     * into the pinned base index ([[graft.pipeline.Dedup.incrementalContainment]])
@@ -1404,18 +1366,15 @@ object Pipeline {
     * files (queries are independent, so any split exercises the
     * batching), pinned per (session, dir) as the other stream sources.
     */
-  private val knnQuerySrcCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   private def knnQuerySourceDir(spark: SparkSession, dir: String): String =
-    knnQuerySrcCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    view(spark, dir, "knnQuerySrc") {
       val out = graft.streaming.Streams.scratchDir("graft_knn_src")
       Tables.load(spark, dir, "embeddings").filter(col("vec_id") < 30)
         .select(col("vec_id"))
         .repartition(3, col("vec_id"))
         .write.mode("overwrite").parquet(out)
       out
-    })
+    }
 
   /** STREAMING exact-kNN serving — the serving half of the ANN family
     * as a stream face: query ids arrive in three REAL micro-batches
@@ -1550,17 +1509,14 @@ object Pipeline {
     * (session, dir), the fit-once half of the fit-once /
     * serve-everywhere loop [[pKnnIvfPqLoaded]] gates.
     */
-  private val ivfPqSavedCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   private def ivfPqSavedDir(spark: SparkSession, dir: String): String =
-    ivfPqSavedCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    view(spark, dir, "ivfPqSaved") {
       val (coarse, sub, books, codes) = ivfPqCached(spark, dir)
       val out = graft.streaming.Streams.scratchDir("graft_ivfpq_idx")
         .toString
       graft.pipeline.Cluster.saveIvfPqIndex(out, coarse, sub, books, codes)
       out
-    })
+    }
 
   /** The SERVING path of the persisted index, gated end-to-end in the
     * driver artifact (SURVEY 48c): the pinned fit is saved once per
@@ -1834,21 +1790,16 @@ object Pipeline {
     * ≠ 0): base ε-pairs + neighbor list + degrees + core labels — the
     * previous snapshot's density state, as ccBaseCached/basePrCached.
     */
-  private val dbscanBaseCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (DataFrame, DataFrame, DataFrame)]
-
   private def dbscanBaseCached(spark: SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame) =
-    dbscanBaseCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir),
-      graft.PinnedRdds.pinning(spark) {
-        val basePairs = Dedup.embedCosineAllPairs(
-          Tables.load(spark, dir, "embeddings")
-            .filter(col("vec_id") % 10 =!= 0),
-          "vec_id", "embedding", threshold = 0.4)
-        graft.pipeline.Cluster.dbscanFit(basePairs.localCheckpoint(),
-          minPts = 3)
-      })
+    view(spark, dir, "dbscanBase")(pinning(spark) {
+      val basePairs = Dedup.embedCosineAllPairs(
+        Tables.load(spark, dir, "embeddings")
+          .filter(col("vec_id") % 10 =!= 0),
+        "vec_id", "embedding", threshold = 0.4)
+      graft.pipeline.Cluster.dbscanFit(basePairs.localCheckpoint(),
+        minPts = 3)
+    })
 
   /** The pinned hyperplane-bucket index of the embedding corpus —
     * (id, table, bucket) at the 3-bit × 16-table operating point
@@ -1859,19 +1810,14 @@ object Pipeline {
     * faces probe it with batch-side keys — the [[Dedup.incrementalLsh]]
     * discipline applied to the embedding family.
     */
-  private val embedLshKeysCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
   private def embedLshKeysCached(spark: SparkSession, dir: String): DataFrame =
-    embedLshKeysCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir),
-      graft.PinnedRdds.pinning(spark) {
-        Ann.lshKeys(Tables.load(spark, dir, "embeddings"), "vec_id",
-            "embedding", dim = 64, bitsPerTable = 3, numTables = 16,
-            seed = 42L)
-          .select(col("id"), col("table"), col("bucket"))
-          .localCheckpoint()
-      })
+    view(spark, dir, "embedLshKeys")(pinning(spark) {
+      Ann.lshKeys(Tables.load(spark, dir, "embeddings"), "vec_id",
+          "embedding", dim = 64, bitsPerTable = 3, numTables = 16,
+          seed = 42L)
+        .select(col("id"), col("table"), col("bucket"))
+        .localCheckpoint()
+    })
 
   /** INCREMENTAL DBSCAN: the vec_id ≡ 0 mod 10 batch arrives and folds
     * into the pinned base density state
@@ -1919,11 +1865,8 @@ object Pipeline {
     * s_cc_incr / s_mst_incr delta-source convention), pinned per
     * (session, dir).
     */
-  private val dbscanDeltaSrcCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   private def dbscanDeltaSourceDir(spark: SparkSession, dir: String): String =
-    dbscanDeltaSrcCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    view(spark, dir, "dbscanDeltaSrc") {
       val out = graft.streaming.Streams.scratchDir("graft_dbscan_src")
       Tables.load(spark, dir, "embeddings")
         .filter(col("vec_id") % 10 === 0)
@@ -1931,7 +1874,7 @@ object Pipeline {
         .repartition(3, col("vec_id"))
         .write.mode("overwrite").parquet(out)
       out
-    })
+    }
 
   /** STREAMING DBSCAN maintenance — the density-state member of the
     * streaming-fold family (beside s_cc_incr's semilattice labels and
@@ -2566,34 +2509,30 @@ object Pipeline {
     * deployment keeps NEXT TO its datasheet so the card never needs a
     * corpus re-scan.
     */
-  private val cardBaseCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (DataFrame, Array[Long], Set[String])]
-
   private def cardBaseCached(spark: SparkSession, dir: String)
       : (DataFrame, Array[Long], Set[String]) =
-    cardBaseCache.getOrElseUpdate((spark.sparkContext.applicationId, dir),
-      graft.PinnedRdds.pinning(spark) {
-        val base = Tables.load(spark, dir, "documents")
-          .filter(col("doc_id") % 10 =!= 0)
-        val digests = base.select(sha2(col("text"), 256).as("digest"))
-          .distinct().localCheckpoint()
-        val q4 = floor(TextAnalysis.qualityScore(col("text")) * 10000.0 +
-          lit(0.5)).cast("long")
-        val langCols = cardLangs.map(l =>
-          coalesce(sum(when(col("lang") === l, 1L).otherwise(0L)), lit(0L))) :+
-          coalesce(sum(when(!col("lang").isin(cardLangs.map(x => x: Any): _*),
-            1L).otherwise(0L)), lit(0L))
-        val aggCols = Seq(count(lit(1)),
-          coalesce(sum(col("n_chars")), lit(0L)),
-          coalesce(sum(TextAnalysis.wsTokens(col("text"))).cast("long"), lit(0L)),
-          coalesce(sum(q4), lit(0L))) ++ langCols
-        val r = base.agg(aggCols.head, aggCols.tail: _*).first()
-        val scalars = (0 until aggCols.size).map(r.getLong).toArray :+
-          digests.count()
-        val srcs = base.select(col("source")).distinct()
-          .collect().map(_.getString(0)).toSet
-        (digests, scalars, srcs)
-      })
+    view(spark, dir, "cardBase")(pinning(spark) {
+      val base = Tables.load(spark, dir, "documents")
+        .filter(col("doc_id") % 10 =!= 0)
+      val digests = base.select(sha2(col("text"), 256).as("digest"))
+        .distinct().localCheckpoint()
+      val q4 = floor(TextAnalysis.qualityScore(col("text")) * 10000.0 +
+        lit(0.5)).cast("long")
+      val langCols = cardLangs.map(l =>
+        coalesce(sum(when(col("lang") === l, 1L).otherwise(0L)), lit(0L))) :+
+        coalesce(sum(when(!col("lang").isin(cardLangs.map(x => x: Any): _*),
+          1L).otherwise(0L)), lit(0L))
+      val aggCols = Seq(count(lit(1)),
+        coalesce(sum(col("n_chars")), lit(0L)),
+        coalesce(sum(TextAnalysis.wsTokens(col("text"))).cast("long"), lit(0L)),
+        coalesce(sum(q4), lit(0L))) ++ langCols
+      val r = base.agg(aggCols.head, aggCols.tail: _*).first()
+      val scalars = (0 until aggCols.size).map(r.getLong).toArray :+
+        digests.count()
+      val srcs = base.select(col("source")).distinct()
+        .collect().map(_.getString(0)).toSet
+      (digests, scalars, srcs)
+    })
 
   /** INCREMENTAL dataset card: the delta batch folds into the pinned
     * base card state without re-scanning the corpus — every scalar is

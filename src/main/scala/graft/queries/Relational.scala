@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.PinnedRdds.{pinning, view}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -1448,15 +1449,12 @@ object Relational {
     * reports from it, never paying the per-block quadratic verify
     * twice. Pinned like the graph family's loop invariants.
     */
-  private val fuzzyPairsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
   private def fuzzyPairsCached(spark: SparkSession, dir: String): DataFrame =
-    fuzzyPairsCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    view(spark, dir, "fuzzyPairs") {
       val pairs = graft.operators.FuzzyMatch.matchPairs(
         Tables.load(spark, dir, "part"), "p_partkey", "p_name", maxDist = 2)
-      graft.PinnedRdds.pinning(spark) { pairs.localCheckpoint() }
-    })
+      pinning(spark) { pairs.localCheckpoint() }
+    }
 
   /** Build the pinned relational materialized views ahead of queries —
     * same load-time contract as [[GraphOps.warmViews]].

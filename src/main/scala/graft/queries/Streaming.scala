@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.PinnedRdds.view
 import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -218,16 +219,13 @@ object Streaming {
     * (maxFilesPerTrigger=1): a single parquet file is always one
     * batch, which would leave the cross-batch fold untested.
     */
-  private val cdcSrcCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   private def cdcSourceDir(spark: SparkSession, dir: String): String =
-    cdcSrcCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    view(spark, dir, "cdcSrc") {
       val out = graft.streaming.Streams.scratchDir("graft_cdc_src")
       Tables.load(spark, dir, "events")
         .repartition(3).write.mode("overwrite").parquet(out)
       out
-    })
+    }
 
   private def toChanges(events: DataFrame): DataFrame =
     events.select(col("user_id").as("c_custkey"),
@@ -425,11 +423,8 @@ object Streaming {
     * to evict them in. File modification times are staggered so the
     * file source's oldest-first ordering equals the batch design.
     */
-  private val lateSrcCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   private def lateSourceDir(spark: SparkSession, dir: String): String =
-    lateSrcCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    view(spark, dir, "lateSrc") {
       import java.nio.file.{Files, Paths}
       val out = graft.streaming.Streams.scratchDir("graft_late_src")
       val ev = Tables.load(spark, dir, "events")
@@ -456,7 +451,7 @@ object Streaming {
       writeOne(sentinel(30, -1L), "f0.parquet", base + 6000L)
       writeOne(sentinel(60, -2L), "f1.parquet", base + 8000L)
       out
-    })
+    }
 
   /** STREAMING windowed aggregation under REAL late data: the events
     * table replayed as three time-interleaved micro-batches (file

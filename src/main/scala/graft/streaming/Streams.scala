@@ -83,8 +83,8 @@ object Streams {
   /** Scale-adaptive shuffle/state width for a REAL streaming query,
     * derived from the source's on-disk byte size (guide §2/§6: derive
     * partitioning from input size, never a constant tuned for one
-    * deployment): one partition per ~64 MB of input (env/prop
-    * overridable), clamped to cluster width. A stateful streaming agg
+    * deployment): one partition per ~64 MB of input, clamped to
+    * cluster width. A stateful streaming agg
     * otherwise opens `spark.sql.shuffle.partitions` state stores PER
     * TRIGGER — at bench scale that is 32 store open/commit cycles per
     * trigger for kilobytes of state; at real scale `bytes/target`
@@ -93,9 +93,7 @@ object Streams {
   def streamWidth(spark: org.apache.spark.sql.SparkSession,
       sourcePath: String): Int = {
     val para = spark.sparkContext.defaultParallelism
-    val target = sys.props.get("graft.streamTargetBytes")
-      .orElse(sys.env.get("GRAFT_STREAM_TARGET_BYTES"))
-      .map(_.toLong).getOrElse(64L << 20)
+    val target = 64L << 20
     val bytes =
       try {
         val p = new org.apache.hadoop.fs.Path(sourcePath)

@@ -60,4 +60,16 @@ class NtileSpec extends SparkSpec {
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), s"distributed ntile planned a window:\n$plan")
   }
+
+  test("only the range-sorted checkpoint stays persisted: the input copy is freed") {
+    import spark.implicits._
+    val df = (1 to 50).map(i => (i.toLong, (i % 9).toLong)).toDF("id", "v")
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // held until the assertion: the context tracks persisted RDDs by weak
+    // reference, so a collected result could take its checkpoint along
+    val out = Ntile.distributed(df, 4, Seq(col("v"), col("id")), "b")
+    out.collect()
+    assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).size == 1)
+    assert(out.count() == 50)
+  }
 }

@@ -10,10 +10,12 @@ time (absolute floor ABS_FLOOR seconds, so scheduling jitter on
 sub-second queries never trips the gate; floor raised 0.75 -> 1.0 in
 r13, documented in BENCH_BASELINE provenance / OPTIMIZATION_r13.md), or
 if a baseline query is missing from the run. When MULTIPLE run files
-are given (the back-to-back pair the drift discipline prescribes), a
-face counts as regressed if its MEDIAN across the runs crosses the gate
-(r13 advisory: min let an intermittent regression hide behind one lucky
-run; median still absorbs a single stall). Every run is compared
+are given, a face counts as regressed if its MEDIAN across the runs
+crosses the gate (r13 advisory: min let an intermittent regression hide
+behind one lucky run; median absorbs a single stall). With exactly two
+runs (the back-to-back pair the drift discipline prescribes) the median
+is the mean, so one stall would still inflate the gated value by half
+its length: a pair is gated on its MIN instead. Every run is compared
 against the SAME baseline file — there is no positional-baseline form;
 pass --baseline explicitly to override BENCH_BASELINE.json.
 """
@@ -43,17 +45,19 @@ def main():
         return 2
     runs = [load(p) for p in args]
     run_doc = runs[0][1]
-    # median across the provided runs: one stalled run cannot flag a
-    # face, and one lucky run cannot hide a consistent regression
-    # (r13 advisory — the old min-across-runs did the latter)
+    # median across 3+ runs: one stalled run cannot flag a face, and one
+    # lucky run cannot hide a consistent regression (r13 advisory — the
+    # old min-across-runs did the latter); a pair's median is its mean,
+    # which a single stall still moves, so a pair takes its min
     samples = {}
     for q, _ in runs:
         for k, v in q.items():
             samples.setdefault(k, []).append(v)
-    run = {k: statistics.median(vs) for k, vs in samples.items()}
+    agg = min if len(runs) == 2 else statistics.median
+    run = {k: agg(vs) for k, vs in samples.items()}
     base, _ = load(base_path)
     print(f"baseline: {base_path}; runs: {', '.join(args)} "
-          f"(median of {len(runs)})")
+          f"({agg.__name__} of {len(runs)})")
 
     bad, missing = [], []
     for name, b in sorted(base.items()):
