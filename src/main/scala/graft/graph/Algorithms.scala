@@ -947,7 +947,11 @@ object Algorithms {
       // compile per round. The UDF closure lives in the plan's
       // `references`, so every round shares one compiled class. The
       // arithmetic is unchanged (same double, same multiply), so the
-      // oracle-sealed values are bit-identical.
+      // oracle-sealed values are bit-identical. The closure must capture
+      // this round's `val dm` (a captured `var` would serialize whatever
+      // value it holds when a job runs), and `observed` must stay
+      // eagerly checkpointed below: a lazily executed round would run
+      // against a later round's dm, with no error to show it.
       val dmCol = udf(() => dm).apply()
       val observed = base
         .join(contribs.hint("shuffle_hash"), col("gid") === col("cgid"), "left")

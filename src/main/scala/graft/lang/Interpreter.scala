@@ -22,7 +22,15 @@ final case class ExecError(msg: String) extends RuntimeException(msg)
   *    loops, so a replayed state can be arbitrarily large;
   *  - INSERTs buffer driver-side and materialize lazily in one batch
   *    per label (scripts are driver-sized by nature; bulk data belongs
-  *    to the DataFrame API, not statements).
+  *    to the DataFrame API, not statements). A batch is one slice, and
+  *    the merge coalesces back to the width the label already has: 1
+  *    for a table built by statements, the read's split count for one
+  *    loaded from a snapshot. Statements never widen a label, so every
+  *    later job over it runs that many tasks, not one more per batch;
+  *  - an INSERT EDGE endpoint resolves in one job: the smallest matching
+  *    `_id` comes from an ordered take of one row
+  *    (`TakeOrderedAndProject`, one row per partition), not a `min`
+  *    aggregate that adaptive execution runs as two jobs.
   *
   * Statement WAL semantics: `replay(script)` reconstructs state by
   * re-executing the ordered log, exactly like the reference server's
@@ -34,22 +42,31 @@ final class Interpreter(spark: SparkSession) {
   def catalog: GraphCatalog = cat
 
   private final class LabelState(var schema: StructType) {
-    var df: Option[DataFrame] = None
+    private var df: Option[DataFrame] = None
+    /** Partitions of `df`: 1 until a snapshot read sets it. Every
+      * `mutate` is narrow, so it keeps the width.
+      */
+    private var width = 1
     val pending = mutable.ArrayBuffer.empty[Row]
 
-    def materialize(): DataFrame = {
-      val base = df.getOrElse(spark.createDataFrame(
+    /** Point the label at its snapshot table, keeping the read's width. */
+    def load(path: java.nio.file.Path): Unit = {
+      val read = spark.read.schema(schema).parquet(path.toString)
+      df = Some(read)
+      width = math.max(1, read.rdd.getNumPartitions)
+    }
+
+    def materialize(): DataFrame =
+      if (pending.isEmpty) df.getOrElse(spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], schema))
-      if (pending.isEmpty) base
       else {
         val batch = spark.createDataFrame(
-          spark.sparkContext.parallelize(pending.toSeq), schema)
-        val merged = base.unionByName(batch)
+          spark.sparkContext.parallelize(pending.toSeq, 1), schema)
+        val merged = df.fold(batch)(_.unionByName(batch).coalesce(width))
         pending.clear()
         df = Some(merged)
         merged
       }
-    }
 
     /** Replace state with a transformed DF; checkpoint to keep the plan
       * from growing linearly with script length.
@@ -437,14 +454,8 @@ final class Interpreter(spark: SparkSession) {
     // repoint live state at the snapshot files BEFORE dropping the old
     // generation (a previously-booted state may still read old files),
     // and so post-compaction lineage starts from the snapshot
-    nodeLabels.foreach { l =>
-      nodeState(l).df = Some(spark.read.schema(nodeSchema(l))
-        .parquet(dir.resolve("nodes").resolve(l).toString))
-    }
-    edgeLabels.foreach { l =>
-      edgeState(l).df = Some(spark.read.schema(edgeSchema(l))
-        .parquet(dir.resolve("edges").resolve(l).toString))
-    }
+    nodeLabels.foreach(l => nodeState(l).load(dir.resolve("nodes").resolve(l)))
+    edgeLabels.foreach(l => edgeState(l).load(dir.resolve("edges").resolve(l)))
     // retention sweep (supersedes the plain drop-older): also clears
     // unpublished partials a crashed earlier attempt may have left
     Snapshot.sweep(dataDir, snapshotKeep)
@@ -501,14 +512,12 @@ final class Interpreter(spark: SparkSession) {
         nodeState.clear(); edgeState.clear()
         meta.nodes.foreach { l =>
           val st = new LabelState(nodeSchema(l))
-          st.df = Some(spark.read.schema(nodeSchema(l))
-            .parquet(dir.resolve("nodes").resolve(l).toString))
+          st.load(dir.resolve("nodes").resolve(l))
           nodeState(l) = st
         }
         meta.edges.foreach { l =>
           val st = new LabelState(edgeSchema(l))
-          st.df = Some(spark.read.schema(edgeSchema(l))
-            .parquet(dir.resolve("edges").resolve(l).toString))
+          st.load(dir.resolve("edges").resolve(l))
           edgeState(l) = st
         }
         val log = Snapshot.openLog(dataDir, gen, format)
@@ -548,7 +557,8 @@ final class Interpreter(spark: SparkSession) {
 
   /** Endpoint resolution (reference server.go:745 findNodeID): by id, or
     * smallest-id row matching the property equalities (deterministic
-    * where the reference takes map-iteration order).
+    * where the reference takes map-iteration order). The ordered take
+    * of one row runs one job; a `min` aggregate runs two under AQE.
     */
   private def findNodeId(ref: Ast.NodeRef): Long = {
     val df = nodes(ref.nodeType)
@@ -563,9 +573,8 @@ final class Interpreter(spark: SparkSession) {
         df.filter(col("_id") === lit(id))
       case None => df.filter(whereCond(ref.nodeType, ref.properties, isNode = true))
     }
-    val rows = matched.select(min(col("_id"))).collect()
-    if (rows.isEmpty || rows(0).isNullAt(0))
-      throw ExecError(s"no matching ${ref.nodeType} node found")
+    val rows = matched.select(col("_id")).orderBy(col("_id")).limit(1).collect()
+    if (rows.isEmpty) throw ExecError(s"no matching ${ref.nodeType} node found")
     rows(0).getLong(0)
   }
 

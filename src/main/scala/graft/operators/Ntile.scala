@@ -59,14 +59,17 @@ object Ntile {
     // unchanged; at small scale it collapses to 1, which also
     // short-circuits RangePartitioner's sampling pass entirely. Bucket
     // values are width-invariant (NtileSpec pins bit-equality to the
-    // window formulation), so only the plan changes.
-    val pre0 = df.observe("graft_ntile_n", count(lit(1)).as("n"))
-    val pre = pre0.localCheckpoint()
-    val rows = pre0.queryExecution.observedMetrics("graft_ntile_n")
-      .getLong(0)
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else graft.graph.Algorithms.loopWidth(df, rows)
+    // window formulation), so only the plan changes. A caller-fixed
+    // width needs no row count, so it checkpoints without the observe.
+    val (pre, parts) =
+      if (numPartitions > 0) (df.localCheckpoint(), numPartitions)
+      else {
+        val observed = df.observe("graft_ntile_n", count(lit(1)).as("n"))
+        val cp = observed.localCheckpoint()
+        val rows = observed.queryExecution.observedMetrics("graft_ntile_n")
+          .getLong(0)
+        (cp, graft.graph.Algorithms.loopWidth(df, rows))
+      }
     // sorted-order ids: materialize once (two consumers: counts + rows)
     val ranged = pre.repartitionByRange(parts, order: _*)
       .sortWithinPartitions(order: _*)

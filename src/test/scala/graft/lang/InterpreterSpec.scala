@@ -674,4 +674,105 @@ class InterpreterSpec extends SparkSpec {
     it.executeScript(rendered)
     assert(it.catalog.nodes("V").field("b").get.check.size === 2)
   }
+
+  /** Jobs `body` submits, counted by a listener that sees only this
+    * thread's job group. The listener bus is drained before and after,
+    * so no other test's late events land in the count.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftbridge.Bridge
+    val sc = spark.sparkContext
+    val group = s"interpreter-shape-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    Bridge.flushListenerBus(sc, 10000)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "interpreter shape")
+    try body
+    finally {
+      sc.clearJobGroup()
+      Bridge.flushListenerBus(sc, 10000)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  test("statement path shape: labels stay one partition wide, an INSERT EDGE runs one job per endpoint, a MATCH one job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-shape").toString
+    val it = fresh()
+    val log = graft.store.CommitLog.open(dir)
+    it.executeLogged(
+      """CREATE NODE P (name: string, n: int);
+        |CREATE EDGE E (FROM P ONE, TO P MANY);""".stripMargin, log)
+    for (r <- 1 to 5) {
+      it.executeLogged(
+        s"INSERT NODE P (name: 'a$r', n: $r); INSERT NODE P (name: 'b$r', n: $r);", log)
+      it.executeLogged(s"UPDATE NODE P SET n: ${10 * r} WHERE name: 'a$r';", log)
+    }
+    // each batch merges back to the label's width instead of adding
+    // defaultParallelism slices to it
+    assert(it.nodes("P").rdd.getNumPartitions === 1)
+    val edgeJobs = jobsOf(it.executeLogged(
+      "INSERT EDGE E FROM P (name: 'a1') TO P (name: 'b5');", log))
+    assert(edgeJobs <= 2, s"INSERT EDGE by property ran $edgeJobs jobs")
+    val matchJobs = jobsOf(it.executeLogged("MATCH P WHERE n: 10;", log).get.collect())
+    assert(matchJobs === 1)
+    assert(it.edges("E").rdd.getNumPartitions === 1)
+    // a snapshot of a one-wide label reads back one wide, and merges
+    // into it keep that width
+    val live = it.compact(dir)
+    assert(it.nodes("P").rdd.getNumPartitions === 1)
+    it.executeLogged("INSERT NODE P (name: 'c', n: 1);", live)
+    assert(it.nodes("P").rdd.getNumPartitions === 1)
+    val rebooted = fresh()
+    rebooted.bootFrom(dir)
+    assert(rebooted.nodes("P").rdd.getNumPartitions === 1)
+    assert(rebooted.edges("E").rdd.getNumPartitions === 1)
+    assert(rebooted.nodes("P").count() === 11)
+  }
+
+  test("endpoint resolution: the smallest surviving id over checkpointed and pending rows; a miss logs nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-endpoint").toString
+    val it = fresh()
+    val log = graft.store.CommitLog.open(dir)
+    // ids: a=1 b=2 c=3; the DELETEs checkpoint the base {b}, and d=4,
+    // e=5, f=6 stay pending until an endpoint lookup merges them
+    it.executeLogged(
+      """CREATE NODE P (name: string, tag: string);
+        |CREATE EDGE E (FROM P ONE, TO P MANY);
+        |INSERT NODE P (name: 'a', tag: 'x');
+        |INSERT NODE P (name: 'b', tag: 'x');
+        |INSERT NODE P (name: 'c', tag: 'y');
+        |DELETE NODE P WHERE name: 'a';
+        |DELETE NODE P WHERE name: 'c';
+        |INSERT NODE P (name: 'd', tag: 'x');
+        |INSERT NODE P (name: 'e', tag: 'y');
+        |INSERT NODE P (name: 'f', tag: 'y');""".stripMargin, log)
+    // x matches 2 (base) and 4 (pending); y matches 5 and 6 (pending)
+    it.executeLogged("INSERT EDGE E FROM P (tag: 'x') TO P (tag: 'y');", log)
+    // edge 7; h=8 is pending when its id ref resolves
+    it.executeLogged("INSERT NODE P (name: 'h', tag: 'x');", log)
+    it.executeLogged("INSERT EDGE E FROM P (8) TO P (2);", log)
+    val entries = log.entryCount
+    assert(entries === 13)
+    // misses: a deleted id, a deleted row's property, no match at all
+    for (miss <- Seq(
+        "INSERT EDGE E FROM P (1) TO P (2);",
+        "INSERT EDGE E FROM P (2) TO P (3);",
+        "INSERT EDGE E FROM P (name: 'a') TO P (2);",
+        "INSERT EDGE E FROM P (tag: 'x') TO P (tag: 'z');")) {
+      val e = intercept[ExecError](it.executeLogged(miss, log))
+      assert(e.getMessage === "no matching P node found")
+    }
+    assert(log.entryCount === entries)
+    val got = it.edges("E").orderBy("_id").collect()
+      .map(r => (r.getAs[Long]("_src"), r.getAs[Long]("_dst"))).toSeq
+    assert(got === Seq((2L, 5L), (8L, 2L)))
+  }
 }
