@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The local session the graft mains (Bench, Verify, PlanDump) run on. */
+/** The local session the graft mains (Bench, Verify, PlanDump, ScaleData) run on. */
 object GraftSession {
   /** SPARK_GRAFT_CPUS, else every core: the bench contract is local[32]
     * on a 32-cpu box, and an unset variable must not quietly run 4.

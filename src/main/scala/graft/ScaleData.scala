@@ -82,16 +82,7 @@ object ScaleData {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "/dev/shm/graft_scale10x"
     val copies = sys.env.getOrElse("GRAFT_SCALE_COPIES", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS",
-        Runtime.getRuntime.availableProcessors.toString)}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     build(spark, src, out, copies)
     println(s"""{"scale_dir":"$out","copies":$copies,"src":"$src"}""")
     spark.stop()

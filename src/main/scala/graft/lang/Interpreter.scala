@@ -1,6 +1,7 @@
 package graft.lang
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import graft.catalog.{Ddl, GraphCatalog, Types}
 import graft.store.GraphStore
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -19,64 +20,179 @@ final case class ExecError(msg: String) extends RuntimeException(msg)
   *    stores number literals as raw strings, server.go:570);
   *  - UPDATE/DELETE/MATCH compile to Catalyst plans (projection /
   *    filter) over the label's DataFrame instead of driver-side map
-  *    loops, so a replayed state can be arbitrarily large;
-  *  - INSERTs buffer driver-side and materialize lazily in one batch
-  *    per label (scripts are driver-sized by nature; bulk data belongs
-  *    to the DataFrame API, not statements). A batch is one slice, and
-  *    the merge coalesces back to the width the label already has: 1
-  *    for a table built by statements, the read's split count for one
-  *    loaded from a snapshot. Statements never widen a label, so every
-  *    later job over it runs that many tasks, not one more per batch;
-  *  - an INSERT EDGE endpoint resolves in one job: the smallest matching
-  *    `_id` comes from an ordered take of one row
-  *    (`TakeOrderedAndProject`, one row per partition), not a `min`
-  *    aggregate that adaptive execution runs as two jobs.
+  *    loops, so one evaluator serves every table size;
+  *  - a label keeps its rows on the driver, and serves them as one
+  *    LocalRelation, while every such label's rows fit one byte budget
+  *    together ([[Interpreter.driverBudget]], 2 MiB of
+  *    [[Interpreter.rowBytes]] estimates, placed where measured
+  *    statement latency favours Spark). Catalyst's
+  *    `ConvertToLocalRelation` folds an UPDATE's projection, a DELETE's or MATCH's filter and an
+  *    endpoint's ordered take of one row into the relation, so those
+  *    statements run no Spark job: a mutation collects its folded plan
+  *    back into rows, and an INSERT appends to them. The rows serve with
+  *    the catalog's schema, each field nullable if the catalog or the
+  *    plan they came from says so: a folded `when(true, 5)` is
+  *    non-nullable, yet a later insert may omit that field. A label
+  *    must stay ONE relation: a union of two runs a job;
+  *  - a label whose rows would push the total past the budget moves
+  *    once, for good, to a Spark table. INSERTs buffer driver-side
+  *    and merge in one batch per label. A batch is one slice, and the merge coalesces back to
+  *    the width the label already has: 1 for a table built by
+  *    statements, the read's split count for one loaded from a
+  *    snapshot. Statements never widen a label. A mutation checkpoints,
+  *    so the plan does not grow with script length;
+  *  - an INSERT EDGE endpoint resolves with an ordered take of one row
+  *    (`TakeOrderedAndProject`): on a Spark table that is one job, where
+  *    a `min` aggregate runs two under adaptive execution;
+  *  - `compact` writes each label as parquet (a driver-resident label
+  *    as one file; its rows stay the live state), and `bootFrom` loads
+  *    each snapshot label whose files fit the budget left with one
+  *    bounded collect, so a label within the budget boots onto the
+  *    driver and replaying the suffix log runs no job.
   *
   * Statement WAL semantics: `replay(script)` reconstructs state by
   * re-executing the ordered log, exactly like the reference server's
   * boot path.
   */
-final class Interpreter(spark: SparkSession) {
+final class Interpreter private[graft] (spark: SparkSession, driverBytes: Long) {
+
+  /** An interpreter whose labels share [[Interpreter.driverBudget]]. */
+  def this(spark: SparkSession) = this(spark, Interpreter.driverBudget)
 
   private var cat: GraphCatalog = GraphCatalog.empty
   def catalog: GraphCatalog = cat
 
+  /** One label's rows: on the driver while every label's driver rows
+    * fit `driverBytes`, else a Spark table. A label that would push the
+    * total past the budget moves to Spark once and stays there.
+    */
   private final class LabelState(var schema: StructType) {
-    private var df: Option[DataFrame] = None
+    /** Driver-resident rows, or `None` once the label lives in Spark. */
+    private var rows: Option[mutable.ArrayBuffer[Row]] = Some(mutable.ArrayBuffer.empty)
+    /** [[Interpreter.rowBytes]] summed over `rows`; 0 in Spark. */
+    var bytes = 0L
+    /** The schema `rows` are served with: the catalog's, with every
+      * field nullable that the plan they were collected from says may
+      * be null. A folded `when(true, 5)` is non-nullable, so serving
+      * the folded schema would reject or misread a later insert's null.
+      */
+    private var rowSchema = schema
+    /** The LocalRelation over `rows`, rebuilt after they change. */
+    private var served: Option[DataFrame] = None
+    /** The Spark table, once `rows` is `None`. */
+    private var df: DataFrame = _
     /** Partitions of `df`: 1 until a snapshot read sets it. Every
       * `mutate` is narrow, so it keeps the width.
       */
     private var width = 1
     val pending = mutable.ArrayBuffer.empty[Row]
 
-    /** Point the label at its snapshot table, keeping the read's width. */
-    def load(path: java.nio.file.Path): Unit = {
+    /** Bytes left for this label's rows: the budget less every other
+      * label's.
+      */
+    private def room: Long = driverBytes - residentBytes + bytes
+
+    /** Keep `rs`, of `b` estimated bytes, on the driver if they fit
+      * `room`; else move them to a one-slice Spark table for good.
+      */
+    private def hold(rs: mutable.ArrayBuffer[Row], b: Long): Unit = {
+      if (b <= room) { rows = Some(rs); bytes = b }
+      else {
+        df = spark.createDataFrame(
+          spark.sparkContext.parallelize(rs.toSeq, 1), rowSchema)
+        rows = None; bytes = 0
+      }
+      served = None
+    }
+
+    /** Take the rows `out` collects (no job when Catalyst folds it into
+      * a LocalRelation) as the driver-resident state, served with the
+      * nullability of `next` and of `out`.
+      */
+    private def keep(out: DataFrame, next: StructType): Unit = {
+      val rs = mutable.ArrayBuffer.from(out.collect())
+      rowSchema = StructType(next.fields.map(f =>
+        f.copy(nullable = f.nullable || out.schema(f.name).nullable)))
+      hold(rs, rs.iterator.map(Interpreter.rowBytes).sum)
+    }
+
+    /** Point a Spark-resident label at its snapshot table, keeping the
+      * read's width. A driver-resident label's rows are its snapshot.
+      */
+    def repoint(path: java.nio.file.Path): Unit = if (rows.isEmpty) {
       val read = spark.read.schema(schema).parquet(path.toString)
-      df = Some(read)
+      df = read
       width = math.max(1, read.rdd.getNumPartitions)
     }
 
-    def materialize(): DataFrame =
-      if (pending.isEmpty) df.getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], schema))
-      else {
-        val batch = spark.createDataFrame(
-          spark.sparkContext.parallelize(pending.toSeq, 1), schema)
-        val merged = df.fold(batch)(_.unionByName(batch).coalesce(width))
-        pending.clear()
-        df = Some(merged)
-        merged
-      }
-
-    /** Replace state with a transformed DF; checkpoint to keep the plan
-      * from growing linearly with script length.
+    /** Boot from a snapshot table onto the driver with one collect,
+      * when its files are no larger than `room` and the rows it reads
+      * fit it; else read it from Spark. The collect stops one row past
+      * the most all-null rows `room` holds, so a label of small rows
+      * that does not fit is not read in whole.
       */
-    def mutate(f: DataFrame => DataFrame): Unit =
-      df = Some(f(materialize()).localCheckpoint())
+    def boot(path: java.nio.file.Path): Unit = {
+      val files = java.nio.file.Files.walk(path)
+      val onDisk = try files.iterator.asScala
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .map(java.nio.file.Files.size).sum finally files.close()
+      if (onDisk <= room) {
+        val most = room / Interpreter.rowBytes(Row.fromSeq(schema.map(_ => null)))
+        keep(spark.read.schema(schema).parquet(path.toString).limit(
+          math.min(most + 1, Int.MaxValue.toLong).toInt), schema)
+      } else rows = None
+      repoint(path)
+    }
+
+    /** The table to write as this label's snapshot: a driver-resident
+      * label writes one file, so its boot reads one split.
+      */
+    def snapshot(): DataFrame = {
+      val table = materialize()
+      if (rows.isDefined) table.coalesce(1) else table
+    }
+
+    def materialize(): DataFrame = {
+      // an INSERT batch appends to driver rows, and may push them past
+      // the budget
+      for (rs <- rows if pending.nonEmpty) {
+        val b = pending.iterator.map(Interpreter.rowBytes).sum
+        rs ++= pending
+        pending.clear()
+        hold(rs, bytes + b)
+      }
+      rows match {
+        case Some(rs) =>
+          if (served.isEmpty) served = Some(spark.createDataFrame(rs.asJava, rowSchema))
+          served.get
+        case None =>
+          if (pending.nonEmpty) {
+            val batch = spark.createDataFrame(
+              spark.sparkContext.parallelize(pending.toSeq, 1), schema)
+            df = df.unionByName(batch).coalesce(width)
+            pending.clear()
+          }
+          df
+      }
+    }
+
+    /** Replace state with a transformed DF whose rows have schema `next`.
+      * Driver rows collect it back; a Spark table checkpoints it to keep
+      * the plan from growing linearly with script length. The schema
+      * changes only once that succeeds.
+      */
+    def mutate(f: DataFrame => DataFrame, next: StructType = schema): Unit = {
+      val out = f(materialize())
+      if (rows.isDefined) keep(out, next) else df = out.localCheckpoint()
+      schema = next
+    }
   }
 
   private val nodeState = mutable.Map.empty[String, LabelState]
   private val edgeState = mutable.Map.empty[String, LabelState]
+  /** Estimated bytes of every driver-resident label's rows. */
+  private def residentBytes: Long =
+    (nodeState.valuesIterator ++ edgeState.valuesIterator).map(_.bytes).sum
   private var nextId = 1L
 
   // ------------------------------------------------------------ schema
@@ -438,11 +554,11 @@ final class Interpreter(spark: SparkSession) {
     val nodeLabels = nodeState.keys.toSeq.sorted
     val edgeLabels = edgeState.keys.toSeq.sorted
     nodeLabels.foreach { l =>
-      nodeState(l).materialize().write.mode("overwrite")
+      nodeState(l).snapshot().write.mode("overwrite")
         .parquet(dir.resolve("nodes").resolve(l).toString)
     }
     edgeLabels.foreach { l =>
-      edgeState(l).materialize().write.mode("overwrite")
+      edgeState(l).snapshot().write.mode("overwrite")
         .parquet(dir.resolve("edges").resolve(l).toString)
     }
     Snapshot.publishMeta(dir,
@@ -454,8 +570,8 @@ final class Interpreter(spark: SparkSession) {
     // repoint live state at the snapshot files BEFORE dropping the old
     // generation (a previously-booted state may still read old files),
     // and so post-compaction lineage starts from the snapshot
-    nodeLabels.foreach(l => nodeState(l).load(dir.resolve("nodes").resolve(l)))
-    edgeLabels.foreach(l => edgeState(l).load(dir.resolve("edges").resolve(l)))
+    nodeLabels.foreach(l => nodeState(l).repoint(dir.resolve("nodes").resolve(l)))
+    edgeLabels.foreach(l => edgeState(l).repoint(dir.resolve("edges").resolve(l)))
     // retention sweep (supersedes the plain drop-older): also clears
     // unpublished partials a crashed earlier attempt may have left
     Snapshot.sweep(dataDir, snapshotKeep)
@@ -512,12 +628,12 @@ final class Interpreter(spark: SparkSession) {
         nodeState.clear(); edgeState.clear()
         meta.nodes.foreach { l =>
           val st = new LabelState(nodeSchema(l))
-          st.load(dir.resolve("nodes").resolve(l))
+          st.boot(dir.resolve("nodes").resolve(l))
           nodeState(l) = st
         }
         meta.edges.foreach { l =>
           val st = new LabelState(edgeSchema(l))
-          st.load(dir.resolve("edges").resolve(l))
+          st.boot(dir.resolve("edges").resolve(l))
           edgeState(l) = st
         }
         val log = Snapshot.openLog(dataDir, gen, format)
@@ -641,8 +757,7 @@ final class Interpreter(spark: SparkSession) {
                 col(fd.name).cast(Types.toSpark(fd.tpe))))
             case _ => None
           }
-          migrated.foreach(st.mutate)
-          st.schema = edgeSchema(name)
+          migrated.fold(st.schema = edgeSchema(name))(st.mutate(_, edgeSchema(name)))
         }
       case Ast.DropNode(name) => nodeState.remove(name)
       case Ast.DropEdge(name) => edgeState.remove(name)
@@ -659,7 +774,41 @@ final class Interpreter(spark: SparkSession) {
         Some(df => df.withColumn(fd.name, col(fd.name).cast(Types.toSpark(fd.tpe))))
       case Ast.AlterNodeAction.SetPrimaryKey(_) => None
     }
-    f.foreach(st.mutate)
-    st.schema = newSchema
+    f.fold(st.schema = newSchema)(st.mutate(_, newSchema))
   }
+}
+
+object Interpreter {
+  /** Estimated heap bytes of one driver row: the `Row` and its value
+    * array, a boxed value per set field, and a string's or binary's
+    * payload at its length (two bytes a char). Its LocalRelation holds a
+    * converted copy of about the same size.
+    */
+  private[graft] def rowBytes(r: Row): Long = {
+    var b = 32L + 4L * r.length
+    var i = 0
+    while (i < r.length) {
+      b += (r.get(i) match {
+        case null => 0L
+        case s: String => 40L + 2L * s.length
+        case a: Array[Byte] => 16L + a.length
+        case _ => 24L
+      })
+      i += 1
+    }
+    b
+  }
+
+  /** [[rowBytes]] all labels together keep on the driver: 2 MiB.
+    * Measured with the test-scope `graft.lang.BudgetProbe` (`-Xmx2g`, `local[4]`, one label of
+    * `(long, string, long)` rows): an UPDATE or DELETE over driver rows
+    * costs about 20 ms plus 2 µs a row, one over a Spark table 50 to
+    * 100 ms whatever the size, so the driver stops winning at 15k to
+    * 20k rows of 7-char names (2.1 to 2.8 MiB estimated) and at about
+    * 20k rows of 100-char names (6.3 MiB). A MATCH wins further out.
+    * 2 MiB stays at or below every crossover measured. The rows retain
+    * about 2.3 times their estimate (both copies), about 5 MB, under 1%
+    * of the least heap a Spark driver starts with.
+    */
+  private[graft] val driverBudget: Long = 2L << 20
 }

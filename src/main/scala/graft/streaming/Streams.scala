@@ -99,7 +99,10 @@ object Streams {
         val p = new org.apache.hadoop.fs.Path(sourcePath)
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         fs.getContentSummary(p).getLength
-      } catch { case _: Throwable => Long.MaxValue }
+      } catch {
+        // a source not written yet sizes as unbounded: full width
+        case _: java.io.FileNotFoundException => Long.MaxValue
+      }
     math.max(1, math.min(para.toLong, bytes / target + 1L).toInt)
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 class InterpreterSpec extends SparkSpec {
 
   private def fresh() = new Interpreter(spark)
+  private def sparkPath() = new Interpreter(spark, 0L)
 
   test("README script end-to-end: DDL, inserts, match") {
     val it = fresh()
@@ -703,9 +704,12 @@ class InterpreterSpec extends SparkSpec {
     jobs.get
   }
 
+  // budget 0 keeps every label on the Spark path this test pins: a
+  // driver-resident label is a LocalTableScan, read at min(rows, leaf
+  // parallelism) slices
   test("statement path shape: labels stay one partition wide, an INSERT EDGE runs one job per endpoint, a MATCH one job") {
     val dir = java.nio.file.Files.createTempDirectory("graft-shape").toString
-    val it = fresh()
+    val it = sparkPath()
     val log = graft.store.CommitLog.open(dir)
     it.executeLogged(
       """CREATE NODE P (name: string, n: int);
@@ -730,7 +734,7 @@ class InterpreterSpec extends SparkSpec {
     assert(it.nodes("P").rdd.getNumPartitions === 1)
     it.executeLogged("INSERT NODE P (name: 'c', n: 1);", live)
     assert(it.nodes("P").rdd.getNumPartitions === 1)
-    val rebooted = fresh()
+    val rebooted = sparkPath()
     rebooted.bootFrom(dir)
     assert(rebooted.nodes("P").rdd.getNumPartitions === 1)
     assert(rebooted.edges("E").rdd.getNumPartitions === 1)
@@ -774,5 +778,135 @@ class InterpreterSpec extends SparkSpec {
     val got = it.edges("E").orderBy("_id").collect()
       .map(r => (r.getAs[Long]("_src"), r.getAs[Long]("_dst"))).toSeq
     assert(got === Seq((2L, 5L), (8L, 2L)))
+  }
+
+  test("driver-resident labels: INSERT EDGE, UPDATE, DELETE and a single-element MATCH run no job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-local").toString
+    val it = fresh()
+    val log = graft.store.CommitLog.open(dir)
+    it.executeLogged(
+      """CREATE NODE P (name: string, n: int);
+        |CREATE EDGE E (FROM P ONE, TO P MANY);""".stripMargin, log)
+    for (r <- 1 to 5)
+      it.executeLogged(s"INSERT NODE P (name: 'a$r', n: $r);", log)
+    val steps = Seq(
+      "INSERT EDGE by id" -> (() => it.executeLogged("INSERT EDGE E FROM P (1) TO P (2);", log)),
+      "INSERT EDGE by property" -> (() =>
+        it.executeLogged("INSERT EDGE E FROM P (name: 'a3') TO P (n: 4);", log)),
+      "UPDATE" -> (() => it.executeLogged("UPDATE NODE P SET n: 10 WHERE name: 'a1';", log)),
+      "DELETE" -> (() => it.executeLogged("DELETE NODE P WHERE name: 'a5';", log)),
+      "MATCH" -> (() => it.executeLogged("MATCH P WHERE n: 10;", log).get.collect()))
+    for ((name, step) <- steps) {
+      val jobs = jobsOf { step(); () }
+      assert(jobs === 0, s"$name ran $jobs jobs")
+    }
+    assert(it.executeScript("MATCH P WHERE n: 10;").get.collect().map(_.getAs[String]("name"))
+      .toSeq === Seq("a1"))
+    assert(it.edges("E").orderBy("_id").collect()
+      .map(r => (r.getAs[Long]("_src"), r.getAs[Long]("_dst"))).toSeq === Seq((1L, 2L), (3L, 4L)))
+    assert(it.nodes("P").count() === 4)
+  }
+
+  test("bootFrom of a compacted store loads each driver-resident label in at most one job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-localboot").toString
+    val it = fresh()
+    val log = graft.store.CommitLog.open(dir)
+    it.executeLogged(
+      """CREATE NODE P (name: string, n: int);
+        |CREATE NODE Q (tag: string);
+        |CREATE EDGE E (FROM P ONE, TO Q MANY);""".stripMargin, log)
+    for (r <- 1 to 6)
+      it.executeLogged(
+        s"INSERT NODE P (name: 'a$r', n: $r); INSERT NODE Q (tag: 't$r');", log)
+    it.executeLogged("INSERT EDGE E FROM P (name: 'a1') TO Q (tag: 't2');", log)
+    val live = it.compact(dir)
+    // a non-empty suffix log of every statement kind
+    it.executeLogged(
+      """INSERT NODE P (name: 'late', n: 7);
+        |INSERT EDGE E FROM P (name: 'late') TO Q (tag: 't3');
+        |UPDATE NODE P SET n: 0 WHERE name: 'a2';
+        |DELETE NODE Q WHERE tag: 't6';""".stripMargin, live)
+    assert(live.entryCount === 4)
+    val booted = fresh()
+    val jobs = jobsOf(booted.bootFrom(dir))
+    assert(jobs <= 3, s"boot ran $jobs jobs for 3 snapshot labels")
+    assert(stateOf(booted, Seq("P", "Q"), Seq("E")) === stateOf(it, Seq("P", "Q"), Seq("E")))
+  }
+
+  test("driver rows serve with the catalog's nullability: a WHERE-less UPDATE does not make a later insert's null read 0") {
+    val it = fresh()
+    it.executeScript(
+      """CREATE NODE P (name: string, age: int);
+        |INSERT NODE P (name: 'ada', age: 1);
+        |UPDATE NODE P SET age: 5;
+        |INSERT NODE P (name: 'cyd');""".stripMargin)
+    val got = it.executeScript("MATCH P WHERE name: 'cyd';").get.collect()
+    assert(got.length === 1)
+    assert(got(0).isNullAt(got(0).fieldIndex("age")))
+    assert(it.nodes("P").orderBy("_id").collect().map(r =>
+      if (r.isNullAt(2)) None else Some(r.getLong(2))).toSeq === Seq(Some(5L), None))
+  }
+
+  /** Jobs an UPDATE of `label`'s `name` that matches no row runs: 0
+    * while the label's rows are on the driver.
+    */
+  private def updateJobs(it: Interpreter, label: String): Int = {
+    it.nodes(label) // serve a pending batch outside the count
+    jobsOf { it.executeScript(s"UPDATE NODE $label SET name: 'z' WHERE name: 'none';"); () }
+  }
+
+  test("a label past the byte budget moves to Spark once and ends in the same state") {
+    def run(budget: Long): (Map[String, Seq[org.apache.spark.sql.Row]],
+        Map[String, Seq[org.apache.spark.sql.Row]]) = {
+      val it = new Interpreter(spark, budget)
+      val dir = java.nio.file.Files.createTempDirectory("graft-budget").toString
+      val log = graft.store.CommitLog.open(dir)
+      it.executeLogged(
+        """CREATE NODE P (name: string, n: int);
+          |CREATE EDGE E (FROM P ONE, TO P MANY);""".stripMargin, log)
+      for (r <- 1 to 30) it.executeLogged(s"INSERT NODE P (name: 'a$r', n: $r);", log)
+      it.executeLogged(
+        """INSERT EDGE E FROM P (name: 'a1') TO P (name: 'a2');
+          |UPDATE NODE P SET n: 0 WHERE name: 'a2';
+          |DELETE NODE P WHERE name: 'a4';""".stripMargin, log)
+      val live = it.compact(dir)
+      it.executeLogged("INSERT NODE P (name: 'a31'); UPDATE NODE P SET n: 9 WHERE n: 5;", live)
+      val booted = new Interpreter(spark, budget)
+      booted.bootFrom(dir)
+      val state = stateOf(booted, Seq("P"), Seq("E"))
+      assert(state === stateOf(it, Seq("P"), Seq("E")))
+      if (budget < Interpreter.driverBudget) {
+        // P's snapshot file fits the budget, so boot collects it, finds
+        // its 29 rows past it, and reads P from Spark
+        assert(updateJobs(it, "P") > 0)
+        assert(updateJobs(booted, "P") > 0)
+      }
+      state
+    }
+    // twenty P rows fit, so P crosses the budget on the batch that
+    // follows
+    val twentyRows = 20 * Interpreter.rowBytes(org.apache.spark.sql.Row(1L, "a10", 1L))
+    assert(run(twentyRows) === run(Interpreter.driverBudget))
+  }
+
+  test("the byte budget counts string payloads and is shared by every label") {
+    val it = new Interpreter(spark, 4096L)
+    it.executeScript(
+      """CREATE NODE P (name: string);
+        |CREATE NODE Q (name: string);
+        |CREATE NODE R (name: string);
+        |INSERT NODE P (name: 'a'); INSERT NODE P (name: 'b');""".stripMargin)
+    assert(updateJobs(it, "P") === 0)
+    // one row of 2000 chars is about 4 KB: past the budget on its own
+    it.executeScript(s"INSERT NODE P (name: '${"w" * 2000}');")
+    assert(updateJobs(it, "P") > 0)
+    // P's rows left the driver, so Q's 1500 chars (about 3 KB) fit; R's
+    // as many do not fit beside Q's
+    it.executeScript(s"INSERT NODE Q (name: '${"q" * 1500}');")
+    assert(updateJobs(it, "Q") === 0)
+    it.executeScript(s"INSERT NODE R (name: '${"r" * 1500}');")
+    assert(updateJobs(it, "R") > 0)
+    assert(updateJobs(it, "Q") === 0)
+    assert(Seq("P", "Q", "R").map(it.nodes(_).count()) === Seq(3L, 1L, 1L))
   }
 }

@@ -13,10 +13,19 @@ class RandomizedInterpreterSpec extends SparkSpec {
 
   private val names = Vector("ada", "bob", "cyd", "dee", "eli")
 
+  /** Byte budgets to check: every label on Spark, a label that moves to
+    * Spark mid-script (about four rows fit), and the default (every
+    * label on the driver).
+    */
+  private val budgets = Seq(
+    "0" -> 0L,
+    "4 rows" -> 4 * Interpreter.rowBytes(org.apache.spark.sql.Row(1L, "ada", 1L)),
+    "default" -> Interpreter.driverBudget)
+
   test("interpreter state matches a driver-side model over random scripts") {
-    (1 to 3).foreach { seed =>
+    for (seed <- 1 to 3; (budget, bytes) <- budgets) {
       val rnd = new Random(seed)
-      val it = new Interpreter(spark)
+      val it = new Interpreter(spark, bytes)
       it.executeScript("CREATE NODE P (name: string, age: int);")
       var model = Vector.empty[(String, Option[Long])]
 
@@ -55,7 +64,7 @@ class RandomizedInterpreterSpec extends SparkSpec {
         .map(r => (r.getAs[String]("name"),
           if (r.isNullAt(r.fieldIndex("age"))) None else Some(r.getAs[Long]("age"))))
         .sorted.toSeq
-      assert(got === model.sorted, s"seed=$seed")
+      assert(got === model.sorted, s"seed=$seed budget=$budget")
     }
   }
 }
