@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -16,7 +17,7 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failed += name
       }
@@ -39,6 +40,9 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // one failed face name per line; empty when every face ran
+    Files.writeString(Paths.get(s"$outDir/failed.txt"),
+      failed.map(_ + "\n").mkString)
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(",")}")

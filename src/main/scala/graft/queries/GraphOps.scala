@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.PinnedRdds.{pinning, view}
+import graft.streaming.Streams
 import graft.graph.{Algorithms, PropertyGraph, TpchGraph}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -730,14 +731,11 @@ object GraphOps {
     * orders kept whole make per-batch pair derivation complete).
     */
   private def ccDeltaSourceDir(spark: SparkSession, dir: String): String =
-    view(spark, dir, "ccDeltaSrc") {
-      val out = graft.streaming.Streams.scratchDir("graft_cc_src")
+    Streams.fileSource(spark, dir, "ccDeltaSrc") {
       Tables.load(spark, dir, "lineitem")
         .filter(col("l_orderkey") % 10 === 0)
         .select(col("l_orderkey"), col("l_partkey"))
         .repartition(3, col("l_orderkey"))
-        .write.mode("overwrite").parquet(out)
-      out
     }
 
   /** STREAMING CC maintenance — the stream face of g_cc_incr, and the
@@ -758,23 +756,11 @@ object GraphOps {
   def sCcIncr(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.load(spark, dir, "lineitem")
     val src = ccDeltaSourceDir(spark, dir)
-    val batchSchema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(batchSchema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
     var labels = ccBaseCached(spark, dir)
-    val ckpt = graft.streaming.Streams.scratchDir("graft_cc_ckpt")
-    graft.streaming.Streams.withStreamWidth(spark,
-        graft.streaming.Streams.streamWidth(spark, src)) {
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          labels = graft.PlanAudit.tap("stream.fold",
-              Algorithms.ccIncremental(labels, ccPairEdges(b)))
-            .localCheckpoint()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    Streams.replay(spark, src) { b =>
+      labels = graft.PlanAudit.tap("stream.fold",
+          Algorithms.ccIncremental(labels, ccPairEdges(b)))
+        .localCheckpoint()
     }
     val missing = li.select(col("l_partkey").as("gid")).distinct()
       .join(labels.select(col("gid")), Seq("gid"), "left_anti")
@@ -881,21 +867,9 @@ object GraphOps {
     val (gBase, _) = basePrCached(spark, dir)
     val prevX = baseKatzCached(spark, dir)
     val src = prDeltaSourceDir(spark, dir)
-    val batchSchema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(batchSchema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
     var pending: Option[(DataFrame, DataFrame)] = None
-    val ckpt = graft.streaming.Streams.scratchDir("graft_katz_ckpt")
-    graft.streaming.Streams.withStreamWidth(spark,
-        graft.streaming.Streams.streamWidth(spark, src)) {
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          pending = Some(Algorithms.foldRankDeltaBatch(pending, b))
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    Streams.replay(spark, src) { b =>
+      pending = Some(Algorithms.foldRankDeltaBatch(pending, b))
     }
     val folded = pending match {
       case None => gBase
@@ -1006,21 +980,9 @@ object GraphOps {
     val gr = g(spark, dir)
     val (gBase, prevPr) = basePrCached(spark, dir)
     val src = prDeltaSourceDir(spark, dir)
-    val batchSchema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(batchSchema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
     var pending: Option[(DataFrame, DataFrame)] = None
-    val ckpt = graft.streaming.Streams.scratchDir("graft_pr_ckpt")
-    graft.streaming.Streams.withStreamWidth(spark,
-        graft.streaming.Streams.streamWidth(spark, src)) {
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          pending = Some(Algorithms.foldRankDeltaBatch(pending, b))
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    Streams.replay(spark, src) { b =>
+      pending = Some(Algorithms.foldRankDeltaBatch(pending, b))
     }
     val folded = pending match {
       case None => gBase
@@ -1046,13 +1008,11 @@ object GraphOps {
     * the cross-batch associativity untested.
     */
   private def prDeltaSourceDir(spark: SparkSession, dir: String): String =
-    view(spark, dir, "prDeltaSrc") {
-      val out = graft.streaming.Streams.scratchDir("graft_pr_src")
+    Streams.fileSource(spark, dir, "prDeltaSrc") {
       gidEdgesCached(spark, dir, TpchGraph.edgeLabels)
         .filter(expr(deltaEdgePred))
         .select(col("gsrc"), col("gdst"))
-        .repartition(3).write.mode("overwrite").parquet(out)
-      out
+        .repartition(3)
     }
 
   private val rankWeightFn: String => org.apache.spark.sql.Column = {
@@ -1115,13 +1075,11 @@ object GraphOps {
     * into three parquet files, pinned per (session, dir).
     */
   private def wprDeltaSourceDir(spark: SparkSession, dir: String): String =
-    view(spark, dir, "wprDeltaSrc") {
-      val out = graft.streaming.Streams.scratchDir("graft_wpr_src")
+    Streams.fileSource(spark, dir, "wprDeltaSrc") {
       g(spark, dir).gidWeightedEdges(TpchGraph.edgeLabels, rankWeightFn)
         .filter(expr(deltaEdgePred))
         .select(col("gsrc"), col("gdst"), col("w"))
-        .repartition(3).write.mode("overwrite").parquet(out)
-      out
+        .repartition(3)
     }
 
   /** STREAMING weighted PageRank maintenance — completes the rank
@@ -1141,30 +1099,18 @@ object GraphOps {
     val gr = g(spark, dir)
     val (gw, baseRaw, prevPr) = baseWPrCached(spark, dir)
     val src = wprDeltaSourceDir(spark, dir)
-    val batchSchema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(batchSchema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
     var pending: Option[(DataFrame, DataFrame)] = None
-    val ckpt = graft.streaming.Streams.scratchDir("graft_wpr_ckpt")
-    graft.streaming.Streams.withStreamWidth(spark,
-        graft.streaming.Streams.streamWidth(spark, src)) {
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          val be = b.select(col("gsrc"), col("gdst"), col("w")).localCheckpoint()
-          val bw = be.groupBy(col("gsrc").as("dgid"))
-            .agg(sum(col("w")).as("dwout"))
-          pending = Some(pending match {
-            case None => (be, bw.localCheckpoint())
-            case Some((pe, pw)) =>
-              (pe.unionByName(be),
-                pw.unionByName(bw).groupBy(col("dgid"))
-                  .agg(sum(col("dwout")).as("dwout")).localCheckpoint())
-          })
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    Streams.replay(spark, src) { b =>
+      val be = b.select(col("gsrc"), col("gdst"), col("w")).localCheckpoint()
+      val bw = be.groupBy(col("gsrc").as("dgid"))
+        .agg(sum(col("w")).as("dwout"))
+      pending = Some(pending match {
+        case None => (be, bw.localCheckpoint())
+        case Some((pe, pw)) =>
+          (pe.unionByName(be),
+            pw.unionByName(bw).groupBy(col("dgid"))
+              .agg(sum(col("dwout")).as("dwout")).localCheckpoint())
+      })
     }
     val folded = pending match {
       case None => gw
@@ -1547,51 +1493,39 @@ object GraphOps {
   def sKcoreIncr(spark: SparkSession, dir: String): DataFrame = {
     val (basePairs, baseDeg, baseCore) = kcoreBaseCached(spark, dir)
     val src = ccDeltaSourceDir(spark, dir)
-    val batchSchema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(batchSchema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
     var pairs = basePairs
     var deg = baseDeg
     var core = baseCore
-    val ckpt = graft.streaming.Streams.scratchDir("graft_kcore_ckpt")
-    graft.streaming.Streams.withStreamWidth(spark,
-        graft.streaming.Streams.streamWidth(spark, src)) {
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          // dedup vs pairs-so-far WITHOUT shuffling the corpus: scan the
-          // pair set map-side against the broadcast batch (the
-          // triangleCountIncremental probe discipline), then anti-join
-          // small against small
-          val batchPairs = ccPairEdges(b).localCheckpoint()
-          val dupes = pairs
-            .join(broadcast(batchPairs), Seq("gsrc", "gdst"), "left_semi")
-          val newPairs = batchPairs
-            .join(broadcast(dupes), Seq("gsrc", "gdst"), "left_anti")
-            .localCheckpoint()
-          // shuffle_hash full-outer for the degree fold (the dbscanFold
-          // shape): hash-joinable, so the default SMJ's two node-scale
-          // sorts per trigger were pure waste
-          val bump = newPairs.select(col("gsrc").as("a"))
-            .unionByName(newPairs.select(col("gdst").as("a")))
-            .groupBy(col("a")).agg(count(lit(1)).as("bd"))
-          deg = deg.join(bump.hint("shuffle_hash"), Seq("a"), "full")
-            .select(col("a"), (coalesce(col("d"), lit(0L)) +
-              coalesce(col("bd"), lit(0L))).as("d"))
-            .localCheckpoint()
-          val seeds = newPairs.select(col("gsrc").as("gid"))
-            .unionByName(newPairs.select(col("gdst").as("gid")))
-            .distinct()
-          pairs = pairs.unionByName(newPairs)
-          val und = pairs.select(col("gsrc").as("a"), col("gdst").as("b"))
-            .unionByName(pairs.select(col("gdst").as("a"), col("gsrc").as("b")))
-          core = Algorithms.kCoreIncremental(core, und, seeds, k = 4,
-              degOpt = Some(deg))
-            .localCheckpoint()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    Streams.replay(spark, src) { b =>
+      // dedup vs pairs-so-far WITHOUT shuffling the corpus: scan the
+      // pair set map-side against the broadcast batch (the
+      // triangleCountIncremental probe discipline), then anti-join
+      // small against small
+      val batchPairs = ccPairEdges(b).localCheckpoint()
+      val dupes = pairs
+        .join(broadcast(batchPairs), Seq("gsrc", "gdst"), "left_semi")
+      val newPairs = batchPairs
+        .join(broadcast(dupes), Seq("gsrc", "gdst"), "left_anti")
+        .localCheckpoint()
+      // shuffle_hash full-outer for the degree fold (the dbscanFold
+      // shape): hash-joinable, so the default SMJ's two node-scale
+      // sorts per trigger were pure waste
+      val bump = newPairs.select(col("gsrc").as("a"))
+        .unionByName(newPairs.select(col("gdst").as("a")))
+        .groupBy(col("a")).agg(count(lit(1)).as("bd"))
+      deg = deg.join(bump.hint("shuffle_hash"), Seq("a"), "full")
+        .select(col("a"), (coalesce(col("d"), lit(0L)) +
+          coalesce(col("bd"), lit(0L))).as("d"))
+        .localCheckpoint()
+      val seeds = newPairs.select(col("gsrc").as("gid"))
+        .unionByName(newPairs.select(col("gdst").as("gid")))
+        .distinct()
+      pairs = pairs.unionByName(newPairs)
+      val und = pairs.select(col("gsrc").as("a"), col("gdst").as("b"))
+        .unionByName(pairs.select(col("gdst").as("a"), col("gsrc").as("b")))
+      core = Algorithms.kCoreIncremental(core, und, seeds, k = 4,
+          degOpt = Some(deg))
+        .localCheckpoint()
     }
     core.agg(count(lit(1)).as("core_size"))
   }
@@ -1993,14 +1927,11 @@ object GraphOps {
     * kept whole per file so per-batch pair derivation is complete).
     */
   private def triDeltaSourceDir(spark: SparkSession, dir: String): String =
-    view(spark, dir, "triDeltaSrc") {
-      val out = graft.streaming.Streams.scratchDir("graft_tri_src")
+    Streams.fileSource(spark, dir, "triDeltaSrc") {
       Tables.load(spark, dir, "lineitem")
         .filter(col("l_orderkey") % 100 === 0)
         .select(col("l_orderkey"), col("l_partkey"))
         .repartition(3, col("l_orderkey"))
-        .write.mode("overwrite").parquet(out)
-      out
     }
 
   /** STREAMING triangle maintenance — the BUFFERED member of the
@@ -2023,23 +1954,11 @@ object GraphOps {
   def sTrianglesIncr(spark: SparkSession, dir: String): DataFrame = {
     val (pairs, adj, tri) = triBaseCached(spark, dir)
     val src = triDeltaSourceDir(spark, dir)
-    val batchSchema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(batchSchema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
     var buffered: List[DataFrame] = Nil
-    val ckpt = graft.streaming.Streams.scratchDir("graft_tri_ckpt")
-    graft.streaming.Streams.withStreamWidth(spark,
-        graft.streaming.Streams.streamWidth(spark, src)) {
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          buffered = ccPairEdges(b)
-            .select(col("gsrc").as("a"), col("gdst").as("b"))
-            .localCheckpoint() :: buffered
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    Streams.replay(spark, src) { b =>
+      buffered = ccPairEdges(b)
+        .select(col("gsrc").as("a"), col("gdst").as("b"))
+        .localCheckpoint() :: buffered
     }
     // no-batch fallback mirrors the rank faces' None branch: an empty
     // delta stream means the full-graph count IS the base count
@@ -2517,17 +2436,15 @@ object GraphOps {
     * (orderkey mod 3) — pairs are within-order, so keeping each order
     * whole makes per-batch pair counts COMPLETE per order and the
     * cross-batch count fold a genuine integer sum (an order split
-    * across batches would silently drop its cross-batch pairs).
+    * across batches would silently drop its cross-batch pairs). The
+    * same stream feeds s_truss_incr.
     */
   private def mstDeltaSourceDir(spark: SparkSession, dir: String): String =
-    view(spark, dir, "mstDeltaSrc") {
-      val out = graft.streaming.Streams.scratchDir("graft_mst_src")
+    Streams.fileSource(spark, dir, "mstDeltaSrc") {
       Tables.load(spark, dir, "lineitem")
         .filter(col("l_orderkey") % 10 === 0 && col("l_partkey") < 2000)
         .select(col("l_orderkey"), col("l_partkey"))
         .repartition(3, col("l_orderkey"))
-        .write.mode("overwrite").parquet(out)
-      out
     }
 
   /** STREAMING MSF maintenance — the stream face of g_mst_incr,
@@ -2547,29 +2464,17 @@ object GraphOps {
   def sMstIncr(spark: SparkSession, dir: String): DataFrame = {
     val (baseCnt, baseForest, baseNodes) = msfBaseCached(spark, dir)
     val src = mstDeltaSourceDir(spark, dir)
-    val batchSchema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(batchSchema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
     var pendCnt: Option[DataFrame] = None
     var pendNodes: Option[DataFrame] = None
-    val ckpt = graft.streaming.Streams.scratchDir("graft_mst_ckpt")
-    graft.streaming.Streams.withStreamWidth(spark,
-        graft.streaming.Streams.streamWidth(spark, src)) {
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          val bc = copurchaseCounts(b).localCheckpoint()
-          pendCnt = Some(pendCnt match {
-            case None => bc
-            case Some(p) => p.unionByName(bc).groupBy(col("a"), col("b"))
-              .agg(sum(col("cnt")).cast("long").as("cnt")).localCheckpoint()
-          })
-          val bn = b.select(col("l_partkey").as("gid")).distinct().localCheckpoint()
-          pendNodes = Some(pendNodes.fold(bn)(_.unionByName(bn)))
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    Streams.replay(spark, src) { b =>
+      val bc = copurchaseCounts(b).localCheckpoint()
+      pendCnt = Some(pendCnt match {
+        case None => bc
+        case Some(p) => p.unionByName(bc).groupBy(col("a"), col("b"))
+          .agg(sum(col("cnt")).cast("long").as("cnt")).localCheckpoint()
+      })
+      val bn = b.select(col("l_partkey").as("gid")).distinct().localCheckpoint()
+      pendNodes = Some(pendNodes.fold(bn)(_.unionByName(bn)))
     }
     val touched = pendCnt.get
       .select(col("a"), col("b"), col("cnt").as("dcnt"))
@@ -2672,21 +2577,6 @@ object GraphOps {
 
   def gTrussIncrSql: String = gTrussSql
 
-  /** The truss delta stream: delta orders (key % 10 ≡ 0) split into
-    * three parquet files, orders whole per file (the s_cc_incr
-    * convention), pinned per (session, dir).
-    */
-  private def trussDeltaSourceDir(spark: SparkSession, dir: String): String =
-    view(spark, dir, "trussDeltaSrc") {
-      val out = graft.streaming.Streams.scratchDir("graft_truss_src")
-      Tables.load(spark, dir, "lineitem")
-        .filter(col("l_orderkey") % 10 === 0 && col("l_partkey") < 2000)
-        .select(col("l_orderkey"), col("l_partkey"))
-        .repartition(3, col("l_orderkey"))
-        .write.mode("overwrite").parquet(out)
-      out
-    }
-
   /** STREAMING truss maintenance — the second BUFFERED member of the
     * streaming cohesion tier (with s_triangles_incr), and for the same
     * state-algebra reason: the truss fold's viability checks and
@@ -2704,24 +2594,12 @@ object GraphOps {
     */
   def sTrussIncr(spark: SparkSession, dir: String): DataFrame = {
     val (adj, base, basePairs) = trussBaseCached(spark, dir)
-    val src = trussDeltaSourceDir(spark, dir)
-    val batchSchema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(batchSchema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
+    val src = mstDeltaSourceDir(spark, dir)
     var buffered: List[DataFrame] = Nil
-    val ckpt = graft.streaming.Streams.scratchDir("graft_truss_ckpt")
-    graft.streaming.Streams.withStreamWidth(spark,
-        graft.streaming.Streams.streamWidth(spark, src)) {
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          buffered = trussPairs(b)
-            .select(col("gsrc").as("a"), col("gdst").as("b"))
-            .localCheckpoint() :: buffered
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    Streams.replay(spark, src) { b =>
+      buffered = trussPairs(b)
+        .select(col("gsrc").as("a"), col("gdst").as("b"))
+        .localCheckpoint() :: buffered
     }
     // no-batch fallback mirrors the rank faces' None branch: an empty
     // delta stream leaves the base truss unchanged (reduce on an empty
@@ -3340,14 +3218,11 @@ object GraphOps {
     * s_mst_incr/s_cc_incr convention).
     */
   private def sccDeltaSourceDir(spark: SparkSession, dir: String): String =
-    view(spark, dir, "sccDeltaSrc") {
-      val out = graft.streaming.Streams.scratchDir("graft_scc_src")
+    Streams.fileSource(spark, dir, "sccDeltaSrc") {
       Tables.load(spark, dir, "lineitem")
         .filter(col("l_partkey") < 500 && col("l_orderkey") % 10 === 0)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"))
         .repartition(3, col("l_orderkey"))
-        .write.mode("overwrite").parquet(out)
-      out
     }
 
   /** STREAMING SCC maintenance — the stream face of g_scc_incr,
@@ -3367,25 +3242,13 @@ object GraphOps {
   def sSccIncr(spark: SparkSession, dir: String): DataFrame = {
     val (baseLabels, baseDag) = sccIncrBaseCached(spark, dir)
     val src = sccDeltaSourceDir(spark, dir)
-    val batchSchema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(batchSchema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
     var labels = baseLabels
     var dag = baseDag
-    val ckpt = graft.streaming.Streams.scratchDir("graft_sccs_ckpt")
-    graft.streaming.Streams.withStreamWidth(spark,
-        graft.streaming.Streams.streamWidth(spark, src)) {
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          val (nl, nd) = Algorithms.sccIncrementalWithDag(labels, dag,
-            followedByEdges(b))
-          labels = nl.localCheckpoint()
-          dag = nd.localCheckpoint()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    Streams.replay(spark, src) { b =>
+      val (nl, nd) = Algorithms.sccIncrementalWithDag(labels, dag,
+        followedByEdges(b))
+      labels = nl.localCheckpoint()
+      dag = nd.localCheckpoint()
     }
     labels.select(col("gid").as("part"), col("scc").as("scc_id"))
   }

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.PinnedRdds.{pinning, view}
+import graft.streaming.Streams
 import graft.functions.FnvHash64
 import graft.pipeline.{Ann, Dedup, Importance, Multimodal, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -1367,13 +1368,10 @@ object Pipeline {
     * batching), pinned per (session, dir) as the other stream sources.
     */
   private def knnQuerySourceDir(spark: SparkSession, dir: String): String =
-    view(spark, dir, "knnQuerySrc") {
-      val out = graft.streaming.Streams.scratchDir("graft_knn_src")
+    Streams.fileSource(spark, dir, "knnQuerySrc") {
       Tables.load(spark, dir, "embeddings").filter(col("vec_id") < 30)
         .select(col("vec_id"))
         .repartition(3, col("vec_id"))
-        .write.mode("overwrite").parquet(out)
-      out
     }
 
   /** STREAMING exact-kNN serving — the serving half of the ANN family
@@ -1393,25 +1391,13 @@ object Pipeline {
     val emb = Tables.load(spark, dir, "embeddings")
     val (coarse, _, _, codes) = ivfPqCached(spark, dir)
     val src = knnQuerySourceDir(spark, dir)
-    val batchSchema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(batchSchema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
     var outs: List[DataFrame] = Nil
-    val ckpt = graft.streaming.Streams.scratchDir("graft_knn_ckpt")
-    graft.streaming.Streams.withStreamWidth(spark,
-        graft.streaming.Streams.streamWidth(spark, src)) {
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          val ids = b.select(col("vec_id").as("qid")).localCheckpoint()
-          outs = graft.pipeline.Cluster.exactCosineKnnPruned(codes, coarse,
-              emb, "vec_id", "embedding", k = 5, queryIds = Some(ids),
-              prepared = Some(knnIdxCached(spark, dir)))
-            .localCheckpoint() :: outs
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    Streams.replay(spark, src) { b =>
+      val ids = b.select(col("vec_id").as("qid")).localCheckpoint()
+      outs = graft.pipeline.Cluster.exactCosineKnnPruned(codes, coarse,
+          emb, "vec_id", "embedding", k = 5, queryIds = Some(ids),
+          prepared = Some(knnIdxCached(spark, dir)))
+        .localCheckpoint() :: outs
     }
     outs.reduce(_ unionByName _)
       .select(col("query_id"), col("neighbor_id"), col("cos").as("cosine"),
@@ -1866,14 +1852,11 @@ object Pipeline {
     * (session, dir).
     */
   private def dbscanDeltaSourceDir(spark: SparkSession, dir: String): String =
-    view(spark, dir, "dbscanDeltaSrc") {
-      val out = graft.streaming.Streams.scratchDir("graft_dbscan_src")
+    Streams.fileSource(spark, dir, "dbscanDeltaSrc") {
       Tables.load(spark, dir, "embeddings")
         .filter(col("vec_id") % 10 === 0)
         .select(col("vec_id"))
         .repartition(3, col("vec_id"))
-        .write.mode("overwrite").parquet(out)
-      out
     }
 
   /** STREAMING DBSCAN maintenance — the density-state member of the
@@ -1906,9 +1889,6 @@ object Pipeline {
     val emb = Tables.load(spark, dir, "embeddings")
     val keys = embedLshKeysCached(spark, dir)
     val src = dbscanDeltaSourceDir(spark, dir)
-    val batchSchema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(batchSchema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
     var state = dbscanBaseCached(spark, dir)
     // arrived-ness of a collision endpoint is (base point) OR (batch id
     // delivered so far): base membership is the static vec_id % 10
@@ -1917,40 +1897,31 @@ object Pipeline {
     // union the previous version re-checkpointed every trigger
     var arrivedBids = emb.filter(lit(false))
       .select(col("vec_id").as("oid")).localCheckpoint()
-    val ckpt = graft.streaming.Streams.scratchDir("graft_dbscan_ckpt")
-    graft.streaming.Streams.withStreamWidth(spark,
-        graft.streaming.Streams.streamWidth(spark, s"$dir/embeddings.parquet")) {
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val bids = b.select(col("vec_id").as("bid")).localCheckpoint()
-        // both probes of the corpus-scale key table ride a broadcast
-        // batch side — map-side scans, never a shuffle of the index
-        val batchKeys = keys
-          .join(broadcast(bids), col("id") === col("bid"), "left_semi")
-          .select(col("id").as("bid"), col("table"), col("bucket"))
-        val seenBids = arrivedBids
-          .unionByName(bids.select(col("bid").as("oid")))
-          .localCheckpoint()
-        val cand = broadcast(batchKeys)
-          .join(keys.select(col("id").as("oid"), col("table"), col("bucket")),
-            Seq("table", "bucket"))
-          .filter(col("bid") =!= col("oid"))
-          .join(broadcast(seenBids.withColumn("__arr", lit(1))),
-            Seq("oid"), "left")
-          .filter(col("oid") % 10 =!= 0 || col("__arr").isNotNull)
-          .select(least(col("bid"), col("oid")).as("id_a"),
-            greatest(col("bid"), col("oid")).as("id_b"))
-          .distinct()
-        val newPairs = Dedup.embedCosinePairs(emb, "vec_id", "embedding",
-          cand, threshold = 0.4)
-        state = graft.pipeline.Cluster.dbscanFold(state._1, state._2,
-          state._3, newPairs.select(col("id_a"), col("id_b")), minPts = 3)
-        arrivedBids = seenBids
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    Streams.replay(spark, src, sizedBy = Some(s"$dir/embeddings.parquet")) { b =>
+      val bids = b.select(col("vec_id").as("bid")).localCheckpoint()
+      // both probes of the corpus-scale key table ride a broadcast
+      // batch side — map-side scans, never a shuffle of the index
+      val batchKeys = keys
+        .join(broadcast(bids), col("id") === col("bid"), "left_semi")
+        .select(col("id").as("bid"), col("table"), col("bucket"))
+      val seenBids = arrivedBids
+        .unionByName(bids.select(col("bid").as("oid")))
+        .localCheckpoint()
+      val cand = broadcast(batchKeys)
+        .join(keys.select(col("id").as("oid"), col("table"), col("bucket")),
+          Seq("table", "bucket"))
+        .filter(col("bid") =!= col("oid"))
+        .join(broadcast(seenBids.withColumn("__arr", lit(1))),
+          Seq("oid"), "left")
+        .filter(col("oid") % 10 =!= 0 || col("__arr").isNotNull)
+        .select(least(col("bid"), col("oid")).as("id_a"),
+          greatest(col("bid"), col("oid")).as("id_b"))
+        .distinct()
+      val newPairs = Dedup.embedCosinePairs(emb, "vec_id", "embedding",
+        cand, threshold = 0.4)
+      state = graft.pipeline.Cluster.dbscanFold(state._1, state._2,
+        state._3, newPairs.select(col("id_a"), col("id_b")), minPts = 3)
+      arrivedBids = seenBids
     }
     graft.pipeline.Cluster.dbscanAssign(
         emb.select(col("vec_id").as("id")), state._1, state._3)

@@ -211,8 +211,6 @@ object Streaming {
         FROM c GROUP BY ws, n"""
   }
 
-  private val funnelRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** Multi-file copy of the events table, written once per (session,
     * dir) — the harness that lets a file-source stream deliver the
     * change log as GENUINE multiple micro-batches
@@ -220,11 +218,9 @@ object Streaming {
     * batch, which would leave the cross-batch fold untested.
     */
   private def cdcSourceDir(spark: SparkSession, dir: String): String =
-    view(spark, dir, "cdcSrc") {
-      val out = graft.streaming.Streams.scratchDir("graft_cdc_src")
+    Streams.fileSource(spark, dir, "cdcSrc") {
       Tables.load(spark, dir, "events")
-        .repartition(3).write.mode("overwrite").parquet(out)
-      out
+        .repartition(3)
     }
 
   private def toChanges(events: DataFrame): DataFrame =
@@ -247,26 +243,15 @@ object Streaming {
     val base = Tables.load(spark, dir, "customer")
       .select(col("c_custkey"), round(col("c_acctbal"), 2).as("balance"))
     val src = cdcSourceDir(spark, dir)
-    val batchSchema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(batchSchema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
     val orderCols = Seq("ts", "event_id")
     var state = graft.store.CdcMerge
       .initState(base, toChanges(spark.read.parquet(src)), "c_custkey",
         orderCols, "op")
       .localCheckpoint()
-    val ckpt = graft.streaming.Streams.scratchDir("graft_cdc_ckpt")
-    Streams.withStreamWidth(spark, Streams.streamWidth(spark, src)) {
-      val q = toChanges(stream).writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          state = graft.store.CdcMerge
-            .compact(state, b, "c_custkey", orderCols, "op")
-            .localCheckpoint()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    Streams.replay(spark, src) { b =>
+      state = graft.store.CdcMerge
+        .compact(state, toChanges(b), "c_custkey", orderCols, "op")
+        .localCheckpoint()
     }
     graft.store.CdcMerge.visible(state, orderCols, "op")
   }
@@ -292,18 +277,10 @@ object Streaming {
     */
   def sDedupBloom(spark: SparkSession, dir: String): DataFrame = {
     val src = cdcSourceDir(spark, dir)
-    val batchSchema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(batchSchema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-    val qn = s"s_dedup_bloom_sink_${funnelRuns.incrementAndGet()}"
-    Streams.withStreamWidth(spark, Streams.streamWidth(spark, src)) {
-      val q = Streams.bloomDedupStream(stream,
-          struct(col("user_id"), col("event_type")),
-          buckets = 16, expectedPerBucket = 10000L, fpp = 1e-6)
-        .writeStream.format("memory").queryName(qn).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(qn)
+    val stream = Streams.fileStream(spark, src)
+    Streams.toMemory(spark, Streams.bloomDedupStream(stream,
+        struct(col("user_id"), col("event_type")),
+        buckets = 16, expectedPerBucket = 10000L, fpp = 1e-6), src)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_first_seen"))
   }
@@ -311,6 +288,21 @@ object Streaming {
   val sDedupBloomSql: String =
     """SELECT event_type, count(DISTINCT user_id) AS n_first_seen
        FROM events GROUP BY event_type"""
+
+  /** The events table as a single-file stream, with the same
+    * TIMESTAMP(NANOS)-as-long conversion as Tables.load. The file
+    * source needs a DIRECTORY: stream the sf dir with a glob filter
+    * selecting only the events file.
+    */
+  private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
+    val batch = spark.read.parquet(s"$dir/events.parquet")
+    val raw = spark.readStream.schema(batch.schema)
+      .option("pathGlobFilter", "events.parquet")
+      .parquet(dir)
+    if (batch.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+      raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+    else raw
+  }
 
   /** STREAMING ordered funnel, gate-checked against the batch funnel's
     * chained-CTE oracle (q_funnel's SQL): the face drives the REAL
@@ -327,25 +319,9 @@ object Streaming {
   def sFunnel(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val steps = Seq("view", "click", "purchase")
-    val batch = spark.read.parquet(s"$dir/events.parquet")
-    // the file source needs a DIRECTORY: stream the sf dir with a glob
-    // filter selecting only the events file
-    val raw = spark.readStream.schema(batch.schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    // same TIMESTAMP(NANOS)-as-long conversion as Tables.load
-    val events =
-      if (batch.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      else raw
-    val qn = s"s_funnel_sink_${funnelRuns.incrementAndGet()}"
-    Streams.withStreamWidth(spark,
-        Streams.streamWidth(spark, s"$dir/events.parquet")) {
-      val q = Streams.funnelStream(events, steps).writeStream
-        .format("memory").queryName(qn).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val counts = spark.table(qn)
+    val events = eventsStream(spark, dir)
+    val counts = Streams.toMemory(spark, Streams.funnelStream(events, steps),
+        s"$dir/events.parquet")
       .groupBy(col("step").cast("long").as("step"))
       .agg(count(lit(1)).as("users"))
     steps.zipWithIndex.map { case (n, i) => ((i + 1).toLong, n) }
@@ -369,23 +345,10 @@ object Streaming {
     * and the purchase.
     */
   def sPatternDetect(spark: SparkSession, dir: String): DataFrame = {
-    val batch = spark.read.parquet(s"$dir/events.parquet")
-    val raw = spark.readStream.schema(batch.schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    val events =
-      if (batch.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      else raw
-    val qn = s"s_pattern_detect_sink_${funnelRuns.incrementAndGet()}"
-    Streams.withStreamWidth(spark,
-        Streams.streamWidth(spark, s"$dir/events.parquet")) {
-      val q = Streams.cepStream(events, Seq("view", "click", "purchase"),
-          guard = "error", windowSec = 86400L).toDF().writeStream
-        .format("memory").queryName(qn).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(qn)
+    val events = eventsStream(spark, dir)
+    Streams.toMemory(spark, Streams.cepStream(events,
+        Seq("view", "click", "purchase"), guard = "error", windowSec = 86400L),
+        s"$dir/events.parquet")
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_purchases"),
         count(when(col("matched"), 1)).as("n_matches"))
@@ -474,16 +437,9 @@ object Streaming {
     */
   def sLateData(spark: SparkSession, dir: String): DataFrame = {
     val src = lateSourceDir(spark, dir)
-    val schema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-    val qn = s"s_late_data_sink_${funnelRuns.incrementAndGet()}"
-    Streams.withStreamWidth(spark, Streams.streamWidth(spark, src)) {
-      val q = Streams.lateDataAgg(stream).writeStream
-        .format("memory").queryName(qn).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(qn).filter(col("event_type") =!= "__flush")
+    val stream = Streams.fileStream(spark, src)
+    Streams.toMemory(spark, Streams.lateDataAgg(stream), src)
+      .filter(col("event_type") =!= "__flush")
       .select(col("window_start"), col("event_type"), col("n"))
   }
 

@@ -90,8 +90,7 @@ object Streams {
     * trigger for kilobytes of state; at real scale `bytes/target`
     * exceeds any cluster width and this is simply defaultParallelism.
     */
-  def streamWidth(spark: org.apache.spark.sql.SparkSession,
-      sourcePath: String): Int = {
+  private def streamWidth(spark: SparkSession, sourcePath: String): Int = {
     val para = spark.sparkContext.defaultParallelism
     val target = 64L << 20
     val bytes =
@@ -106,19 +105,90 @@ object Streams {
     math.max(1, math.min(para.toLong, bytes / target + 1L).toInt)
   }
 
-  /** Run `body` (start + drain + stop of ONE streaming query) with the
-    * session shuffle width pinned to `width`. The micro-batch engine
-    * clones the session at `start()`, so the scoped value governs every
-    * trigger of the query (including its state-store partition count,
-    * which the first batch seals into the checkpoint) while the restore
-    * leaves the session untouched for the next face.
+  /** Run `body` with the session shuffle width pinned to `width`. The
+    * micro-batch engine clones the session at `start()`, so the scoped
+    * value governs every trigger of the query (including its
+    * state-store partition count, which the first batch seals into the
+    * checkpoint) while the restore leaves the session untouched for
+    * the next face.
     */
-  def withStreamWidth[T](spark: org.apache.spark.sql.SparkSession,
-      width: Int)(body: => T): T = {
+  private def withStreamWidth[T](spark: SparkSession, width: Int)(body: => T): T = {
     val conf = spark.conf
     val prev = conf.get("spark.sql.shuffle.partitions", "200")
     conf.set("spark.sql.shuffle.partitions", width.toString)
     try body finally conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  /** The one place a streaming query runs: `start` it with the width
+    * [[streamWidth]] derives from `sizedBy`, drain every available
+    * input, and stop it — also when a batch throws, so no query
+    * outlives its face and the session's width is restored. The stream
+    * faces never start a query themselves; they go through
+    * [[replay]] or [[toMemory]].
+    */
+  private def drain(spark: SparkSession, sizedBy: String)(
+      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit =
+    withStreamWidth(spark, streamWidth(spark, sizedBy)) {
+      val q = start
+      try q.processAllAvailable() finally q.stop()
+    }
+
+  /** The multi-file stream source `name` over input `dir`: `df` written
+    * as parquet to a scratch dir once per (session, dir), so a file
+    * source replays it as GENUINE multiple micro-batches (one per
+    * file; a single file would fold in one batch and leave the
+    * cross-batch fold untested). Returns the source dir.
+    */
+  def fileSource(spark: SparkSession, dir: String, name: String)(
+      df: => DataFrame): String =
+    graft.PinnedRdds.view(spark, dir, name) {
+      val out = scratchDir(s"graft_${name}_")
+      df.write.mode("overwrite").parquet(out)
+      out
+    }
+
+  /** `src` as a file-source stream delivering one file per trigger,
+    * its schema read from the files.
+    */
+  def fileStream(spark: SparkSession, src: String): DataFrame =
+    spark.readStream.schema(spark.read.parquet(src).schema)
+      .option("maxFilesPerTrigger", "1").parquet(src)
+
+  /** Replay `src` one file per trigger through a scratch-checkpointed
+    * query, handing each micro-batch to `onBatch` (a face's fold keeps
+    * its state in its own vars). The width is sized by `sizedBy`,
+    * `src` when absent. A throw from `onBatch` stops the query and
+    * propagates.
+    */
+  def replay(spark: SparkSession, src: String, sizedBy: Option[String] = None)(
+      onBatch: DataFrame => Unit): Unit = {
+    val stream = fileStream(spark, src)
+    val ckpt = scratchDir("graft_replay_ckpt")
+    drain(spark, sizedBy.getOrElse(src)) {
+      stream.writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (b: DataFrame, _: Long) => onBatch(b) }
+        .start()
+    }
+  }
+
+  private val sinkRuns = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** Run `stream` into a memory sink and return what it emitted, as a
+    * local relation. The sink's rows are read once (a local scan, no
+    * job) and its temp view is dropped, so neither the view nor the
+    * sink's copy of the rows outlives the call.
+    */
+  def toMemory(spark: SparkSession, stream: => Dataset[_], sizedBy: String): DataFrame = {
+    val qn = s"graft_sink_${sinkRuns.incrementAndGet()}"
+    try {
+      drain(spark, sizedBy) {
+        stream.writeStream.format("memory").queryName(qn)
+          .outputMode("append").start()
+      }
+      val sink = spark.table(qn)
+      spark.createDataFrame(java.util.Arrays.asList(sink.collect(): _*), sink.schema)
+    } finally spark.catalog.dropTempView(qn)
   }
 
   /** Tumbling-window aggregate over events: per (hour, event_type)
