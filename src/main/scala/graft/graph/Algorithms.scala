@@ -1,7 +1,9 @@
 package graft.graph
 
+import graft.{Superstep, Width}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.LoopCheckpoint
 
 /** Distributed graph algorithms over (gsrc, gdst) edge DataFrames.
   *
@@ -28,10 +30,7 @@ object Algorithms {
     * [[speculativeColoring]]) — the bounded-driver-state budget, same
     * posture as the broadcast codebooks.
     */
-  private def StragglerFinishBound: Long =
-    sys.props.get("graft.stragglerBound")
-      .orElse(sys.env.get("GRAFT_STRAGGLER_BOUND"))
-      .map(_.toLong).getOrElse(20000L)
+  private val StragglerFinishBound = 20000L
 
   /** Coloring's straggler cutover runs at a DELIBERATE 3.2× of
     * [[StragglerFinishBound]] (A/B-measured at sf0.1: the conflict
@@ -43,11 +42,53 @@ object Algorithms {
     * case — the same bounded-driver-codebook envelope, just with its
     * own measured constant).
     */
-  private[graft] val ColoringFinishBound: Long =
-    sys.env.get("GRAFT_STRAGGLER_BOUND").map(_.toLong * 32 / 10).getOrElse(64000L)
+  private[graft] val ColoringFinishBound = 64000L
 
   private def hintSmall(df: DataFrame, rows: Long): DataFrame =
     if (rows <= BroadcastRowBound) broadcast(df) else df
+
+  /** The label loops' convergence scalar, observed by [[Superstep.step]]:
+    * how many rows of the round changed their `changed`-flagged label. */
+  private def changedRows: Column = coalesce(sum(col("changed").cast("long")), lit(0L))
+
+  /** Driver-side min-root union-find over an edge array, the straggler
+    * cutover of the label loops: returns `find`, which maps every
+    * endpoint to its component's minimum id (union points the larger
+    * root at the smaller, so each root IS the component minimum — the
+    * exact min-label fixpoint). The find is iterative: union-by-value has
+    * no depth bound (a sorted path-shaped edge order builds an O(n)
+    * chain), and a recursive walk at the cutover budget can overflow a
+    * thread stack (streaming foreachBatch threads have ~1 MB) — it walks
+    * to the root first, then compresses the path in a second pass.
+    */
+  private def minRoots(es: Array[(Long, Long)]): Long => Long = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(v: Long): Long = {
+      var r = v
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = v
+      while (c != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    es.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    find
+  }
+
+  /** Collect a (src, dst) long edge frame into a driver adjacency map —
+    * the straggler tails' bounded driver state. */
+  private def collectAdj(e: DataFrame)
+      : scala.collection.mutable.Map[Long, scala.collection.mutable.ArrayBuffer[Long]] = {
+    val adj = scala.collection.mutable.Map
+      .empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
+    e.collect().foreach { r =>
+      adj.getOrElseUpdate(r.getLong(0),
+        scala.collection.mutable.ArrayBuffer.empty) += r.getLong(1)
+    }
+    adj
+  }
 
   /** Iterative-loop state strategy crossover, chosen by A/B measurement
     * at sf0.1: below this row count, re-broadcasting the state vector
@@ -75,7 +116,7 @@ object Algorithms {
     * whole upstream plan just to learn the count.
     */
   private def capParts(df: DataFrame): DataFrame =
-    df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
+    df.coalesce(Width.cluster(df.sparkSession))
 
   /** Materialize a loop-invariant input once — UNLESS it is already a
     * cheap view over materialized state (projections/filters on a
@@ -95,51 +136,6 @@ object Algorithms {
     else capParts(df).localCheckpoint()
   }
 
-  /** Shuffle width for an iteration loop. Target rows/partition is the
-    * measured per-task fixed-cost floor: at 50k rows/task the rank
-    * loops spent more wall-clock scheduling 32 tasks/stage than
-    * computing (sf0.1, local[32]: g_hits 7.7 → 4.6 s, g_ppr 6.4 →
-    * 3.6 s, g_pagerank 5.7 → 4.2 s at 250k). At cluster scale the
-    * `defaultParallelism` cap dominates long before the target does —
-    * the knob only narrows SMALL loop states, where fewer, fuller
-    * tasks are strictly better. [[graft.operators.Ntile]] sizes its
-    * range shuffle by the same rule.
-    */
-  private[graft] def loopWidth(df: DataFrame, rows: Long): Int = {
-    val para = df.sparkSession.sparkContext.defaultParallelism
-    math.max(1, math.min(para.toLong, rows / 250000L + 1L).toInt)
-  }
-
-  /** Run `body` with AQE off and the loop's shuffle width pinned.
-    * Inside the iterative loops every join strategy is already pinned by
-    * the exact-count hints and shuffle width is sized from known row
-    * counts, so AQE only adds a materialize-and-replan barrier per
-    * exchange per round — measurable pure overhead on plans this small.
-    * Session-scoped flags: safe because a loop owns its session for the
-    * duration of the call (graft ops are driver-sequential).
-    */
-  private[graph] def withoutAqe[T](df: DataFrame, width: Option[Int] = None)(body: => T): T = {
-    val conf = df.sparkSession.conf
-    val prev = conf.get("spark.sql.adaptive.enabled", "true")
-    val prevParts = conf.get("spark.sql.shuffle.partitions", "200")
-    val prevIdInName = conf.get("spark.sql.codegen.useIdInClassName", "true")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    width.foreach(w => conf.set("spark.sql.shuffle.partitions", w.toString))
-    // loop round plans are structurally identical, but the per-query
-    // codegen stage id embedded in the generated CLASS NAME makes each
-    // round's source unique and defeats the janino compile cache — at
-    // sf0.1 that is ~25 recompiles (~8 ms each, on the driver, inside
-    // the timed window) per rank face per run (measured: g_hits
-    // 28 → 7 compiles and 5.2 → 4.1 s with the id off). The id exists
-    // only for profiler readability; scope it off inside the loops.
-    conf.set("spark.sql.codegen.useIdInClassName", "false")
-    try body finally {
-      conf.set("spark.sql.adaptive.enabled", prev)
-      conf.set("spark.sql.shuffle.partitions", prevParts)
-      conf.set("spark.sql.codegen.useIdInClassName", prevIdInName)
-    }
-  }
-
   /** Hop distance from a seed set by frontier BFS over a directed edge
     * list (pass an undirected graph as edges ∪ reversed edges). Returns
     * (gid, hop) with the minimum hop per reached node. Each iteration is
@@ -149,30 +145,27 @@ object Algorithms {
     // loop-invariant: materialize once (with AQE — edge derivations can
     // be arbitrary join trees), not re-derived from source per hop
     val e0 = materializeInvariant(edges.select(col("gsrc"), col("gdst")))
-    val width = loopWidth(edges, e0.count())
+    val width = Width.forRows(edges, e0.count())
     val e = e0.coalesce(width)
     var visited = seeds.select(col("gid"), lit(0).as("hop")).localCheckpoint()
     var visitedRows = visited.count()
     var frontier = visited.select("gid")
     var frontierRows = visitedRows
     var hop = 0
-    withoutAqe(edges, Some(width)) { while (hop < maxHops && frontierRows > 0) {
+    Superstep.scope(edges, width) { while (hop < maxHops && frontierRows > 0) {
       hop += 1
       // one checkpoint + one action per hop: `next` is the only new
       // state; `visited` stays a shallow union of ≤ maxHops checkpointed
       // frontiers, so it needs no materialization of its own
-      // frontier size observed during the checkpoint job (the rank
-      // loop's dangling-mass discipline): one job per hop, not two
-      val metric = s"graft_bfs_n_$hop"
-      val flagged = hintSmall(frontier, frontierRows)
+      // frontier size observed during the checkpoint job: one job per
+      // hop, not two
+      val (next, m) = Superstep.step("frontier.round", hintSmall(frontier, frontierRows)
         .join(e, frontier("gid") === e("gsrc"))
         .select(e("gdst").as("gid")).distinct()
         .join(hintSmall(visited.select(col("gid").as("v")), visitedRows),
           col("gid") === col("v"), "left_anti")
-        .withColumn("hop", lit(hop))
-        .observe(metric, count(lit(1)).as("n"))
-      val next = flagged.localCheckpoint()
-      frontierRows = flagged.queryExecution.observedMetrics(metric).getLong(0)
+        .withColumn("hop", lit(hop)))
+      frontierRows = m.getLong(0)
       visitedRows += frontierRows
       visited = visited.unionByName(next)
       frontier = next.select("gid")
@@ -202,7 +195,7 @@ object Algorithms {
     */
   def bfsMulti(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     val e0 = materializeInvariant(edges.select(col("gsrc"), col("gdst")))
-    val width = loopWidth(edges, e0.count())
+    val width = Width.forRows(edges, e0.count())
     val e = e0.coalesce(width)
     var visited = seeds.select(col("src"), col("src").as("gid"), lit(0).as("hop"),
         lit(1L).as("sigma"))
@@ -211,13 +204,12 @@ object Algorithms {
     var frontier = visited.select(col("src"), col("gid"), col("sigma"))
     var frontierRows = visitedRows
     var hop = 0
-    withoutAqe(edges, Some(width)) { while (hop < maxHops && frontierRows > 0) {
+    Superstep.scope(edges, width) { while (hop < maxHops && frontierRows > 0) {
       hop += 1
       // sum-then-anti-join: every contribution comes from the hop-(h-1)
       // frontier, so the grouped sigma is correct for nodes that turn
       // out to be new; rediscovered nodes drop with their sums
-      val metric = s"graft_bfsm_n_$hop"
-      val flagged = hintSmall(frontier, frontierRows)
+      val (next, m) = Superstep.step("frontier.round", hintSmall(frontier, frontierRows)
         .join(e, frontier("gid") === e("gsrc"))
         .select(frontier("src"), e("gdst").as("gid"), frontier("sigma"))
         .groupBy(col("src"), col("gid")).agg(sum(col("sigma")).as("sigma"))
@@ -225,10 +217,8 @@ object Algorithms {
             visitedRows),
           col("src") === col("vs") && col("gid") === col("vg"), "left_anti")
         .withColumn("hop", lit(hop))
-        .select(col("src"), col("gid"), col("hop"), col("sigma"))
-        .observe(metric, count(lit(1)).as("n"))
-      val next = flagged.localCheckpoint()
-      frontierRows = flagged.queryExecution.observedMetrics(metric).getLong(0)
+        .select(col("src"), col("gid"), col("hop"), col("sigma")))
+      frontierRows = m.getLong(0)
       visitedRows += frontierRows
       visited = visited.unionByName(next)
       frontier = next.select(col("src"), col("gid"), col("sigma"))
@@ -301,14 +291,14 @@ object Algorithms {
     */
   def sssp(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     val e0 = materializeInvariant(edges.select(col("gsrc"), col("gdst"), col("w")))
-    val width = loopWidth(edges, e0.count())
+    val width = Width.forRows(edges, e0.count())
     val e = e0.coalesce(width)
     var dist = seeds.select(col("gid"), lit(0.0).as("dist")).localCheckpoint()
     var frontier = dist
     var frontierRows = frontier.count()
     var distRowBound = frontierRows // upper bound: grows by ≤ frontier per round
     var hop = 0
-    withoutAqe(edges, Some(width)) { while (hop < maxHops && frontierRows > 0) {
+    Superstep.scope(edges, width) { while (hop < maxHops && frontierRows > 0) {
       hop += 1
       // candidate distances through last round's improved nodes
       val cand = hintSmall(frontier.select(col("gid").as("fgid"), col("dist").as("fdist")),
@@ -316,15 +306,12 @@ object Algorithms {
         .join(e, col("fgid") === e("gsrc"))
         .groupBy(e("gdst").as("gid")).agg(min(col("fdist") + col("w")).as("nd"))
       // keep only strict improvements over the best known distance
-      val metric = s"graft_sssp_n_$hop"
-      val improvedF = cand
+      val (improved, m) = Superstep.step("frontier.round", cand
         .join(hintSmall(dist.select(col("gid").as("dgid"), col("dist")), distRowBound),
           col("gid") === col("dgid"), "left")
         .filter(col("dist").isNull || col("nd") < col("dist"))
-        .select(col("gid"), col("nd").as("dist"))
-        .observe(metric, count(lit(1)).as("n"))
-      val improved = improvedF.localCheckpoint()
-      frontierRows = improvedF.queryExecution.observedMetrics(metric).getLong(0)
+        .select(col("gid"), col("nd").as("dist")))
+      frontierRows = m.getLong(0)
       distRowBound += frontierRows
       dist = dist
         .join(hintSmall(improved.select(col("gid").as("igid")), frontierRows),
@@ -353,7 +340,7 @@ object Algorithms {
     */
   def ssspPaths(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     val e0 = materializeInvariant(edges.select(col("gsrc"), col("gdst"), col("w")))
-    val width = loopWidth(edges, e0.count())
+    val width = Width.forRows(edges, e0.count())
     val e = e0.coalesce(width)
     var state = seeds.select(col("gid"), lit(0.0).as("dist"),
       array(col("gid")).as("path")).localCheckpoint()
@@ -361,7 +348,7 @@ object Algorithms {
     var frontierRows = frontier.count()
     var bound = frontierRows
     var hop = 0
-    withoutAqe(edges, Some(width)) { while (hop < maxHops && frontierRows > 0) {
+    Superstep.scope(edges, width) { while (hop < maxHops && frontierRows > 0) {
       hop += 1
       val cand = hintSmall(frontier.select(col("gid").as("fgid"),
           col("dist").as("fdist"), col("path").as("fpath")), frontierRows)
@@ -371,17 +358,14 @@ object Algorithms {
         .groupBy(col("gid"))
         .agg(min(struct(col("nd"), col("npath"))).as("b"))
         .select(col("gid"), col("b.nd").as("nd"), col("b.npath").as("npath"))
-      val metric = s"graft_ssspp_n_$hop"
-      val improvedF = cand
+      val (improved, m) = Superstep.step("frontier.round", cand
         .join(hintSmall(state.select(col("gid").as("sgid"), col("dist"),
             col("path")), bound),
           col("gid") === col("sgid"), "left")
         .filter(col("dist").isNull ||
           struct(col("nd"), col("npath")) < struct(col("dist"), col("path")))
-        .select(col("gid"), col("nd").as("dist"), col("npath").as("path"))
-        .observe(metric, count(lit(1)).as("n"))
-      val improved = improvedF.localCheckpoint()
-      frontierRows = improvedF.queryExecution.observedMetrics(metric).getLong(0)
+        .select(col("gid"), col("nd").as("dist"), col("npath").as("path")))
+      frontierRows = m.getLong(0)
       bound += frontierRows
       state = state
         .join(hintSmall(improved.select(col("gid").as("igid")), frontierRows),
@@ -413,22 +397,7 @@ object Algorithms {
     // minimum — the exact min-label fixpoint, at any round budget.
     if (undRows <= cutoverBelow) {
       val es = und0.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      // iterative find: union-by-value has no depth bound (a sorted
-      // path-shaped edge order builds an O(n) chain), and a recursive
-      // walk at the cutover budget can overflow the thread stack —
-      // walk to the root first, then compress the path in a second pass
-      def find(v: Long): Long = {
-        var r = v
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = v
-        while (c != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
+      val find = minRoots(es)
       val sess = und0.sparkSession
       import sess.implicits._
       val mapDf = es.iterator.map(_._1).toSeq.distinct
@@ -437,7 +406,7 @@ object Algorithms {
         .join(broadcast(mapDf), Seq("gid"), "left")
         .select(col("gid"), coalesce(col("__c"), col("gid")).as("comp"))
     }
-    val width = loopWidth(edges, undRows)
+    val width = Width.forRows(edges, undRows)
     // Strategy by measured state size (see [[stateHint]]): broadcast the
     // tiny state vector per round, or co-partition edge list + state
     // once (checkpointed inside the AQE-off scope so the partitioning
@@ -445,7 +414,7 @@ object Algorithms {
     // already-satisfied distributions — each round's only exchange is
     // then the neighbor-min groupBy, with no broadcast build jobs and
     // no requirement that state fit in one executor.
-    withoutAqe(edges, Some(width)) {
+    Superstep.scope(edges, width) {
     var comp = nodes.select(col("gid"), col("gid").as("comp"))
     val nRows = comp.count()
     val small = nRows <= BroadcastStateBound
@@ -463,26 +432,21 @@ object Algorithms {
       val neighborMin = undirected
         .join(stateHint(comp, small), col("b") === col("gid"))
         .groupBy(col("a")).agg(min(col("comp")).as("ncomp"))
-      // the changed COUNT is observed during the checkpoint job itself
-      // (Dataset.observe piggybacks the agg on the same pass — the rank
-      // loop's dangling-mass discipline): the convergence probe costs
-      // zero extra jobs instead of one isEmpty scan per round
-      val metric = s"graft_cc_changed_$iter"
-      val flagged = comp
+      // the changed COUNT is observed during the checkpoint job itself:
+      // the convergence probe costs zero extra jobs instead of one
+      // isEmpty scan per round
+      val (next, m) = Superstep.step("frontier.round", comp
         .join(stateHint(neighborMin, small), comp("gid") === col("a"), "left")
         .select(comp("gid"),
           least(comp("comp"), coalesce(col("ncomp"), comp("comp"))).as("comp"),
           (least(comp("comp"), coalesce(col("ncomp"), comp("comp"))) =!= comp("comp"))
-            .as("changed"))
-        .observe(metric,
-          coalesce(sum(col("changed").cast("long")), lit(0L)).as("nchanged"))
-      val next = graft.PlanAudit.tap("frontier.round", flagged).localCheckpoint()
-      converged =
-        flagged.queryExecution.observedMetrics(metric).getLong(0) == 0L
+            .as("changed")),
+        changedRows)
+      converged = m.getLong(0) == 0L
       comp = next.select(col("gid"), col("comp"))
     }
     comp
-    } // withoutAqe
+    } // scope
   }
 
   /** PageRank with uniform teleport and dangling-mass redistribution,
@@ -508,8 +472,8 @@ object Algorithms {
 
   def prepareRankGraph(nodes: DataFrame, edges: DataFrame): RankGraph = {
     val e0 = materializeInvariant(edges.select(col("gsrc"), col("gdst")))
-    val width = loopWidth(edges, e0.count())
-    withoutAqe(edges, Some(width)) {
+    val width = Width.forRows(edges, e0.count())
+    Superstep.scope(edges, width) {
       val e = e0.repartition(width, col("gsrc")).localCheckpoint()
       val deg = e.groupBy(col("gsrc").as("dgid")).agg(count(lit(1)).as("outdeg"))
       val base0 = nodes.select(col("gid"))
@@ -517,13 +481,18 @@ object Algorithms {
         .select(col("gid"), col("outdeg"))
         .repartition(width, col("gid"))
         .localCheckpoint()
-      // memoized: checkpointing inside the AQE-off scope preserves the
-      // hash(gdst) partitioning, exactly as for `e` (§9)
-      lazy val eDst = withoutAqe(edges, Some(width)) {
-        e.repartition(width, col("gdst")).localCheckpoint()
-      }
-      RankGraph(e, () => eDst, base0, base0.count().toDouble, width)
+      rankGraph(e, base0, base0.count().toDouble, width)
     }
+  }
+
+  /** A [[RankGraph]] whose `eDst` is built on first use and memoized:
+    * checkpointing inside the loop scope preserves the hash(gdst)
+    * partitioning, exactly as for `e` (§9). */
+  private def rankGraph(e: DataFrame, base0: DataFrame, n: Double, width: Int): RankGraph = {
+    lazy val eDst = Superstep.scope(e, width) {
+      e.repartition(width, col("gdst")).localCheckpoint()
+    }
+    RankGraph(e, () => eDst, base0, n, width)
   }
 
   def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int,
@@ -567,7 +536,7 @@ object Algorithms {
 
   private def katzLoop(g: RankGraph, iters: Int, alpha: Double,
       init: DataFrame): DataFrame =
-    withoutAqe(g.e, Some(g.width)) {
+    Superstep.scope(g.e, g.width) {
       var x = init.localCheckpoint()
       for (_ <- 1 to iters) {
         val contribs = g.e
@@ -653,9 +622,9 @@ object Algorithms {
     // drops the hash partitioning from the LogicalRDD and made every
     // warm round re-exchange BOTH the edge layout and the base
     // (measured: 3 Exchanges per round instead of 1 in s_pagerank_incr)
-    withoutAqe(g.e, Some(g.width)) {
-      val e = graft.PlanAudit.tap("drain.fold", g.e.unionByName(d0)
-        .repartition(g.width, col("gsrc"))).localCheckpoint()
+    Superstep.scope(g.e, g.width) {
+      val (e, _) = Superstep.step("drain.fold", g.e.unionByName(d0)
+        .repartition(g.width, col("gsrc")))
       val ddeg = ddegPre.getOrElse(d0.groupBy(col("gsrc").as("dgid"))
         .agg(count(lit(1)).as("ddeg")).localCheckpoint())
       // outdeg: null means dangling — stays null only if BOTH sides
@@ -672,18 +641,11 @@ object Algorithms {
           col("gid") === col("bgid"), "left_anti")
         .join(ddeg, col("gid") === col("dgid"), "left")
         .select(col("gid"), col("ddeg").as("outdeg"))
-      // node count observed during the checkpoint job itself (the C4
-      // observe discipline): no separate count scan per fold
-      val b0F = graft.PlanAudit.tap("drain.fold", adjusted.unionByName(fresh)
+      // node count observed during the checkpoint job itself: no
+      // separate count scan per fold
+      val (base0, m) = Superstep.step("drain.fold", adjusted.unionByName(fresh)
         .repartition(g.width, col("gid")))
-        .observe("graft_fold_n", count(lit(1)).as("n"))
-      val base0 = b0F.localCheckpoint()
-      val n = b0F.queryExecution.observedMetrics("graft_fold_n")
-        .getLong(0).toDouble
-      lazy val eDst = withoutAqe(g.e, Some(g.width)) {
-        e.repartition(g.width, col("gdst")).localCheckpoint()
-      }
-      RankGraph(e, () => eDst, base0, n, g.width)
+      rankGraph(e, base0, m.getLong(0).toDouble, g.width)
     }
   }
 
@@ -732,8 +694,8 @@ object Algorithms {
     */
   def prepareWeightedRankGraph(nodes: DataFrame, edges: DataFrame): RankGraph = {
     val e0 = materializeInvariant(edges.select(col("gsrc"), col("gdst"), col("w")))
-    val width = loopWidth(edges, e0.count())
-    withoutAqe(edges, Some(width)) {
+    val width = Width.forRows(edges, e0.count())
+    Superstep.scope(edges, width) {
       val eP = e0.repartition(width, col("gsrc")).localCheckpoint()
       val wdeg = eP.groupBy(col("gsrc").as("dgid")).agg(sum(col("w")).as("wout"))
       val e = eP.join(wdeg.hint("shuffle_hash"), eP("gsrc") === col("dgid"))
@@ -744,10 +706,7 @@ object Algorithms {
         .select(col("gid"), col("wout").as("outdeg"))
         .repartition(width, col("gid"))
         .localCheckpoint()
-      lazy val eDst = withoutAqe(edges, Some(width)) {
-        e.repartition(width, col("gdst")).localCheckpoint()
-      }
-      RankGraph(e, () => eDst, base0, base0.count().toDouble, width)
+      rankGraph(e, base0, base0.count().toDouble, width)
     }
   }
 
@@ -804,7 +763,7 @@ object Algorithms {
       deltaEdges.select(col("gsrc"), col("gdst"), col("w")))
     // g.e-scoped for the same clone-session reason as
     // [[foldDeltaIntoRankGraph]] (the fold executes on g.e's session)
-    withoutAqe(g.e, Some(g.width)) {
+    Superstep.scope(g.e, g.width) {
       val dW = dwOpt.getOrElse(d0.groupBy(col("gsrc").as("dgid"))
         .agg(sum(col("w")).as("dwout")).localCheckpoint())
       val adjusted = g.base0
@@ -819,13 +778,9 @@ object Algorithms {
           col("gid") === col("bgid"), "left_anti")
         .join(dW, col("gid") === col("dgid"), "left")
         .select(col("gid"), col("dwout").as("outdeg"))
-      // node count observed during the checkpoint job (C4 discipline)
-      val b0F = graft.PlanAudit.tap("drain.fold", adjusted.unionByName(fresh)
+      // node count observed during the checkpoint job
+      val (base0, m) = Superstep.step("drain.fold", adjusted.unionByName(fresh)
         .repartition(g.width, col("gid")))
-        .observe("graft_fold_n", count(lit(1)).as("n"))
-      val base0 = b0F.localCheckpoint()
-      val n = b0F.queryExecution.observedMetrics("graft_fold_n")
-        .getLong(0).toDouble
       // frac re-bake for touched sources only; everyone else verbatim
       val touched = dW.select(col("dgid").as("tsrc"))
       val keep = g.e.join(broadcast(touched),
@@ -837,12 +792,9 @@ object Algorithms {
       val recomputed = touchedRaw
         .join(wAll.hint("shuffle_hash"), col("gsrc") === col("wgid"))
         .select(col("gsrc"), col("gdst"), (col("w") / col("wout")).as("frac"))
-      val e = graft.PlanAudit.tap("drain.fold", keep.unionByName(recomputed)
-        .repartition(g.width, col("gsrc"))).localCheckpoint()
-      lazy val eDst = withoutAqe(g.e, Some(g.width)) {
-        e.repartition(g.width, col("gdst")).localCheckpoint()
-      }
-      RankGraph(e, () => eDst, base0, n, g.width)
+      val (e, _) = Superstep.step("drain.fold", keep.unionByName(recomputed)
+        .repartition(g.width, col("gsrc")))
+      rankGraph(e, base0, m.getLong(0).toDouble, g.width)
     }
   }
 
@@ -898,7 +850,7 @@ object Algorithms {
     // explain("formatted")). base0 is already hash(gid, width), and the
     // teleport attachment (projection or broadcast join) preserves that,
     // so no re-exchange happens here either.
-    withoutAqe(g.e, Some(g.width)) {
+    Superstep.scope(g.e, g.width) {
     val base = teleportOf(g.base0).localCheckpoint()
     // loop state is (gid, outdeg, pr) — `tele` is a loop INVARIANT that
     // the per-round projection reads from `base`, so carrying it
@@ -921,9 +873,9 @@ object Algorithms {
     // i's checkpoint job (Dataset.observe piggybacks an agg on the same
     // pass) — no separate scan job per iteration; only round 1 pays an
     // explicit scan-agg of the initial vector
-    var nextDm: Option[() => Double] = None
+    var nextDm: Option[Double] = None
     for (i <- 1 to iters) {
-      val dm = nextDm.map(_.apply()).getOrElse {
+      val dm = nextDm.getOrElse {
         pr.filter(col("outdeg").isNull)
           .agg(coalesce(sum(col("pr")), lit(0.0))).first().getDouble(0)
       }
@@ -937,10 +889,6 @@ object Algorithms {
           e("gsrc") === col("gid"))
         .groupBy(e("gdst").as("cgid"))
         .agg(sum(contribExpr).as("contrib"))
-      // one metric name for every round: metric lookup is per observed
-      // Dataset, so reuse is safe — and a round-invariant name keeps the
-      // round plans byte-identical where possible (codegen cache)
-      val metricName = "graft_pr_dm"
       // the dangling-mass scalar rides in a zero-arg UDF instead of a
       // literal: the VALUE changes every round, and a changing literal
       // is inlined into the generated source, forcing a fresh janino
@@ -949,26 +897,24 @@ object Algorithms {
       // arithmetic is unchanged (same double, same multiply), so the
       // oracle-sealed values are bit-identical. The closure must capture
       // this round's `val dm` (a captured `var` would serialize whatever
-      // value it holds when a job runs), and `observed` must stay
+      // value it holds when a job runs), and the round must stay
       // eagerly checkpointed below: a lazily executed round would run
       // against a later round's dm, with no error to show it.
       val dmCol = udf(() => dm).apply()
-      val observed = base
-        .join(contribs.hint("shuffle_hash"), col("gid") === col("cgid"), "left")
-        .select(col("gid"), col("outdeg"),
-          (lit(1.0 - damping) * col("tele") +
-            lit(damping) * (coalesce(col("contrib"), lit(0.0)) + dmCol * col("tele"))).as("pr"))
-        .observe(metricName,
-          sum(when(col("outdeg").isNull, col("pr")).otherwise(lit(0.0))).as("dm"))
       // checkpoint every round: pr feeds three branches of the next
       // iteration's plan — lazy chaining recomputes the subtree
       // exponentially
-      pr = graft.PlanAudit.tap("rank.round", observed).localCheckpoint()
-      nextDm = Some(() =>
-        observed.queryExecution.observedMetrics(metricName).getDouble(0))
+      val (next, m) = Superstep.step("rank.round", base
+        .join(contribs.hint("shuffle_hash"), col("gid") === col("cgid"), "left")
+        .select(col("gid"), col("outdeg"),
+          (lit(1.0 - damping) * col("tele") +
+            lit(damping) * (coalesce(col("contrib"), lit(0.0)) + dmCol * col("tele"))).as("pr")),
+        sum(when(col("outdeg").isNull, col("pr")).otherwise(lit(0.0))))
+      pr = next
+      nextDm = Some(m.getDouble(0))
     }
     pr.select(col("gid"), col("pr"))
-    } // withoutAqe
+    } // scope
   }
 
   /** HITS hubs & authorities (Kleinberg 1999, re-expressed as a
@@ -990,7 +936,7 @@ object Algorithms {
     * free).
     */
   def hits(g: RankGraph, iters: Int): DataFrame = {
-    withoutAqe(g.e, Some(g.width)) {
+    Superstep.scope(g.e, g.width) {
     val eSrc = g.e
     val eDst = g.eDst() // pinned invariant, built once per session
     val base = g.base0.select(col("gid")) // projection keeps hash(gid)
@@ -1042,7 +988,7 @@ object Algorithms {
       .select(col("gid"),
         when(col("as") > 0, col("auth") / col("as")).otherwise(lit(0.0)).as("auth"),
         when(col("hs") > 0, col("hub") / col("hs")).otherwise(lit(0.0)).as("hub"))
-    } // withoutAqe
+    } // scope
   }
 
   /** k-core: the maximal subgraph in which every node has degree ≥ k,
@@ -1082,8 +1028,8 @@ object Algorithms {
       .unionByName(edges.select(col("gdst").as("a"), col("gsrc").as("b"))
         .filter(col("a") =!= col("b")))
       .distinct().localCheckpoint()
-    val width = loopWidth(edges, und0.count())
-    withoutAqe(edges, Some(width)) {
+    val width = Width.forRows(edges, und0.count())
+    Superstep.scope(edges, width) {
       val e = und0.coalesce(width)
       var undec = nodes.select(col("gid"),
           md5(col("gid").cast("string")).as("pri"))
@@ -1101,25 +1047,21 @@ object Algorithms {
               col("pri").as("npri")), undecRows),
             col("b") === col("nb"))
           .groupBy(col("a")).agg(min(col("npri")).as("mp"))
-        val mSel = s"graft_mis_sel_$round"
-        val selF = undec
+        val (sel, mSel) = Superstep.step("peel.contract", undec
           .join(hintSmall(minNbr, undecRows), undec("gid") === col("a"), "left")
           .filter(col("mp").isNull || undec("pri") < col("mp"))
-          .select(undec("gid"), lit(round).as("mis_round"))
-          .observe(mSel, count(lit(1)).as("n"))
-        val sel = selF.localCheckpoint()
-        val selRows = selF.queryExecution.observedMetrics(mSel).getLong(0)
+          .select(undec("gid"), lit(round).as("mis_round")))
+        val selRows = mSel.getLong(0)
         val killed = e
           .join(hintSmall(sel.select(col("gid").as("sa")), selRows),
             col("a") === col("sa"), "left_semi")
           .select(col("b").as("gid"))
           .unionByName(sel.select(col("gid")))
           .distinct()
-        val mUnd = s"graft_mis_undec_$round"
-        val undecF = undec.join(killed, Seq("gid"), "left_anti")
-          .observe(mUnd, count(lit(1)).as("n"))
-        undec = undecF.localCheckpoint()
-        undecRows = undecF.queryExecution.observedMetrics(mUnd).getLong(0)
+        val (undecNext, mUnd) = Superstep.step("peel.contract",
+          undec.join(killed, Seq("gid"), "left_anti"))
+        undec = undecNext
+        undecRows = mUnd.getLong(0)
         mis = if (mis == null) sel else mis.unionByName(sel)
         // Straggler cutover (the speculativeColoring pattern): finish
         // the identical recurrence driver-side once the undecided
@@ -1133,12 +1075,7 @@ object Algorithms {
               col("b") === col("ub"), "left_semi")
             .localCheckpoint()
           if (liveE.count() <= 8L * StragglerFinishBound) {
-            val adj = scala.collection.mutable.Map
-              .empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
-            liveE.collect().foreach { r =>
-              adj.getOrElseUpdate(r.getLong(0),
-                scala.collection.mutable.ArrayBuffer.empty) += r.getLong(1)
-            }
+            val adj = collectAdj(liveE)
             val pri = scala.collection.mutable.Map.empty[Long, String]
             undec.collect().foreach(r => pri(r.getLong(0)) = r.getString(1))
             var u = pri.keySet.toSet
@@ -1165,7 +1102,7 @@ object Algorithms {
         s"maximalIndependentSet: $maxIter rounds exhausted with $undecRows undecided")
       if (mis == null) nodes.select(col("gid"), lit(0).as("mis_round")).limit(0)
       else mis
-    } // withoutAqe
+    } // scope
   }
 
   /** Speculative greedy graph coloring (the Gebremedhin–Manne
@@ -1239,8 +1176,8 @@ object Algorithms {
       maxIter: Int = 100,
       finishBelow: Long = ColoringFinishBound,
       round1Palette: Boolean = false): DataFrame = {
-    val width = loopWidth(und0, und0.count())
-    withoutAqe(und0, Some(width)) {
+    val width = Width.forRows(und0, und0.count())
+    Superstep.scope(und0, width) {
       // Loop state is fully incremental — the committed color table is
       // never re-read inside the loop: each uncolored node CARRIES the
       // color set of its already-colored neighbors (`cs`, fed by the
@@ -1292,16 +1229,12 @@ object Algorithms {
           col("pri").as("lpri"), col("tent").as("ltent")), uncolRows)
         val tr = hintSmall(tent.select(col("gid").as("rb"),
           col("pri").as("rpri"), col("tent").as("rtent")), uncolRows)
-        val mLoser = s"graft_color_losers_$round"
-        val loserIdsF = eLive
+        val (loserIds, mLoser) = Superstep.step("peel.contract", eLive
           .join(tl, col("a") === col("la"))
           .join(tr, col("b") === col("rb") && col("ltent") === col("rtent") &&
             col("rpri") < col("lpri"), "left_semi")
-          .select(col("la").as("gid")).distinct()
-          .observe(mLoser, count(lit(1)).as("n"))
-        val loserIds = loserIdsF.localCheckpoint()
-        val loserRows =
-          loserIdsF.queryExecution.observedMetrics(mLoser).getLong(0)
+          .select(col("la").as("gid")).distinct())
+        val loserRows = mLoser.getLong(0)
         val sel = tent
           .join(hintSmall(loserIds.select(col("gid").as("lg")), loserRows),
             tent("gid") === col("lg"), "left_anti")
@@ -1316,17 +1249,15 @@ object Algorithms {
               col("color").as("wcolor")), uncolRows - loserRows),
             col("b") === col("wb"))
           .groupBy(col("a")).agg(collect_set(col("wcolor")).as("addCs"))
-        val mUncol = s"graft_color_uncol_$round"
-        val uncolF = tent
+        val (uncolNext, mUncol) = Superstep.step("peel.contract", tent
           .join(hintSmall(loserIds.select(col("gid").as("lg")), loserRows),
             tent("gid") === col("lg"), "left_semi")
           .join(winNbr, tent("gid") === col("a"), "left")
           .select(tent("gid"), col("pri"),
             array_union(col("cs"),
-              coalesce(col("addCs"), array().cast("array<long>"))).as("cs"))
-          .observe(mUncol, count(lit(1)).as("n"))
-        uncol = uncolF.localCheckpoint()
-        uncolRows = uncolF.queryExecution.observedMetrics(mUncol).getLong(0)
+              coalesce(col("addCs"), array().cast("array<long>"))).as("cs")))
+        uncol = uncolNext
+        uncolRows = mUncol.getLong(0)
         if (uncolRows > 0) {
           eLive = eLive
             .join(hintSmall(loserIds.select(col("gid").as("sa")), loserRows),
@@ -1345,12 +1276,7 @@ object Algorithms {
           // with state bounded like every other driver-side codebook.
           if (uncolRows <= finishBelow &&
               eLive.count() <= 50L * finishBelow) {
-            val adj = scala.collection.mutable.Map
-              .empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
-            eLive.collect().foreach { r =>
-              adj.getOrElseUpdate(r.getLong(0),
-                scala.collection.mutable.ArrayBuffer.empty) += r.getLong(1)
-            }
+            val adj = collectAdj(eLive)
             val pri = scala.collection.mutable.Map.empty[Long, String]
             val cs = scala.collection.mutable.Map.empty[Long, scala.collection.mutable.Set[Long]]
             uncol.collect().foreach { r =>
@@ -1390,7 +1316,7 @@ object Algorithms {
         nodes.select(col("gid"), lit(0L).as("color"),
           lit(0).as("colored_round")).limit(0)
       else sels.reduce(_ unionByName _)
-    } // withoutAqe
+    } // scope
   }
 
   /** HyperANF (Boldi, Rosa & Vigna, WWW 2011): the approximate
@@ -1432,8 +1358,8 @@ object Algorithms {
     * as phantom state after one union round. */
   def neighborhoodFunctionUnd(nodes: DataFrame, und0: DataFrame,
       maxHops: Int, lgK: Int = 12): DataFrame = {
-    val width = loopWidth(und0, und0.count())
-    withoutAqe(und0, Some(width)) {
+    val width = Width.forRows(und0, und0.count())
+    Superstep.scope(und0, width) {
       val e = und0.coalesce(width)
       var st = nodes.groupBy(col("gid"))
         .agg(hll_sketch_agg(col("gid"), lgK).as("sk"))
@@ -1457,7 +1383,7 @@ object Algorithms {
       val sess = nodes.sparkSession
       import sess.implicits._
       out.toSeq.toDF("hop", "n_reachable_pairs")
-    } // withoutAqe
+    } // scope
   }
 
   /** Deterministic greedy MAXIMAL MATCHING: fixed edge priority
@@ -1487,8 +1413,8 @@ object Algorithms {
       .distinct()
       .withColumn("pri", md5(concat_ws("_", col("a"), col("b"))))
       .localCheckpoint()
-    val width = loopWidth(canon0, canon0.count())
-    withoutAqe(canon0, Some(width)) {
+    val width = Width.forRows(canon0, canon0.count())
+    Superstep.scope(canon0, width) {
       var live = canon0.coalesce(width)
       var liveRows = canon0.count()
       val sels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -1508,15 +1434,13 @@ object Algorithms {
         sels += sel
         val matchedNodes = sel.select(col("a").as("v"))
           .unionByName(sel.select(col("b").as("v"))).distinct()
-        val mLive = s"graft_match_live_$round"
-        val liveF = live
+        val (liveNext, mLive) = Superstep.step("peel.contract", live
           .join(matchedNodes.select(col("v").as("ma")),
             col("a") === col("ma"), "left_anti")
           .join(matchedNodes.select(col("v").as("mb")),
-            col("b") === col("mb"), "left_anti")
-          .observe(mLive, count(lit(1)).as("n"))
-        live = liveF.localCheckpoint()
-        liveRows = liveF.queryExecution.observedMetrics(mLive).getLong(0)
+            col("b") === col("mb"), "left_anti"))
+        live = liveNext
+        liveRows = mLive.getLong(0)
         // Straggler cutover (the speculativeColoring pattern): once the
         // live edge set fits the driver bound, finish the identical
         // recurrence in memory — the tail rounds are scheduling floor,
@@ -1554,7 +1478,7 @@ object Algorithms {
       if (sels.isEmpty)
         canon0.select(col("a"), col("b"), lit(0).as("match_round")).limit(0)
       else sels.reduce(_ unionByName _)
-    } // withoutAqe
+    } // scope
   }
 
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 100): DataFrame = {
@@ -1564,8 +1488,8 @@ object Algorithms {
       .unionByName(edges.select(col("gdst").as("a"), col("gsrc").as("b"))
         .filter(col("a") =!= col("b")))
       .distinct().localCheckpoint()
-    val width = loopWidth(edges, und0.count())
-    withoutAqe(edges, Some(width)) {
+    val width = Width.forRows(edges, und0.count())
+    Superstep.scope(edges, width) {
     var e = und0.coalesce(width)
     var aliveRows = -1L
     var converged = false
@@ -1575,27 +1499,24 @@ object Algorithms {
       iter += 1
       // each undirected edge appears as (a,b) AND (b,a), so the groupBy
       // on `a` counts every node's full degree in the surviving subgraph
-      val metric = s"graft_kcore_n_$iter"
-      val survivorsF = e.groupBy(col("a")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k)
-        .select(col("a").as("gid"))
-        .observe(metric, count(lit(1)).as("n"))
-      val survivors = survivorsF.localCheckpoint()
-      val n = survivorsF.queryExecution.observedMetrics(metric).getLong(0)
+      val (survivors, m) = Superstep.step("peel.contract",
+        e.groupBy(col("a")).agg(count(lit(1)).as("deg"))
+          .filter(col("deg") >= k)
+          .select(col("a").as("gid")))
+      val n = m.getLong(0)
       converged = n == aliveRows
       aliveRows = n
       alive = survivors
       if (!converged && n > 0) {
-        e = graft.PlanAudit.tap("peel.contract", e
+        e = Superstep.step("peel.contract", e
           .join(hintSmall(survivors.select(col("gid").as("sa")), n),
             col("a") === col("sa"), "left_semi")
           .join(hintSmall(survivors.select(col("gid").as("sb")), n),
-            col("b") === col("sb"), "left_semi"))
-          .localCheckpoint()
+            col("b") === col("sb"), "left_semi"))._1
       } else if (n == 0) converged = true
     }
     alive
-    } // withoutAqe
+    } // scope
   }
 
   /** INCREMENTAL fixed-k core maintenance under edge ARRIVALS — the
@@ -1646,16 +1567,14 @@ object Algorithms {
     var iter = 0
     while (frontierN > 0 && iter < maxIter) {
       iter += 1
-      val metric = s"graft_kci_reach_$iter"
-      val frontierF = graft.PlanAudit.tap("frontier.round", und
+      val (next, m) = Superstep.step("frontier.round", und
           .join(hintSmall(frontier.select(col("gid").as("a")), frontierN),
             Seq("a"), "left_semi")
           .select(col("b").as("gid")).distinct()
           .join(cand, Seq("gid"), "left_semi")
           .join(visited, Seq("gid"), "left_anti"))
-        .observe(metric, count(lit(1)).as("n"))
-      frontier = frontierF.localCheckpoint()
-      frontierN = frontierF.queryExecution.observedMetrics(metric).getLong(0)
+      frontier = next
+      frontierN = m.getLong(0)
       if (frontierN > 0) visited = visited.unionByName(frontier).localCheckpoint()
     }
     require(frontierN == 0,
@@ -1677,27 +1596,23 @@ object Algorithms {
     iter = 0
     while (!converged && iter < maxIter) {
       iter += 1
-      val metric = s"graft_kci_peel_$iter"
-      val survivorsF = alive.select(col("gid").as("a"))
+      val (survivors, m) = Superstep.step("peel.contract", alive.select(col("gid").as("a"))
         .join(credits, Seq("a"), "left")
         .join(aliveEdges.groupBy(col("a")).agg(count(lit(1)).as("rd")),
           Seq("a"), "left")
         .filter(coalesce(col("cr"), lit(0L)) +
           coalesce(col("rd"), lit(0L)) >= k)
-        .select(col("a").as("gid"))
-        .observe(metric, count(lit(1)).as("n"))
-      val survivors = survivorsF.localCheckpoint()
-      val n = survivorsF.queryExecution.observedMetrics(metric).getLong(0)
+        .select(col("a").as("gid")))
+      val n = m.getLong(0)
       converged = n == aliveN
       aliveN = n
       alive = survivors
       if (!converged && n > 0) {
-        aliveEdges = graft.PlanAudit.tap("peel.contract", aliveEdges
+        aliveEdges = Superstep.step("peel.contract", aliveEdges
             .join(hintSmall(survivors.select(col("gid").as("sa")), n),
               col("a") === col("sa"), "left_semi")
             .join(hintSmall(survivors.select(col("gid").as("sb")), n),
-              col("b") === col("sb"), "left_semi"))
-          .localCheckpoint()
+              col("b") === col("sb"), "left_semi"))._1
       } else if (n == 0) converged = true
     }
     require(converged,
@@ -1731,17 +1646,14 @@ object Algorithms {
     val e = newEdges.select(col("gsrc"), col("gdst"))
     // delta endpoints relabeled to their previous component; unseen
     // nodes act as their own (singleton) component
-    val mRel = "graft_ccinc_rel"
-    val relF = e
+    val (rel, mRel) = Superstep.step("stream.fold", e
       .join(lab.select(col("gid").as("gsrc"), col("comp").as("csrc")),
         Seq("gsrc"), "left")
       .join(lab.select(col("gid").as("gdst"), col("comp").as("cdst")),
         Seq("gdst"), "left")
       .select(coalesce(col("csrc"), col("gsrc")).as("gsrc"),
-        coalesce(col("cdst"), col("gdst")).as("gdst"))
-      .observe(mRel, count(lit(1)).as("n"))
-    val rel = relF.localCheckpoint()
-    val relRows = relF.queryExecution.observedMetrics(mRel).getLong(0)
+        coalesce(col("cdst"), col("gdst")).as("gdst")))
+    val relRows = mRel.getLong(0)
     // Straggler cutover (the SCC-reach / MIS / coloring discipline):
     // the contracted graph is delta-scale BY CONSTRUCTION — when it
     // fits the bounded-driver budget, a min-root union-find replaces
@@ -1752,21 +1664,7 @@ object Algorithms {
     // contract. Past the budget the checkpointed loop takes over.
     val merged = if (relRows <= cutoverBelow) {
       val es = rel.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      // iterative find — same stack-safety rationale as the
-      // connectedComponents cutover; this one runs on streaming
-      // foreachBatch worker threads with ~1 MB stacks
-      def find(v: Long): Long = {
-        var r = v
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = v
-        while (c != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
+      val find = minRoots(es)
       val sess = rel.sparkSession
       import sess.implicits._
       es.iterator.flatMap { case (a, b) => Iterator(a, b) }.toSeq.distinct
@@ -1812,8 +1710,8 @@ object Algorithms {
         .select(col("gdst").as("a"), col("gsrc").as("b"), col("w"))
         .filter(col("a") =!= col("b")))
       .localCheckpoint()
-    val width = loopWidth(wEdges, und0.count())
-    withoutAqe(wEdges, Some(width)) {
+    val width = Width.forRows(wEdges, und0.count())
+    Superstep.scope(wEdges, width) {
     val base = und0.coalesce(width)
     // Depth-1 lineage per round: the round-k subgraph is the BASE edge
     // list induced on the CURRENT survivor set (survivors only shrink,
@@ -1834,19 +1732,17 @@ object Algorithms {
             col("a") === col("sa"), "left_semi")
           .join(hintSmall(alive.select(col("gid").as("sb")), aliveRows),
             col("b") === col("sb"), "left_semi")
-      val metric = s"graft_kcw_n_$iter"
-      val survivorsF = e.groupBy(col("a")).agg(sum(col("w")).as("wdeg"))
-        .filter(col("wdeg") >= minWeight)
-        .select(col("a").as("gid"))
-        .observe(metric, count(lit(1)).as("n"))
-      val survivors = survivorsF.localCheckpoint()
-      val n = survivorsF.queryExecution.observedMetrics(metric).getLong(0)
+      val (survivors, m) = Superstep.step("peel.contract",
+        e.groupBy(col("a")).agg(sum(col("w")).as("wdeg"))
+          .filter(col("wdeg") >= minWeight)
+          .select(col("a").as("gid")))
+      val n = m.getLong(0)
       converged = n == aliveRows || n == 0
       aliveRows = n
       alive = survivors
     }
     alive
-    } // withoutAqe
+    } // scope
   }
 
   /** Global triangle count over an undirected simple graph given as
@@ -1998,7 +1894,7 @@ object Algorithms {
       .select(col("triangles").as("s3"))
     // every side is a one-row aggregate: hint them so a cold planner
     // never shuffles a scalar (the sibling faces' discipline)
-    graft.PlanAudit.tap("drain.fold",
+    Superstep.audit("drain.fold",
       s1.crossJoin(broadcast(s2a)).crossJoin(broadcast(s2b))
         .crossJoin(broadcast(s3))
         .select((lit(baseTriangles) + col("s1") - col("s2a") - col("s2b") +
@@ -2080,8 +1976,8 @@ object Algorithms {
         greatest(col("gsrc"), col("gdst")).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct().localCheckpoint()
-    val width = loopWidth(edges, canon0.count())
-    withoutAqe(edges, Some(width)) {
+    val width = Width.forRows(edges, canon0.count())
+    Superstep.scope(edges, width) {
       var e = canon0.coalesce(width)
       var rows = -1L
       var converged = false
@@ -2109,12 +2005,9 @@ object Algorithms {
           .groupBy(col("a"), col("b")).agg(count(lit(1)).as("sup"))
         // edges in no triangle have no support row: the inner filter on
         // the aggregated table drops them exactly like support 0 would
-        val metric = s"graft_truss_n_$iter"
-        val keptF = support.filter(col("sup") >= minSup)
-          .select(col("a"), col("b"))
-          .observe(metric, count(lit(1)).as("n"))
-        val kept = keptF.localCheckpoint()
-        val n = keptF.queryExecution.observedMetrics(metric).getLong(0)
+        val (kept, m) = Superstep.step("peel.contract",
+          support.filter(col("sup") >= minSup).select(col("a"), col("b")))
+        val n = m.getLong(0)
         converged = n == rows || n == 0
         rows = n
         e = kept
@@ -2124,7 +2017,7 @@ object Algorithms {
       // fail loudly, not surface as a downstream hash mismatch
       require(converged, s"kTruss: $maxIter rounds exhausted before fixpoint")
       e
-    } // withoutAqe
+    } // scope
   }
 
   /** INCREMENTAL fixed-k truss maintenance under edge ARRIVALS — the
@@ -2191,14 +2084,12 @@ object Algorithms {
     var iter = 0
     while (frontierN > 0 && iter < maxIter) {
       iter += 1
-      val metric = s"graft_ktri_reach_$iter"
-      val frontierF = graft.PlanAudit.tap("frontier.round", viable(
+      val (next, m) = Superstep.step("frontier.round", viable(
           triStep(frontier)
             .join(truss, Seq("a", "b"), "left_anti")
             .join(visited, Seq("a", "b"), "left_anti")))
-        .observe(metric, count(lit(1)).as("n"))
-      frontier = frontierF.localCheckpoint()
-      frontierN = frontierF.queryExecution.observedMetrics(metric).getLong(0)
+      frontier = next
+      frontierN = m.getLong(0)
       if (frontierN > 0) visited = visited.unionByName(frontier).localCheckpoint()
     }
     require(frontierN == 0,
@@ -2218,13 +2109,11 @@ object Algorithms {
           least(col("a"), col("x")).as("e1a"), greatest(col("a"), col("x")).as("e1b"),
           least(col("b"), col("x")).as("e2a"), greatest(col("b"), col("x")).as("e2b"))
         .localCheckpoint()
-      val mCe = s"graft_ktri_ce_$iter"
-      val ceF = tris.select(col("e1a").as("a"), col("e1b").as("b"))
-        .unionByName(tris.select(col("e2a").as("a"), col("e2b").as("b")))
-        .distinct()
-        .observe(mCe, count(lit(1)).as("n"))
-      val ce = ceF.localCheckpoint()
-      val ceN = ceF.queryExecution.observedMetrics(mCe).getLong(0)
+      val (ce, mCe) = Superstep.step("peel.contract",
+        tris.select(col("e1a").as("a"), col("e1b").as("b"))
+          .unionByName(tris.select(col("e2a").as("a"), col("e2b").as("b")))
+          .distinct())
+      val ceN = mCe.getLong(0)
       // membership subset: one map-side probe of the corpus-scale truss
       // (build side = the round's bounded candidate-edge set) + alive;
       // the cascade region is usually tiny but is NOT bounded a priori,
@@ -2233,8 +2122,7 @@ object Algorithms {
       val members = truss.join(hintSmall(ce, ceN), Seq("a", "b"), "left_semi")
         .unionByName(alive.join(hintSmall(ce, ceN), Seq("a", "b"), "left_semi"))
         .localCheckpoint()
-      val mPeel = s"graft_ktri_peel_$iter"
-      val survivorsF = graft.PlanAudit.tap("peel.contract", tris
+      val (survivors, m) = Superstep.step("peel.contract", tris
           .join(members.select(col("a").as("e1a"), col("b").as("e1b")),
             Seq("e1a", "e1b"), "left_semi")
           .join(members.select(col("a").as("e2a"), col("b").as("e2b")),
@@ -2242,9 +2130,7 @@ object Algorithms {
           .groupBy(col("a"), col("b")).agg(count(lit(1)).as("sup"))
           .filter(col("sup") >= minSup)
           .select(col("a"), col("b")))
-        .observe(mPeel, count(lit(1)).as("n"))
-      val survivors = survivorsF.localCheckpoint()
-      val n = survivorsF.queryExecution.observedMetrics(mPeel).getLong(0)
+      val n = m.getLong(0)
       converged = n == aliveN
       aliveN = n
       alive = survivors
@@ -2401,15 +2287,13 @@ object Algorithms {
           struct(col("w"), col("a"), col("b"), col("cb").as("oc")).as("e"))
         .unionByName(ec.select(col("cb").as("c"),
           struct(col("w"), col("a"), col("b"), col("ca").as("oc")).as("e")))
-      val mSel = s"graft_mst_sel_$round"
-      val selF = inc.groupBy(col("c")).agg(min(col("e")).as("e"))
-        .select(col("c"), col("e.w").as("w"), col("e.a").as("a"),
-          col("e.b").as("b"), col("e.oc").as("oc"))
-        .observe(mSel, count(lit(1)).as("n"))
-      val sel = selF.localCheckpoint()
       // zero extra actions per round: the selection count (termination
       // probe + contraction-strategy pivot) rides the checkpoint job
-      val selCnt = selF.queryExecution.observedMetrics(mSel).getLong(0)
+      val (sel, mSel) = Superstep.step("peel.contract",
+        inc.groupBy(col("c")).agg(min(col("e")).as("e"))
+          .select(col("c"), col("e.w").as("w"), col("e.a").as("a"),
+            col("e.b").as("b"), col("e.oc").as("oc")))
+      val selCnt = mSel.getLong(0)
       if (selCnt == 0) done = true
       else {
         picked += sel.select(col("a"), col("b"), col("w"))
@@ -2422,15 +2306,7 @@ object Algorithms {
         val mapping = if (selCnt <= BroadcastStateBound) {
             val pairs = sel.select(col("c"), col("oc")).collect()
               .map(r => (r.getLong(0), r.getLong(1)))
-            val parent = scala.collection.mutable.Map.empty[Long, Long]
-            def find(v: Long): Long = {
-              val p = parent.getOrElse(v, v)
-              if (p == v) v else { val r = find(p); parent(v) = r; r }
-            }
-            pairs.foreach { case (c, oc) =>
-              val (rc, ro) = (find(c), find(oc))
-              if (rc != ro) parent(math.max(rc, ro)) = math.min(rc, ro)
-            }
+            val find = minRoots(pairs)
             val rows = pairs.flatMap { case (c, oc) => Seq(c, oc) }.distinct
               .map(c => (c, find(c)))
             val spark = comp.sparkSession
@@ -2605,7 +2481,7 @@ object Algorithms {
     val und0 = edges.select(col("gsrc").as("a"), col("gdst").as("b"))
       .unionByName(edges.select(col("gdst").as("a"), col("gsrc").as("b")))
       .localCheckpoint()
-    val width = loopWidth(edges, und0.count())
+    val width = Width.forRows(edges, und0.count())
     // ALWAYS co-partitioned, unlike the size-adaptive siblings: label
     // prop re-broadcasts TWO state tables per round (labels + votes),
     // and the A/B at sf0.1 has the co-partitioned loop faster even in
@@ -2616,7 +2492,7 @@ object Algorithms {
     // (Override knob retained for future A/Bs via
     // -Dgraft.broadcastStateBound=<huge> is deliberately NOT honored
     // here: the broadcast formulation lost both measurements.)
-    withoutAqe(edges, Some(width)) {
+    Superstep.scope(edges, width) {
     var labels = nodes.select(col("gid"), col("gid").as("community"))
     val small = false
     val undirected = und0.repartition(width, col("b")).localCheckpoint()
@@ -2635,7 +2511,7 @@ object Algorithms {
         .localCheckpoint()
     }
     labels
-    } // withoutAqe
+    } // scope
   }
 
   /** WEIGHTED label propagation: each neighbor's vote counts with its
@@ -2657,8 +2533,8 @@ object Algorithms {
     val und0 = wEdges.select(col("gsrc").as("a"), col("gdst").as("b"), col("w"))
       .unionByName(wEdges.select(col("gdst").as("a"), col("gsrc").as("b"), col("w")))
       .localCheckpoint()
-    val width = loopWidth(wEdges, und0.count())
-    withoutAqe(wEdges, Some(width)) {
+    val width = Width.forRows(wEdges, und0.count())
+    Superstep.scope(wEdges, width) {
     var labels = nodes.select(col("gid"), col("gid").as("community"))
     val small = false
     val undirected = und0.repartition(width, col("b")).localCheckpoint()
@@ -2676,7 +2552,7 @@ object Algorithms {
         .localCheckpoint()
     }
     labels
-    } // withoutAqe
+    } // scope
   }
 
   /** Exact strongly connected components of a DIRECTED (gsrc, gdst)
@@ -2717,9 +2593,9 @@ object Algorithms {
     val dirE = edges.select(col("gsrc").as("a"), col("gdst").as("b"))
       .filter(col("a") =!= col("b")).distinct().localCheckpoint()
     val dirECount = dirE.count()
-    val width = loopWidth(edges, dirECount)
+    val width = Width.forRows(edges, dirECount)
     val edgeBound = 50L * cutoverBelow
-    withoutAqe(edges, Some(width)) {
+    Superstep.scope(edges, width) {
       var remaining = nodes.select(col("gid")).distinct().localCheckpoint()
       var remRows = remaining.count()
       var result: DataFrame = null
@@ -2751,18 +2627,14 @@ object Algorithms {
               .join(stateHint(lab.select(col("gid").as("nb"), col("m").as("nm")), small),
                 col("b") === col("nb"))
               .groupBy(col("a")).agg(min(col("nm")).as("nmin"))
-            val metric = s"graft_scc_changed_$rounds"
-            val flagged = lab
+            val (next, m) = Superstep.step("frontier.round", lab
               .join(stateHint(nbrMin, small), lab("gid") === col("a"), "left")
               .select(lab("gid"),
                 least(lab("m"), coalesce(col("nmin"), lab("m"))).as("m"),
                 (least(lab("m"), coalesce(col("nmin"), lab("m"))) =!= lab("m"))
-                  .as("changed"))
-              .observe(metric, coalesce(sum(col("changed").cast("long")),
-                lit(0L)).as("nchanged"))
-            val next = flagged.localCheckpoint()
-            converged =
-              flagged.queryExecution.observedMetrics(metric).getLong(0) == 0L
+                  .as("changed")),
+              changedRows)
+            converged = m.getLong(0) == 0L
             lab = next.select(col("gid"), col("m"))
           }
           lab
@@ -2814,7 +2686,7 @@ object Algorithms {
       if (result == null)
         nodes.select(col("gid"), col("gid").as("scc")).limit(0)
       else result
-    } // withoutAqe
+    } // scope
   }
 
   /** Distributed Louvain community detection (Blondel et al. 2008,
@@ -2865,13 +2737,12 @@ object Algorithms {
       .distinct()
       .select(col("a"), col("b"), lit(1L).as("w"))
       .localCheckpoint()
-    val width = loopWidth(edges, canon0.count())
+    val width = Width.forRows(edges, canon0.count())
     // every loop-state checkpoint is stats-clamped (see LoopCheckpoint:
     // this loop joins state-derived frames against each other, the shape
     // that compounds carried size estimates geometrically)
-    def ck(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftbridge.LoopCheckpoint.clampStats(df.localCheckpoint())
-    withoutAqe(edges, Some(width)) {
+    def ck(df: DataFrame): DataFrame = LoopCheckpoint.clampStats(df.localCheckpoint())
+    Superstep.scope(edges, width) {
       // level-local state: canon (a<b, w), selfW (gid, sw), projection
       // from original gid to current-level node
       var canon = ck(canon0.coalesce(width))
@@ -2960,11 +2831,9 @@ object Algorithms {
             // monotone decline) at the same wall-clock.
             .filter(pmod(col("gid"), lit(2L)) === lit(r % 2))
             .select(col("gid"), col("target"))
-            .observe(s"graft_louvain_movers_${level}_$r",
-              count(lit(1)).as("n"))
-          val movers = moversF.transform(ck)
-          val nMovers = moversF.queryExecution
-            .observedMetrics(s"graft_louvain_movers_${level}_$r").getLong(0)
+          val (moversCp, mMovers) = Superstep.step("frontier.round", moversF)
+          val movers = LoopCheckpoint.clampStats(moversCp)
+          val nMovers = mMovers.getLong(0)
           if (nMovers == 0) zeroStreak += 1
           else {
             zeroStreak = 0
@@ -3009,7 +2878,7 @@ object Algorithms {
         }
       }
       proj.select(col("gid"), col("node").as("community"))
-    } // withoutAqe
+    } // scope
   }
 
   /** INCREMENTAL SCC maintenance: fold a batch of new directed edges
@@ -3159,8 +3028,8 @@ object Algorithms {
       .filter(col("a") =!= col("b")).distinct().localCheckpoint()
     val nodes = dirE.select(col("a").as("gid"))
       .unionByName(dirE.select(col("b").as("gid"))).distinct()
-    val width = loopWidth(edges, dirE.count())
-    withoutAqe(edges, Some(width)) {
+    val width = Width.forRows(edges, dirE.count())
+    Superstep.scope(edges, width) {
       var lev = nodes.select(col("gid"), lit(0L).as("lev")).localCheckpoint()
       val nRows = lev.count()
       val small = nRows <= BroadcastStateBound
@@ -3174,21 +3043,18 @@ object Algorithms {
           .join(stateHint(lev.select(col("gid").as("a"), col("lev").as("la")),
             small), Seq("a"))
           .groupBy(col("b").as("gid")).agg(max(col("la") + 1L).as("nl"))
-        val metric = s"graft_dag_changed_$iter"
-        val flagged = lev.join(stateHint(push, small), Seq("gid"), "left")
-          .select(col("gid"),
-            greatest(col("lev"), coalesce(col("nl"), col("lev"))).as("lev"),
-            (greatest(col("lev"), coalesce(col("nl"), col("lev"))) =!= col("lev"))
-              .as("changed"))
-          .observe(metric,
-            coalesce(sum(col("changed").cast("long")), lit(0L)).as("nchanged"))
-        val next = flagged.localCheckpoint()
-        converged =
-          flagged.queryExecution.observedMetrics(metric).getLong(0) == 0L
+        val (next, m) = Superstep.step("frontier.round",
+          lev.join(stateHint(push, small), Seq("gid"), "left")
+            .select(col("gid"),
+              greatest(col("lev"), coalesce(col("nl"), col("lev"))).as("lev"),
+              (greatest(col("lev"), coalesce(col("nl"), col("lev"))) =!= col("lev"))
+                .as("changed")),
+          changedRows)
+        converged = m.getLong(0) == 0L
         lev = next.select(col("gid"), col("lev"))
       }
       lev
-    } // withoutAqe
+    } // scope
   }
 
   /** Temporal earliest-arrival reachability (Wu et al., VLDB 2014):
@@ -3220,8 +3086,8 @@ object Algorithms {
     val e = edges.select(col("a"), col("b"), col("t"))
       .filter(col("a") =!= col("b")).distinct().localCheckpoint()
     val eCnt = e.count()
-    val width = loopWidth(edges, eCnt)
-    withoutAqe(edges, Some(width)) {
+    val width = Width.forRows(edges, eCnt)
+    Superstep.scope(edges, width) {
       var arr = init
         .getOrElse(seeds.select(col("gid"), t0.as("arr")))
         .select(col("gid"), col("arr")).localCheckpoint()
@@ -3247,24 +3113,20 @@ object Algorithms {
         // measured SLOWER — two broadcast-build jobs per round cost
         // more in orchestration than the exchanges they saved, the
         // pageRankLoop economics).
-        val metric = s"graft_tea_changed_$iter"
-        val flagged = arr
+        val (next, m) = Superstep.step("frontier.round", arr
           .join(prop.hint("shuffle_hash"), Seq("gid"), "full")
           .select(col("gid"),
             least(coalesce(col("arr"), col("cand")),
               coalesce(col("cand"), col("arr"))).as("arr"),
             (col("arr").isNull ||
               (col("cand").isNotNull && col("cand") < col("arr")))
-              .as("changed"))
-          .observe(metric,
-            coalesce(sum(col("changed").cast("long")), lit(0L)).as("nchanged"))
-        val next = flagged.localCheckpoint()
-        converged =
-          flagged.queryExecution.observedMetrics(metric).getLong(0) == 0L
+              .as("changed")),
+          changedRows)
+        converged = m.getLong(0) == 0L
         arr = next.select(col("gid"), col("arr"))
       }
       arr
-    } // withoutAqe
+    } // scope
   }
 
   /** Iterative Tarjan over a driver-local adjacency, returning the

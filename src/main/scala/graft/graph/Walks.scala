@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.{Superstep, Width}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -40,8 +41,8 @@ object Walks {
     * indifferent and array_sort fixes the fold order the oracles pin.
     */
   def prepareWalkNbrs(g: Algorithms.AdjGraph): DataFrame = {
-    val width = Algorithms.loopWidth(g.und, g.und.count())
-    Algorithms.withoutAqe(g.und, Some(width)) {
+    val width = Width.forRows(g.und, g.und.count())
+    Superstep.scope(g.und, width) {
       g.und.repartition(width, col("a"))
         .groupBy(col("a").as("na"))
         .agg(array_sort(collect_set(col("b"))).as("nbrs"))
@@ -71,8 +72,8 @@ object Walks {
   private def uniformLoop(und0: DataFrame, nbrs0: Option[DataFrame],
       nodes: DataFrame, steps: Int): DataFrame = {
     require(steps >= 1, s"steps must be >= 1, got $steps")
-    val width = Algorithms.loopWidth(und0, und0.count())
-    Algorithms.withoutAqe(und0, Some(width)) {
+    val width = Width.forRows(und0, und0.count())
+    Superstep.scope(und0, width) {
     // node-keyed sorted adjacency arrays: the argmin over N(cur) runs as
     // ONE fused codegen loop over the array per walker per step
     // ([[graft.functions.UniformWalkPick]]) — no candidate-row
@@ -106,7 +107,7 @@ object Walks {
         .localCheckpoint()
     }
     walks.select(col("walk_id"), col("path"))
-    } // withoutAqe
+    } // scope
   }
 
   /** node2vec-biased walks (Grover & Leskovec 2016): the same
@@ -151,8 +152,8 @@ object Walks {
       p: Double, q: Double): DataFrame = {
     require(steps >= 1, s"steps must be >= 1, got $steps")
     require(p > 0 && q > 0, "p and q must be positive")
-    val width = Algorithms.loopWidth(und0, und0.count())
-    Algorithms.withoutAqe(und0, Some(width)) {
+    val width = Width.forRows(und0, und0.count())
+    Superstep.scope(und0, width) {
     // node-keyed sorted adjacency arrays are the ONLY graph
     // representation the loop touches: the A-ES argmax over N(cur) runs
     // as ONE fused codegen loop per walker per step
@@ -198,6 +199,6 @@ object Walks {
         .localCheckpoint()
     }
     walks.select(col("walk_id"), col("path"))
-    } // withoutAqe
+    } // scope
   }
 }

@@ -64,11 +64,8 @@ object Ntile {
     val (pre, parts) =
       if (numPartitions > 0) (df.localCheckpoint(), numPartitions)
       else {
-        val observed = df.observe("graft_ntile_n", count(lit(1)).as("n"))
-        val cp = observed.localCheckpoint()
-        val rows = observed.queryExecution.observedMetrics("graft_ntile_n")
-          .getLong(0)
-        (cp, graft.graph.Algorithms.loopWidth(df, rows))
+        val (cp, m) = graft.Superstep.step("ntile.input", df)
+        (cp, graft.Width.forRows(df, m.getLong(0)))
       }
     // sorted-order ids: materialize once (two consumers: counts + rows)
     val ranged = pre.repartitionByRange(parts, order: _*)

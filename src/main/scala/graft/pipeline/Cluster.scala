@@ -1051,8 +1051,8 @@ object Cluster {
     val singletons = core.select(col("a").as("gid"))
       .join(mergedGids, Seq("gid"), "left_anti")
       .select(col("gid"), col("gid").as("comp"))
-    val labels = graft.PlanAudit.tap("stream.fold",
-      merged.unionByName(singletons)).localCheckpoint()
+    val (labels, _) = graft.Superstep.step("stream.fold",
+      merged.unionByName(singletons))
     (baseUnd.unionByName(nu), deg, labels)
   }
 }

@@ -452,9 +452,8 @@ object GraphOps {
 
   /** Test seam: [[gCc]] with the driver union-find cutover disabled, so
     * plan-hygiene suites can walk the DISTRIBUTED loop's round plans
-    * without mutating the global `graft.stragglerBound` property (which
-    * would leak the forced path into concurrently running suites —
-    * r13 advisory).
+    * without a global switch (which would leak the forced path into
+    * concurrently running suites — r13 advisory).
     */
   private[graft] def gCcLoop(spark: SparkSession, dir: String): DataFrame = {
     val (nodes, edges) = copurchaseGraph(spark, dir)
@@ -758,9 +757,8 @@ object GraphOps {
     val src = ccDeltaSourceDir(spark, dir)
     var labels = ccBaseCached(spark, dir)
     Streams.replay(spark, src) { b =>
-      labels = graft.PlanAudit.tap("stream.fold",
-          Algorithms.ccIncremental(labels, ccPairEdges(b)))
-        .localCheckpoint()
+      labels = graft.Superstep.step("stream.fold",
+        Algorithms.ccIncremental(labels, ccPairEdges(b)))._1
     }
     val missing = li.select(col("l_partkey").as("gid")).distinct()
       .join(labels.select(col("gid")), Seq("gid"), "left_anti")

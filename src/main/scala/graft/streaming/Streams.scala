@@ -80,19 +80,15 @@ object Streams {
     dir.toString
   }
 
-  /** Scale-adaptive shuffle/state width for a REAL streaming query,
-    * derived from the source's on-disk byte size (guide §2/§6: derive
+  /** Scale-adaptive shuffle/state width for a REAL streaming query:
+    * [[graft.Width.forBytes]] of the source's on-disk size (derive
     * partitioning from input size, never a constant tuned for one
-    * deployment): one partition per ~64 MB of input, clamped to
-    * cluster width. A stateful streaming agg
-    * otherwise opens `spark.sql.shuffle.partitions` state stores PER
-    * TRIGGER — at bench scale that is 32 store open/commit cycles per
-    * trigger for kilobytes of state; at real scale `bytes/target`
-    * exceeds any cluster width and this is simply defaultParallelism.
+    * deployment). A stateful streaming agg otherwise opens
+    * `spark.sql.shuffle.partitions` state stores PER TRIGGER — at bench
+    * scale that is 32 store open/commit cycles per trigger for
+    * kilobytes of state.
     */
   private def streamWidth(spark: SparkSession, sourcePath: String): Int = {
-    val para = spark.sparkContext.defaultParallelism
-    val target = 64L << 20
     val bytes =
       try {
         val p = new org.apache.hadoop.fs.Path(sourcePath)
@@ -102,33 +98,24 @@ object Streams {
         // a source not written yet sizes as unbounded: full width
         case _: java.io.FileNotFoundException => Long.MaxValue
       }
-    math.max(1, math.min(para.toLong, bytes / target + 1L).toInt)
-  }
-
-  /** Run `body` with the session shuffle width pinned to `width`. The
-    * micro-batch engine clones the session at `start()`, so the scoped
-    * value governs every trigger of the query (including its
-    * state-store partition count, which the first batch seals into the
-    * checkpoint) while the restore leaves the session untouched for
-    * the next face.
-    */
-  private def withStreamWidth[T](spark: SparkSession, width: Int)(body: => T): T = {
-    val conf = spark.conf
-    val prev = conf.get("spark.sql.shuffle.partitions", "200")
-    conf.set("spark.sql.shuffle.partitions", width.toString)
-    try body finally conf.set("spark.sql.shuffle.partitions", prev)
+    graft.Width.forBytes(spark, bytes)
   }
 
   /** The one place a streaming query runs: `start` it with the width
     * [[streamWidth]] derives from `sizedBy`, drain every available
     * input, and stop it — also when a batch throws, so no query
-    * outlives its face and the session's width is restored. The stream
-    * faces never start a query themselves; they go through
-    * [[replay]] or [[toMemory]].
+    * outlives its face and the session's width is restored. The
+    * micro-batch engine clones the session at `start()`, so the scoped
+    * width governs every trigger of the query (including its
+    * state-store partition count, which the first batch seals into the
+    * checkpoint) while the restore leaves the session untouched for
+    * the next face. The stream faces never start a query themselves;
+    * they go through [[replay]] or [[toMemory]].
     */
   private def drain(spark: SparkSession, sizedBy: String)(
       start: => org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    withStreamWidth(spark, streamWidth(spark, sizedBy)) {
+    graft.Superstep.withConf(spark,
+        "spark.sql.shuffle.partitions" -> streamWidth(spark, sizedBy).toString) {
       val q = start
       try q.processAllAvailable() finally q.stop()
     }

@@ -100,6 +100,38 @@ class LoopBodyPlanSpec extends SparkSpec with PlanWalk {
     assertClean("drain(pagerank_w)", rounds.filter(_._1 == "drain.fold"))
   }
 
+  test("frontier family: every BFS hop plan is product-free and pruned") {
+    val rounds = captured {
+      queries.GraphOps.gBfs(spark, sf()).collect() }
+    assertClean("frontier(bfs)", rounds.filter(_._1 == "frontier.round"))
+  }
+
+  test("frontier family: every SSSP relaxation plan is product-free and pruned") {
+    // the fit is a per-session view: this is its only caller in the
+    // suite, so the loop runs here
+    val rounds = captured {
+      queries.GraphOps.gSssp(spark, sf()).collect() }
+    assertClean("frontier(sssp)", rounds.filter(_._1 == "frontier.round"))
+  }
+
+  test("peel family: every MIS selection and contraction plan is product-free and pruned") {
+    val rounds = captured {
+      queries.GraphOps.gMis(spark, sf()).collect() }
+    assertClean("peel(mis)", rounds.filter(_._1 == "peel.contract"))
+  }
+
+  test("peel family: every coloring conflict and contraction plan is product-free and pruned") {
+    val rounds = captured {
+      queries.GraphOps.gColoring(spark, sf()).collect() }
+    assertClean("peel(coloring)", rounds.filter(_._1 == "peel.contract"))
+  }
+
+  test("peel family: every k-truss support peel plan is product-free and pruned") {
+    val rounds = captured {
+      queries.GraphOps.gTruss(spark, sf()).collect() }
+    assertClean("peel(truss)", rounds.filter(_._1 == "peel.contract"))
+  }
+
   test("tap self-test: a planted cartesian seen through the tap is reported") {
     // proves the tap → walker path is awake: if productOffenders went
     // vacuous (or the hook stopped capturing), this offender would

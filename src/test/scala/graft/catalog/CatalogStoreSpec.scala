@@ -1,13 +1,12 @@
 package graft.catalog
 
-import java.nio.file.Files
 import graft.lang.Parser
 import org.scalatest.funsuite.AnyFunSuite
 
-class CatalogStoreSpec extends AnyFunSuite {
+class CatalogStoreSpec extends AnyFunSuite with graft.TempDirs {
 
   private def tmpDir(): String =
-    Files.createTempDirectory("graft-cat").toString
+    tempDir("graft-cat").toString
 
   test("snapshot round-trips the full catalog shape") {
     val cat = Parser.parse(

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * uniform construction, Spark's HALF_UP 9dp round of the A-ES key,
   * and the null/dead-end contract.
   */
-class WalkExpressionsSpec extends SparkSpec {
+class WalkExpressionsSpec extends SparkSpec with graft.TempDirs {
 
   /** Random (walk_id, sorted nbrs, prev, pnbrs) rows, including dead
     * ends (empty nbrs), first-step rows (null prev/pnbrs), and
@@ -88,7 +88,7 @@ class WalkExpressionsSpec extends SparkSpec {
   test("picks run inside WholeStageCodegen, not interpreted fallback") {
     // parquet-backed input: over a LocalRelation the whole projection
     // constant-folds at plan time and no codegen stage appears at all
-    val dir = java.nio.file.Files.createTempDirectory("walkpick").toString
+    val dir = tempDir("walkpick").toString
     rows.write.mode("overwrite").parquet(dir)
     val rowsP = spark.read.parquet(dir)
     val plan = rowsP.select(

@@ -3,7 +3,7 @@ package graft.lang
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-class InterpreterSpec extends SparkSpec {
+class InterpreterSpec extends SparkSpec with graft.TempDirs {
 
   private def fresh() = new Interpreter(spark)
   private def sparkPath() = new Interpreter(spark, 0L)
@@ -190,7 +190,7 @@ class InterpreterSpec extends SparkSpec {
   }
 
   test("commit log: executeLogged appends mutations, replayLog reconstructs state") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-wal").toString
+    val dir = tempDir("graft-wal").toString
     val log = graft.store.CommitLog.open(dir)
     val it = fresh()
     it.executeLogged(
@@ -212,7 +212,7 @@ class InterpreterSpec extends SparkSpec {
   }
 
   test("commit log: a CHECK'd schema round-trips through render and replay") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-wal3").toString
+    val dir = tempDir("graft-wal3").toString
     val log = graft.store.CommitLog.open(dir)
     val it = fresh()
     it.executeLogged(
@@ -231,7 +231,7 @@ class InterpreterSpec extends SparkSpec {
   }
 
   test("SHOW and DESCRIBE introspect the catalog and never reach the log") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-wal2").toString
+    val dir = tempDir("graft-wal2").toString
     val log = graft.store.CommitLog.open(dir)
     val it = fresh()
     it.executeLogged(
@@ -305,7 +305,7 @@ class InterpreterSpec extends SparkSpec {
       edgeLabels.map(l => l -> it.edges(l).orderBy("_id").collect().toSeq).toMap)
 
   test("WAL compaction: snapshot + suffix replay ≡ uncompacted replay, bit-identical; log bounded by post-snapshot statements") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString
+    val dir = tempDir("graft-compact").toString
     val pre =
       """CREATE NODE Person (name: string, age: int);
         |CREATE NODE Place (name: string);
@@ -354,7 +354,7 @@ class InterpreterSpec extends SparkSpec {
   }
 
   test("WAL auto-compaction policy keeps the live log under the statement bound") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-autocompact").toString
+    val dir = tempDir("graft-autocompact").toString
     val it = fresh()
     var log = it.bootFrom(dir)
     it.executeLogged("CREATE NODE P (name: string);", log)
@@ -373,7 +373,7 @@ class InterpreterSpec extends SparkSpec {
   }
 
   test("WAL compaction: an unpublished snapshot (no meta.json) is invisible — boot falls back to the full log") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact2").toString
+    val dir = tempDir("graft-compact2").toString
     val it = fresh()
     val log = graft.store.CommitLog.open(dir)
     it.executeLogged(
@@ -398,8 +398,8 @@ class InterpreterSpec extends SparkSpec {
         |INSERT NODE Person (name: 'Jane', age: 25);
         |UPDATE NODE Person SET age: 31 WHERE name: 'John';
         |MATCH Person WHERE name: 'John';""".stripMargin
-    val tDir = java.nio.file.Files.createTempDirectory("graft-wal-t").toString
-    val bDir = java.nio.file.Files.createTempDirectory("graft-wal-b").toString
+    val tDir = tempDir("graft-wal-t").toString
+    val bDir = tempDir("graft-wal-b").toString
     val tLog = CommitLog.open(tDir)
     val bLog = CommitLog.open(bDir, CommitLog.Binary)
     fresh().executeLogged(script, tLog)
@@ -427,8 +427,8 @@ class InterpreterSpec extends SparkSpec {
     import graft.store.CommitLog
     val script = "CREATE NODE D (t: string);\n" +
       "INSERT NODE D (t: 'line one\nline two');"
-    val tDir = java.nio.file.Files.createTempDirectory("graft-wal-ml-t").toString
-    val bDir = java.nio.file.Files.createTempDirectory("graft-wal-ml-b").toString
+    val tDir = tempDir("graft-wal-ml-t").toString
+    val bDir = tempDir("graft-wal-ml-b").toString
     // text: rejected BEFORE any state change (replay poisoning guard)
     val itT = fresh()
     itT.executeScript("CREATE NODE D (t: string);")
@@ -446,7 +446,7 @@ class InterpreterSpec extends SparkSpec {
 
   test("binary commit log: torn header ends replay cleanly; torn body and bad length are corruption") {
     import graft.store.CommitLog
-    val dir = java.nio.file.Files.createTempDirectory("graft-wal-torn")
+    val dir = tempDir("graft-wal-torn")
     def logWith(bytes: Array[Byte]): CommitLog = {
       val p = java.nio.file.Files.createTempFile(dir, "log", ".bin")
       java.nio.file.Files.write(p, bytes)
@@ -476,7 +476,7 @@ class InterpreterSpec extends SparkSpec {
 
   test("binary commit log: auto-compaction counts frames and the rolled generation keeps the format") {
     import graft.store.CommitLog
-    val dir = java.nio.file.Files.createTempDirectory("graft-autocompact-b").toString
+    val dir = tempDir("graft-autocompact-b").toString
     val it = fresh()
     var log = it.bootFrom(dir, CommitLog.Binary)
     assert(log.format === CommitLog.Binary)
@@ -556,7 +556,7 @@ class InterpreterSpec extends SparkSpec {
   }
 
   test("scripted INDEX reaches the catalog layout and survives WAL replay + snapshot boot") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-idx").toString
+    val dir = tempDir("graft-idx").toString
     val it = fresh()
     val log = graft.store.CommitLog.open(dir)
     it.executeLogged("CREATE NODE T (k: int PRIMARY KEY INDEX, v: string INDEX);", log)
@@ -573,7 +573,7 @@ class InterpreterSpec extends SparkSpec {
     assert(replayed.catalog.nodes("T").layout ===
       it.catalog.nodes("T").layout)
     // snapshot boot (catalog.json, NOT log replay) carries it too
-    val snapDir = java.nio.file.Files.createTempDirectory("graft-idx-snap").toString
+    val snapDir = tempDir("graft-idx-snap").toString
     val it2 = fresh()
     val log2 = graft.store.CommitLog.open(snapDir)
     it2.executeLogged("CREATE NODE T (k: int PRIMARY KEY INDEX, v: string INDEX);", log2)
@@ -587,7 +587,7 @@ class InterpreterSpec extends SparkSpec {
   test("generation GC: boot sweeps crashed-compaction partials and out-of-retention debris") {
     import graft.store.{CommitLog, Snapshot}
     import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("graft-gc").toString
+    val dir = tempDir("graft-gc").toString
     val it = fresh()
     var log = CommitLog.open(dir)
     it.executeLogged("CREATE NODE P (v: int);", log)
@@ -624,7 +624,7 @@ class InterpreterSpec extends SparkSpec {
       s"post-compaction sweep left unexpected entries: $names2")
     // keep=2 retains the two newest published generations WITH their
     // suffix logs (the raised-retention / time-travel deployment)
-    val dir2 = Files.createTempDirectory("graft-gc2").toString
+    val dir2 = tempDir("graft-gc2").toString
     val it2 = fresh()
     var l2 = CommitLog.open(dir2)
     it2.executeLogged("CREATE NODE Q (v: int);", l2)
@@ -708,7 +708,7 @@ class InterpreterSpec extends SparkSpec {
   // driver-resident label is a LocalTableScan, read at min(rows, leaf
   // parallelism) slices
   test("statement path shape: labels stay one partition wide, an INSERT EDGE runs one job per endpoint, a MATCH one job") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-shape").toString
+    val dir = tempDir("graft-shape").toString
     val it = sparkPath()
     val log = graft.store.CommitLog.open(dir)
     it.executeLogged(
@@ -742,7 +742,7 @@ class InterpreterSpec extends SparkSpec {
   }
 
   test("endpoint resolution: the smallest surviving id over checkpointed and pending rows; a miss logs nothing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-endpoint").toString
+    val dir = tempDir("graft-endpoint").toString
     val it = fresh()
     val log = graft.store.CommitLog.open(dir)
     // ids: a=1 b=2 c=3; the DELETEs checkpoint the base {b}, and d=4,
@@ -781,7 +781,7 @@ class InterpreterSpec extends SparkSpec {
   }
 
   test("driver-resident labels: INSERT EDGE, UPDATE, DELETE and a single-element MATCH run no job") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-local").toString
+    val dir = tempDir("graft-local").toString
     val it = fresh()
     val log = graft.store.CommitLog.open(dir)
     it.executeLogged(
@@ -808,7 +808,7 @@ class InterpreterSpec extends SparkSpec {
   }
 
   test("bootFrom of a compacted store loads each driver-resident label in at most one job") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-localboot").toString
+    val dir = tempDir("graft-localboot").toString
     val it = fresh()
     val log = graft.store.CommitLog.open(dir)
     it.executeLogged(
@@ -859,7 +859,7 @@ class InterpreterSpec extends SparkSpec {
     def run(budget: Long): (Map[String, Seq[org.apache.spark.sql.Row]],
         Map[String, Seq[org.apache.spark.sql.Row]]) = {
       val it = new Interpreter(spark, budget)
-      val dir = java.nio.file.Files.createTempDirectory("graft-budget").toString
+      val dir = tempDir("graft-budget").toString
       val log = graft.store.CommitLog.open(dir)
       it.executeLogged(
         """CREATE NODE P (name: string, n: int);

@@ -3,7 +3,7 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-class BloomJoinSpec extends SparkSpec {
+class BloomJoinSpec extends SparkSpec with graft.TempDirs {
 
   private def factDim() = {
     import spark.implicits._
@@ -61,7 +61,7 @@ class BloomJoinSpec extends SparkSpec {
     // probe filter away at plan time (ConvertToLocalRelation), hiding
     // the plan shape this test pins
     val (fact0, dim) = factDim()
-    val dir = java.nio.file.Files.createTempDirectory("bloomjoin").toString
+    val dir = tempDir("bloomjoin").toString
     fact0.write.mode("overwrite").parquet(dir)
     val fact = spark.read.parquet(dir)
     val plan = BloomJoin.semiJoin(fact, dim, "k", "dk", expectedItems = 100L)

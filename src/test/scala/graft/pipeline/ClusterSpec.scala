@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-class ClusterSpec extends SparkSpec {
+class ClusterSpec extends SparkSpec with graft.TempDirs {
 
   // two tight groups around (10,0,..) and (0,10,..): ids 1,2 seed one
   // centroid in each group, so Lloyd must separate them in one round
@@ -318,7 +318,7 @@ class ClusterSpec extends SparkSpec {
     val (sub, books, codes0) = Cluster.ivfPqFit(
       emb, "vec_id", "embedding", coarse, m = 4, k = 8, rounds = 2)
     val codes = codes0.localCheckpoint()
-    val path = java.nio.file.Files.createTempDirectory("graft_idx").toString
+    val path = tempDir("graft_idx").toString
     Cluster.saveIvfPqIndex(path, coarse, sub, books, codes)
     val (lc, ls, lb, lcodes) = Cluster.loadIvfPqIndex(spark, path)
     // artifact-level bit identity

@@ -7,10 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * statement-replay integration; this spec pins the byte-level replay
   * contract on randomized entry sequences.
   */
-class CommitLogSpec extends AnyFunSuite {
+class CommitLogSpec extends AnyFunSuite with graft.TempDirs {
 
   private def tmpLog(format: CommitLog.Format): CommitLog = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cl")
+    val dir = tempDir("graft-cl")
     new CommitLog(dir.resolve("commit.log"), format)
   }
 

@@ -4,11 +4,11 @@ import graft.SparkSpec
 import graft.catalog.LayoutSpec
 import org.apache.spark.sql.functions._
 
-class StoreSpec extends SparkSpec {
+class StoreSpec extends SparkSpec with graft.TempDirs {
 
   test("writeTable applies partition/bucket/sort layout") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString + "/t"
+    val dir = tempDir("graft-store").toString + "/t"
     val df = Seq.tabulate(100)(i => (i.toLong, i % 2, s"v$i")).toDF("id", "part", "payload")
     GraphStore.writeTable(df, dir,
       LayoutSpec(partitionBy = Seq("part"), bucketBy = Some((2, Seq("id"))), sortBy = Seq("id")))
@@ -34,7 +34,7 @@ class StoreSpec extends SparkSpec {
 
   test("co-bucketed tables join with no Exchange") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-bucket").toString
+    val base = tempDir("graft-bucket").toString
     val facts = Seq.tabulate(200)(i => (i.toLong % 50, i.toLong, i * 1.5))
       .toDF("key", "seq", "v")
     val dims = Seq.tabulate(50)(i => (i.toLong, s"d$i")).toDF("key", "name")
@@ -66,7 +66,7 @@ class StoreSpec extends SparkSpec {
 
   test("date-partitioned writes prune partitions at the scan") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val base = tempDir("graft-part").toString
     val rows = Seq.tabulate(300)(i =>
       (i.toLong, s"2024-01-${i % 3 + 1}", i * 2.0)).toDF("id", "day", "v")
     rows.write.partitionBy("day").parquet(s"$base/t")
@@ -143,7 +143,7 @@ class StoreSpec extends SparkSpec {
       "CREATE NODE P (name: string NOT NULL, age: int, score: float, ok: bool);")
       .foldLeft(graft.catalog.GraphCatalog.empty)(Ddl.apply)
     val nt = cat.nodes("P")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ingest").toString
+    val dir = tempDir("graft-ingest").toString
     import spark.implicits._
     val df = Seq((1L, "a", 30L, 1.5, true), (2L, "b", 25L, 2.5, false))
       .toDF("_id", "name", "age", "score", "ok")
@@ -204,7 +204,7 @@ class StoreSpec extends SparkSpec {
   test("DNF CHECK violation predicate pushes to the parquet scan (CNF of complements)") {
     import spark.implicits._
     import graft.lang.Ast.{CheckCmp, CmpOp, Literal, LitKind}
-    val base = java.nio.file.Files.createTempDirectory("graft-checkpush").toString
+    val base = tempDir("graft-checkpush").toString
     // CHECK (disc <= 0.05 AND qty < 30 OR qty >= 45):
     //   rows 1-3 satisfy one disjunct each; row 4 fails both -> violates
     Seq((1L, 10.0, 0.02), (2L, 50.0, 0.09), (3L, 20.0, 0.05),
