@@ -4,9 +4,15 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import graft.catalog.{Ddl, GraphCatalog, Types}
 import graft.store.GraphStore
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{And, BoundReference, EqualNullSafe,
+  Expression, InterpretedPredicate, InterpretedProjection, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 final case class ExecError(msg: String) extends RuntimeException(msg)
 
@@ -18,32 +24,33 @@ final case class ExecError(msg: String) extends RuntimeException(msg)
   * Differences from the reference, deliberate:
   *  - values are coerced to the catalog's types at insert (the reference
   *    stores number literals as raw strings, server.go:570);
-  *  - UPDATE/DELETE/MATCH compile to Catalyst plans (projection /
-  *    filter) over the label's DataFrame instead of driver-side map
-  *    loops, so one evaluator serves every table size;
-  *  - a label keeps its rows on the driver, and serves them as one
-  *    LocalRelation, while every such label's rows fit one byte budget
-  *    together ([[Interpreter.driverBudget]], 2 MiB of
-  *    [[Interpreter.rowBytes]] estimates, placed where measured
-  *    statement latency favours Spark). Catalyst's
-  *    `ConvertToLocalRelation` folds an UPDATE's projection, a DELETE's or MATCH's filter and an
-  *    endpoint's ordered take of one row into the relation, so those
-  *    statements run no Spark job: a mutation collects its folded plan
-  *    back into rows, and an INSERT appends to them. The rows serve with
-  *    the catalog's schema, each field nullable if the catalog or the
-  *    plan they came from says so: a folded `when(true, 5)` is
-  *    non-nullable, yet a later insert may omit that field. A label
-  *    must stay ONE relation: a union of two runs a job;
+  *  - UPDATE/DELETE/MATCH build each WHERE and SET once as a Catalyst
+  *    expression over a field reference, each literal typed as its field
+  *    (a null too), so one builder serves every table size;
+  *  - a label keeps its rows on the driver, as Catalyst rows, while
+  *    every such label's rows fit one byte budget together
+  *    ([[Interpreter.driverBudget]], 2 MiB of [[Interpreter.rowBytes]]
+  *    estimates, placed where measured statement latency favours
+  *    Spark). There the references bind to ordinals and Catalyst's
+  *    interpreted evaluators run the statement over the rows, so an
+  *    UPDATE, a DELETE or an INSERT EDGE endpoint plans no query, runs
+  *    no job and compiles no code. A single-element MATCH filters and
+  *    projects on the driver too, and returns one LocalRelation of the
+  *    result, whose collect is its one query. Rows are never changed in
+  *    place, so a frame once returned is a snapshot. They serve with the
+  *    catalog's schema, every property nullable: an UPDATE may set null
+  *    where the catalog says NOT NULL;
   *  - a label whose rows would push the total past the budget moves
-  *    once, for good, to a Spark table. INSERTs buffer driver-side
+  *    once, for good, to a Spark table, and the same expressions run
+  *    there as `Column`s. INSERTs buffer driver-side
   *    and merge in one batch per label. A batch is one slice, and the merge coalesces back to
   *    the width the label already has: 1 for a table built by
   *    statements, the read's split count for one loaded from a
   *    snapshot. Statements never widen a label. A mutation checkpoints,
   *    so the plan does not grow with script length;
-  *  - an INSERT EDGE endpoint resolves with an ordered take of one row
-  *    (`TakeOrderedAndProject`): on a Spark table that is one job, where
-  *    a `min` aggregate runs two under adaptive execution;
+  *  - an INSERT EDGE endpoint on a Spark table resolves with an ordered
+  *    take of one row (`TakeOrderedAndProject`): one job, where a `min`
+  *    aggregate runs two under adaptive execution;
   *  - `compact` writes each label as parquet (a driver-resident label
   *    as one file; its rows stay the live state), and `bootFrom` loads
   *    each snapshot label whose files fit the budget left with one
@@ -62,21 +69,23 @@ final class Interpreter private[graft] (spark: SparkSession, driverBytes: Long) 
   private var cat: GraphCatalog = GraphCatalog.empty
   def catalog: GraphCatalog = cat
 
+  /** A field reference: by name on the Spark path, bound to the field's
+    * ordinal on the driver. A statement's condition is built once over it.
+    */
+  private type Ref = String => Expression
+  private val named: Ref = UnresolvedAttribute.quoted
+
   /** One label's rows: on the driver while every label's driver rows
     * fit `driverBytes`, else a Spark table. A label that would push the
     * total past the budget moves to Spark once and stays there.
     */
   private final class LabelState(var schema: StructType) {
-    /** Driver-resident rows, or `None` once the label lives in Spark. */
-    private var rows: Option[mutable.ArrayBuffer[Row]] = Some(mutable.ArrayBuffer.empty)
+    /** Driver-resident rows, or `None` once the label lives in Spark.
+      * Never changed in place, so a frame served over them is a snapshot.
+      */
+    private var rows: Option[Vector[InternalRow]] = Some(Vector.empty)
     /** [[Interpreter.rowBytes]] summed over `rows`; 0 in Spark. */
     var bytes = 0L
-    /** The schema `rows` are served with: the catalog's, with every
-      * field nullable that the plan they were collected from says may
-      * be null. A folded `when(true, 5)` is non-nullable, so serving
-      * the folded schema would reject or misread a later insert's null.
-      */
-    private var rowSchema = schema
     /** The LocalRelation over `rows`, rebuilt after they change. */
     private var served: Option[DataFrame] = None
     /** The Spark table, once `rows` is `None`. */
@@ -85,35 +94,51 @@ final class Interpreter private[graft] (spark: SparkSession, driverBytes: Long) 
       * `mutate` is narrow, so it keeps the width.
       */
     private var width = 1
-    val pending = mutable.ArrayBuffer.empty[Row]
+    val pending = mutable.ArrayBuffer.empty[InternalRow]
 
     /** Bytes left for this label's rows: the budget less every other
       * label's.
       */
     private def room: Long = driverBytes - residentBytes + bytes
 
+    /** The schema driver rows serve with: the catalog's, with every
+      * property nullable, since an UPDATE may set null where the catalog
+      * says NOT NULL.
+      */
+    private def rowSchema: StructType = StructType(schema.fields.map(f =>
+      if (Interpreter.keys(f.name)) f else f.copy(nullable = true)))
+
+    private def bound(name: String): Expression = {
+      val i = schema.fieldIndex(name)
+      BoundReference(i, schema(i).dataType, nullable = true)
+    }
+
     /** Keep `rs`, of `b` estimated bytes, on the driver if they fit
       * `room`; else move them to a one-slice Spark table for good.
       */
-    private def hold(rs: mutable.ArrayBuffer[Row], b: Long): Unit = {
+    private def hold(rs: Vector[InternalRow], b: Long): Unit = {
       if (b <= room) { rows = Some(rs); bytes = b }
       else {
-        df = spark.createDataFrame(
-          spark.sparkContext.parallelize(rs.toSeq, 1), rowSchema)
+        df = Bridge.rddFrame(spark, spark.sparkContext.parallelize(rs, 1), rowSchema)
         rows = None; bytes = 0
       }
       served = None
     }
 
-    /** Take the rows `out` collects (no job when Catalyst folds it into
-      * a LocalRelation) as the driver-resident state, served with the
-      * nullability of `next` and of `out`.
+    private def keep(rs: Vector[InternalRow]): Unit =
+      hold(rs, rs.iterator.map(Interpreter.rowBytes(_, schema)).sum)
+
+    /** The driver rows with every buffered INSERT appended (which may
+      * move them to Spark), or `None` once the label lives in Spark.
       */
-    private def keep(out: DataFrame, next: StructType): Unit = {
-      val rs = mutable.ArrayBuffer.from(out.collect())
-      rowSchema = StructType(next.fields.map(f =>
-        f.copy(nullable = f.nullable || out.schema(f.name).nullable)))
-      hold(rs, rs.iterator.map(Interpreter.rowBytes).sum)
+    private def local(): Option[Vector[InternalRow]] = {
+      for (rs <- rows if pending.nonEmpty) {
+        val b = pending.iterator.map(Interpreter.rowBytes(_, schema)).sum
+        val all = rs ++ pending
+        pending.clear()
+        hold(all, bytes + b)
+      }
+      rows
     }
 
     /** Point a Spark-resident label at its snapshot table, keeping the
@@ -138,8 +163,8 @@ final class Interpreter private[graft] (spark: SparkSession, driverBytes: Long) 
         .map(java.nio.file.Files.size).sum finally files.close()
       if (onDisk <= room) {
         val most = room / Interpreter.rowBytes(Row.fromSeq(schema.map(_ => null)))
-        keep(spark.read.schema(schema).parquet(path.toString).limit(
-          math.min(most + 1, Int.MaxValue.toLong).toInt), schema)
+        keep(Interpreter.collectRows(spark.read.schema(schema).parquet(path.toString)
+          .limit(math.min(most + 1, Int.MaxValue.toLong).toInt)))
       } else rows = None
       repoint(path)
     }
@@ -152,39 +177,89 @@ final class Interpreter private[graft] (spark: SparkSession, driverBytes: Long) 
       if (rows.isDefined) table.coalesce(1) else table
     }
 
-    def materialize(): DataFrame = {
-      // an INSERT batch appends to driver rows, and may push them past
-      // the budget
-      for (rs <- rows if pending.nonEmpty) {
-        val b = pending.iterator.map(Interpreter.rowBytes).sum
-        rs ++= pending
-        pending.clear()
-        hold(rs, bytes + b)
-      }
-      rows match {
-        case Some(rs) =>
-          if (served.isEmpty) served = Some(spark.createDataFrame(rs.asJava, rowSchema))
-          served.get
-        case None =>
-          if (pending.nonEmpty) {
-            val batch = spark.createDataFrame(
-              spark.sparkContext.parallelize(pending.toSeq, 1), schema)
-            df = df.unionByName(batch).coalesce(width)
-            pending.clear()
-          }
-          df
-      }
+    def materialize(): DataFrame = local() match {
+      case Some(rs) =>
+        if (served.isEmpty) served = Some(Bridge.localFrame(spark, rowSchema, rs))
+        served.get
+      case None =>
+        if (pending.nonEmpty) {
+          val batch = Bridge.rddFrame(spark,
+            spark.sparkContext.parallelize(pending.toSeq, 1), schema)
+          df = df.unionByName(batch).coalesce(width)
+          pending.clear()
+        }
+        df
     }
 
-    /** Replace state with a transformed DF whose rows have schema `next`.
-      * Driver rows collect it back; a Spark table checkpoints it to keep
-      * the plan from growing linearly with script length. The schema
-      * changes only once that succeeds.
+    /** UPDATE: each of `sets` takes its value where `cond` holds. A Spark
+      * table checkpoints, so the plan does not grow with script length.
       */
-    def mutate(f: DataFrame => DataFrame, next: StructType = schema): Unit = {
+    def update(cond: Ref => Expression, sets: Map[String, Expression]): Unit =
+      local() match {
+        case Some(rs) =>
+          val c = cond(bound)
+          val next = new InterpretedProjection(schema.fieldNames.toSeq.map(n =>
+            sets.get(n).fold(bound(n))(GraphStore.updated(c, _, bound(n)))))
+          keep(rs.map(next))
+        case None =>
+          df = GraphStore.updateWhere(materialize(), Bridge.column(cond(named)),
+            sets.map { case (n, v) => n -> Bridge.column(v) }).localCheckpoint()
+      }
+
+    /** DELETE: drop the rows where `cond` holds. */
+    def delete(cond: Ref => Expression): Unit = local() match {
+      case Some(rs) =>
+        val kept = InterpretedPredicate(GraphStore.kept(cond(bound)))
+        keep(rs.filter(kept.eval))
+      case None =>
+        df = GraphStore.deleteWhere(materialize(), Bridge.column(cond(named)))
+          .localCheckpoint()
+    }
+
+    /** The rows where `cond` holds, projected on `ret` (every field when
+      * empty). On the driver that is one LocalRelation of the matching
+      * rows; a `ret` naming no field goes to Spark's `select`, which
+      * resolves or rejects it.
+      */
+    def select(cond: Ref => Expression, ret: Seq[String]): DataFrame = local() match {
+      case Some(rs) if ret.forall(schema.fieldNames.contains) =>
+        val hit = InterpretedPredicate(cond(bound))
+        val out = rs.filter(hit.eval)
+        if (ret.isEmpty) Bridge.localFrame(spark, rowSchema, out)
+        else Bridge.localFrame(spark, StructType(ret.map(rowSchema(_))),
+          out.map(new InterpretedProjection(ret.map(bound))))
+      case _ =>
+        val hit = materialize().filter(Bridge.column(cond(named)))
+        if (ret.nonEmpty) hit.select(ret.map(col): _*) else hit
+    }
+
+    /** The smallest `_id` where `cond` holds. On Spark, an ordered take of
+      * one row runs one job; a `min` aggregate runs two under AQE.
+      */
+    def firstId(cond: Ref => Expression): Option[Long] = local() match {
+      case Some(rs) =>
+        val hit = InterpretedPredicate(cond(bound))
+        rs.iterator.filter(hit.eval).map(_.getLong(0)).minOption
+      case None =>
+        materialize().filter(Bridge.column(cond(named))).select(col("_id"))
+          .orderBy(col("_id")).limit(1).collect().headOption.map(_.getLong(0))
+    }
+
+    /** A schema migration: replace state with a transformed DF whose rows
+      * have schema `next`. Driver rows collect it back (no job: Catalyst
+      * folds it into its LocalRelation); a Spark table checkpoints it.
+      * The schema changes only once that succeeds.
+      */
+    def mutate(f: DataFrame => DataFrame, next: StructType): Unit = {
       val out = f(materialize())
-      if (rows.isDefined) keep(out, next) else df = out.localCheckpoint()
-      schema = next
+      if (rows.isDefined) {
+        val rs = Interpreter.collectRows(out)
+        schema = next
+        keep(rs)
+      } else {
+        df = out.localCheckpoint()
+        schema = next
+      }
     }
   }
 
@@ -320,10 +395,23 @@ final class Interpreter private[graft] (spark: SparkSession, driverBytes: Long) 
     }
   }
 
-  private def whereCond(label: String, props: Seq[Ast.Property], isNode: Boolean): Column =
-    props.foldLeft(lit(true)) { (acc, p) =>
-      acc && (col(p.name) <=> lit(coerce(p.value, fieldType(label, p.name, isNode))))
-    }
+  /** `p`'s value as a literal of its field's Spark type, a null too, so
+    * no comparison or SET with it needs the analyzer's coercion.
+    */
+  private def typed(label: String, p: Ast.Property, isNode: Boolean): Literal = {
+    val tpe = fieldType(label, p.name, isNode)
+    Literal.create(coerce(p.value, tpe), Types.toSpark(tpe))
+  }
+
+  /** A WHERE's null-safe equalities as one predicate over a [[Ref]].
+    * Every field and literal is checked here, before any state changes.
+    */
+  private def whereCond(label: String, props: Seq[Ast.Property],
+      isNode: Boolean): Ref => Expression = {
+    val lits = props.map(p => p.name -> typed(label, p, isNode))
+    field => lits.map { case (n, v) => EqualNullSafe(field(n), v): Expression }
+      .reduceOption(And).getOrElse(Literal.TrueLiteral)
+  }
 
   // ----------------------------------------------------------- execute
 
@@ -354,7 +442,7 @@ final class Interpreter private[graft] (spark: SparkSession, driverBytes: Long) 
       }
       enforceChecks(label, nt.fields,
         nt.fields.map(_.name).zip(values).toMap, isNode = true)
-      st.pending += Row.fromSeq(nextIdValue() +: values)
+      st.pending += Interpreter.internalRow(nextIdValue() +: values)
       None
 
     case Ast.InsertEdge(label, fromRef, toRef, props) =>
@@ -383,31 +471,21 @@ final class Interpreter private[graft] (spark: SparkSession, driverBytes: Long) 
       }
       enforceChecks(label, et.props,
         et.props.map(_.name).zip(values).toMap, isNode = false)
-      st.pending += Row.fromSeq(Seq(nextIdValue(), src, dst) ++ values)
+      st.pending += Interpreter.internalRow(Seq(nextIdValue(), src, dst) ++ values)
       None
 
     case Ast.UpdateNode(label, set, where) =>
-      val st = stateOf(label, isNode = true)
-      val sets = set.map(p =>
-        p.name -> lit(coerce(p.value, fieldType(label, p.name, isNode = true)))).toMap
-      st.mutate(GraphStore.updateWhere(_, whereCond(label, where, isNode = true), sets))
-      None
+      update(label, set, where, isNode = true); None
 
     case Ast.UpdateEdge(label, set, where) =>
-      val st = stateOf(label, isNode = false)
-      val sets = set.map(p =>
-        p.name -> lit(coerce(p.value, fieldType(label, p.name, isNode = false)))).toMap
-      st.mutate(GraphStore.updateWhere(_, whereCond(label, where, isNode = false), sets))
-      None
+      update(label, set, where, isNode = false); None
 
     case Ast.DeleteNode(label, where) =>
-      stateOf(label, isNode = true)
-        .mutate(GraphStore.deleteWhere(_, whereCond(label, where, isNode = true)))
+      stateOf(label, isNode = true).delete(whereCond(label, where, isNode = true))
       None
 
     case Ast.DeleteEdge(label, where) =>
-      stateOf(label, isNode = false)
-        .mutate(GraphStore.deleteWhere(_, whereCond(label, where, isNode = false)))
+      stateOf(label, isNode = false).delete(whereCond(label, where, isNode = false))
       None
 
     case Ast.Match(pattern, where, ret) =>
@@ -423,25 +501,24 @@ final class Interpreter private[graft] (spark: SparkSession, driverBytes: Long) 
       pattern.foreach { el =>
         if (!cat.nodes.contains(el.tpe)) throw ExecError(s"unknown node type: ${el.tpe}")
       }
-      val dfs = pattern.map { el =>
-        val nt = cat.nodes(el.tpe)
-        if (where.exists(p => nt.field(p.name).isEmpty)) {
-          if (pattern.sizeIs == 1)
-            throw ExecError(s"unknown field '${where.find(p => nt.field(p.name).isEmpty).get.name}' on ${el.tpe}")
-          None // this element cannot match; others still can
-        } else Some(nodes(el.tpe).filter(whereCond(el.tpe, where, isNode = true)))
-      }
-      val df =
-        if (pattern.sizeIs == 1) dfs.head.get // single element: schema untouched
-        else {
-          val labelled = pattern.zip(dfs).collect { case (el, Some(d)) =>
-            d.withColumn("_label", lit(el.tpe))
-          }
-          if (labelled.isEmpty)
-            throw ExecError("WHERE references fields absent from every pattern element")
-          labelled.reduce(_.unionByName(_, allowMissingColumns = true))
+      val missing = pattern.map(el => where.find(p => cat.nodes(el.tpe).field(p.name).isEmpty))
+      if (pattern.sizeIs == 1) {
+        // single element: schema untouched, RETURN projected with it
+        missing.head.foreach(p => throw ExecError(s"unknown field '${p.name}' on ${pattern.head.tpe}"))
+        val el = pattern.head.tpe
+        Some(stateOf(el, isNode = true).select(whereCond(el, where, isNode = true), ret))
+      } else {
+        // an element missing a WHERE field cannot match; others still can
+        val labelled = pattern.zip(missing).collect { case (el, None) =>
+          stateOf(el.tpe, isNode = true)
+            .select(whereCond(el.tpe, where, isNode = true), Nil)
+            .withColumn("_label", lit(el.tpe))
         }
-      Some(if (ret.nonEmpty) df.select(ret.map(col): _*) else df)
+        if (labelled.isEmpty)
+          throw ExecError("WHERE references fields absent from every pattern element")
+        val df = labelled.reduce(_.unionByName(_, allowMissingColumns = true))
+        Some(if (ret.nonEmpty) df.select(ret.map(col): _*) else df)
+      }
 
     case Ast.Show(showEdges) =>
       import spark.implicits._
@@ -671,14 +748,23 @@ final class Interpreter private[graft] (spark: SparkSession, driverBytes: Long) 
       edgeState.getOrElseUpdate(label, new LabelState(edgeSchema(label)))
     }
 
+  /** UPDATE: the SET literals and the WHERE, each checked and typed
+    * before the label changes.
+    */
+  private def update(label: String, set: Seq[Ast.Property], where: Seq[Ast.Property],
+      isNode: Boolean): Unit = {
+    val st = stateOf(label, isNode)
+    val sets = set.map(p => p.name -> (typed(label, p, isNode): Expression)).toMap
+    st.update(whereCond(label, where, isNode), sets)
+  }
+
   /** Endpoint resolution (reference server.go:745 findNodeID): by id, or
     * smallest-id row matching the property equalities (deterministic
-    * where the reference takes map-iteration order). The ordered take
-    * of one row runs one job; a `min` aggregate runs two under AQE.
+    * where the reference takes map-iteration order).
     */
   private def findNodeId(ref: Ast.NodeRef): Long = {
-    val df = nodes(ref.nodeType)
-    val matched = ref.id match {
+    val st = stateOf(ref.nodeType, isNode = true)
+    val cond: Ref => Expression = ref.id match {
       case Some(idLit) =>
         // graft node ids are longs; a non-numeric id ref is a statement
         // error, not a NumberFormatException from the bowels
@@ -686,12 +772,10 @@ final class Interpreter private[graft] (spark: SparkSession, driverBytes: Long) 
           case _: NumberFormatException =>
             throw ExecError(s"node id must be an integer, got '${idLit.text}'")
         }
-        df.filter(col("_id") === lit(id))
-      case None => df.filter(whereCond(ref.nodeType, ref.properties, isNode = true))
+        field => EqualNullSafe(field("_id"), Literal(id))
+      case None => whereCond(ref.nodeType, ref.properties, isNode = true)
     }
-    val rows = matched.select(col("_id")).orderBy(col("_id")).limit(1).collect()
-    if (rows.isEmpty) throw ExecError(s"no matching ${ref.nodeType} node found")
-    rows(0).getLong(0)
+    st.firstId(cond).getOrElse(throw ExecError(s"no matching ${ref.nodeType} node found"))
   }
 
   private def inferLiteral(raw: String): Ast.Literal =
@@ -779,18 +863,36 @@ final class Interpreter private[graft] (spark: SparkSession, driverBytes: Long) 
 }
 
 object Interpreter {
-  /** Estimated heap bytes of one driver row: the `Row` and its value
+  /** The key columns of a label's rows, never null. */
+  private val keys = Set("_id", "_src", "_dst")
+
+  /** A driver row of the catalog values `vs`. */
+  private def internalRow(vs: Seq[Any]): InternalRow =
+    InternalRow.fromSeq(vs.map(CatalystTypeConverters.convertToCatalyst))
+
+  /** `df`'s rows, collected and converted to Catalyst rows. */
+  private def collectRows(df: DataFrame): Vector[InternalRow] = {
+    val toRow = CatalystTypeConverters.createToCatalystConverter(df.schema)
+    df.collect().iterator.map(toRow(_).asInstanceOf[InternalRow]).toVector
+  }
+
+  /** Estimated heap bytes of one driver row: the row and its value
     * array, a boxed value per set field, and a string's or binary's
-    * payload at its length (two bytes a char). Its LocalRelation holds a
-    * converted copy of about the same size.
+    * payload at its length (two bytes a char).
     */
-  private[graft] def rowBytes(r: Row): Long = {
-    var b = 32L + 4L * r.length
+  private[graft] def rowBytes(r: Row): Long = bytes(r.length, r.get)
+
+  private def rowBytes(r: InternalRow, schema: StructType): Long =
+    bytes(schema.length, i => if (r.isNullAt(i)) null else r.get(i, schema(i).dataType))
+
+  private def bytes(n: Int, value: Int => Any): Long = {
+    var b = 32L + 4L * n
     var i = 0
-    while (i < r.length) {
-      b += (r.get(i) match {
+    while (i < n) {
+      b += (value(i) match {
         case null => 0L
         case s: String => 40L + 2L * s.length
+        case s: UTF8String => 40L + 2L * s.numChars
         case a: Array[Byte] => 16L + a.length
         case _ => 24L
       })
@@ -800,15 +902,17 @@ object Interpreter {
   }
 
   /** [[rowBytes]] all labels together keep on the driver: 2 MiB.
-    * Measured with the test-scope `graft.lang.BudgetProbe` (`-Xmx2g`, `local[4]`, one label of
-    * `(long, string, long)` rows): an UPDATE or DELETE over driver rows
-    * costs about 20 ms plus 2 µs a row, one over a Spark table 50 to
-    * 100 ms whatever the size, so the driver stops winning at 15k to
-    * 20k rows of 7-char names (2.1 to 2.8 MiB estimated) and at about
-    * 20k rows of 100-char names (6.3 MiB). A MATCH wins further out.
-    * 2 MiB stays at or below every crossover measured. The rows retain
-    * about 2.3 times their estimate (both copies), about 5 MB, under 1%
-    * of the least heap a Spark driver starts with.
+    * Measured with the test-scope `graft.lang.BudgetProbe` (`-Xmx2g`,
+    * `local[4]`, one label of `(long, string, long)` rows, 7-char
+    * names): an UPDATE over driver rows costs about 2 ms plus 0.17 µs a
+    * row (2.7 ms at 10k rows, 7.7 at 50k, 36 at 200k), a DELETE about
+    * 2 ms plus 0.12 µs a row (25 ms at 200k); over a Spark table an
+    * UPDATE costs 70 to 180 ms and a DELETE 50 to 90 ms at those sizes.
+    * The driver still wins at 200k rows (28 MiB estimated, about 40 MB
+    * retained), and by extrapolation stops winning at roughly 500k to
+    * 700k rows. The budget was placed at 2 MiB when driver statements
+    * planned a query each (a crossover at 15k to 20k rows); it stays
+    * there until a workload with a label near it can measure a move.
     */
   private[graft] val driverBudget: Long = 2L << 20
 }

@@ -1,7 +1,9 @@
 package graft.store
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{CaseWhen, Coalesce, Expression, Literal, Not}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Mutation surface of the engine, re-expressed as pure DataFrame
   * transforms (reference: /root/reference/server/server.go:530-720 — the
@@ -27,19 +29,32 @@ object GraphStore {
     base.unionByName(withDefaults.select(base.columns.map(col).toSeq: _*))
   }
 
-  /** UPDATE ... WHERE — update-as-projection: every SET column becomes
-    * `when(cond, newValue).otherwise(old)`. One scan, zero shuffles.
+  /** One SET column's next value: `value` where `cond` holds, else
+    * `old`. The statement interpreter evaluates it over driver rows as
+    * well, with `cond` and `old` bound to ordinals.
     */
-  def updateWhere(base: DataFrame, cond: Column, sets: Map[String, Column]): DataFrame =
-    sets.foldLeft(base) { case (df, (name, v)) =>
-      df.withColumn(name, when(cond, v).otherwise(col(name)))
-    }
+  def updated(cond: Expression, value: Expression, old: Expression): Expression =
+    CaseWhen(Seq(cond -> value), old)
+
+  /** The rows a DELETE keeps: those where `cond` is false or null. */
+  def kept(cond: Expression): Expression = Not(Coalesce(Seq(cond, Literal.FalseLiteral)))
+
+  /** UPDATE ... WHERE — update-as-projection: every SET column becomes
+    * [[updated]]. One projection, so every SET and the condition read the
+    * row as it was; one scan, zero shuffles.
+    */
+  def updateWhere(base: DataFrame, cond: Column, sets: Map[String, Column]): DataFrame = {
+    val c = Bridge.expression(cond)
+    base.withColumns(sets.map { case (name, v) =>
+      name -> Bridge.column(updated(c, Bridge.expression(v), Bridge.expression(col(name))))
+    })
+  }
 
   /** DELETE ... WHERE — delete-as-filter (keep the anti-predicate; null
     * predicate rows are kept, matching SQL DELETE semantics).
     */
   def deleteWhere(base: DataFrame, cond: Column): DataFrame =
-    base.filter(!coalesce(cond, lit(false)))
+    base.filter(Bridge.column(kept(Bridge.expression(cond))))
 
   /** Upsert by key: batch rows replace same-key base rows, new keys
     * append. Anti-join + union — one shuffle on the key.

@@ -704,6 +704,34 @@ class InterpreterSpec extends SparkSpec with graft.TempDirs {
     jobs.get
   }
 
+  /** SQL executions `body` starts and generated classes it compiles.
+    * Executions are counted by a `QueryExecutionListener`, with the
+    * listener bus drained before and after as in [[jobsOf]].
+    */
+  private def sqlOf(body: => Unit): (Int, Long) = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.graftbridge.Bridge
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sc = spark.sparkContext
+    val execs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        execs.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        execs.incrementAndGet()
+    }
+    Bridge.flushListenerBus(sc, 10000)
+    spark.listenerManager.register(listener)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    try body
+    finally {
+      Bridge.flushListenerBus(sc, 10000)
+      spark.listenerManager.unregister(listener)
+    }
+    (execs.get, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles)
+  }
+
   // budget 0 keeps every label on the Spark path this test pins: a
   // driver-resident label is a LocalTableScan, read at min(rows, leaf
   // parallelism) slices
@@ -797,9 +825,17 @@ class InterpreterSpec extends SparkSpec with graft.TempDirs {
       "DELETE" -> (() => it.executeLogged("DELETE NODE P WHERE name: 'a5';", log)),
       "MATCH" -> (() => it.executeLogged("MATCH P WHERE n: 10;", log).get.collect()))
     for ((name, step) <- steps) {
-      val jobs = jobsOf { step(); () }
+      var execs = 0
+      val jobs = jobsOf { execs = sqlOf { step(); () }._1 }
       assert(jobs === 0, s"$name ran $jobs jobs")
+      // only the MATCH's collect plans a query
+      assert(execs === (if (name == "MATCH") 1 else 0), s"$name started $execs SQL executions")
     }
+    // an UPDATE's numeric literals reach no generated code: the driver
+    // evaluates its projection interpreted
+    val (execs, compiled) = sqlOf((1 to 10).foreach(r =>
+      it.executeLogged(s"UPDATE NODE P SET n: ${100 + r} WHERE n: ${r - 1};", log)))
+    assert((execs, compiled) === ((0, 0L)))
     assert(it.executeScript("MATCH P WHERE n: 10;").get.collect().map(_.getAs[String]("name"))
       .toSeq === Seq("a1"))
     assert(it.edges("E").orderBy("_id").collect()
@@ -908,5 +944,44 @@ class InterpreterSpec extends SparkSpec with graft.TempDirs {
     assert(updateJobs(it, "R") > 0)
     assert(updateJobs(it, "Q") === 0)
     assert(Seq("P", "Q", "R").map(it.nodes(_).count()) === Seq(3L, 1L, 1L))
+  }
+
+  test("a MATCH or nodes frame is a snapshot: a later INSERT, UPDATE or DELETE leaves it as it was") {
+    for ((path, it) <- Seq("budget 0" -> sparkPath(), "default" -> fresh())) {
+      it.executeScript(
+        """CREATE NODE P (name: string, n: int);
+          |INSERT NODE P (name: 'a', n: 1);
+          |INSERT NODE P (name: 'b', n: 2);""".stripMargin)
+      def names(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.getAs[String]("name")).sorted.toSeq
+      val frames = Seq(
+        "INSERT NODE P (name: 'c', n: 1);",
+        "UPDATE NODE P SET name: 'z' WHERE n: 1;",
+        "DELETE NODE P WHERE n: 2;").map { stmt =>
+        val taken = (it.executeScript("MATCH P WHERE n: 1;").get, it.nodes("P"))
+        it.executeScript(stmt)
+        it.nodes("P") // serve a buffered INSERT
+        taken
+      }
+      // neither frame is collected before its statement runs
+      assert(frames.map { case (m, all) => (names(m), names(all)) } === Seq(
+        (Seq("a"), Seq("a", "b")),
+        (Seq("a", "c"), Seq("a", "b", "c")),
+        (Seq("z", "z"), Seq("b", "z", "z"))), path)
+      assert(names(it.nodes("P")) === Seq("z", "z"), path)
+    }
+  }
+
+  test("an UPDATE's SETs and WHERE all read the row as it was") {
+    for ((path, it) <- Seq("budget 0" -> sparkPath(), "default" -> fresh())) {
+      it.executeScript(
+        """CREATE NODE P (name: string, n: int, m: int);
+          |INSERT NODE P (name: 'a', n: 1, m: 1);
+          |INSERT NODE P (name: 'b', n: 2, m: 2);
+          |UPDATE NODE P SET n: 5, m: 5, name: 'x' WHERE n: 1;""".stripMargin)
+      val got = it.nodes("P").orderBy("_id").collect()
+        .map(r => (r.getAs[String]("name"), r.getAs[Long]("n"), r.getAs[Long]("m"))).toSeq
+      assert(got === Seq(("x", 5L, 5L), ("b", 2L, 2L)), path)
+    }
   }
 }
