@@ -1,4 +1,7 @@
 package graft
+
+import scala.util.control.NonFatal
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -55,18 +58,18 @@ object Bench {
     }
     warmDir.foreach { wd =>
       selected.foreach { case (_, fn) =>
-        try { fn(spark, wd).count() } catch { case _: Throwable => () }
+        try { fn(spark, wd).count() } catch { case NonFatal(_) => () }
         dropPersisted()
       }
     }
     // materialized views for the TARGET dir are load-time work, not any
     // single query's cost
     try { graft.queries.GraphOps.warmViews(spark, sfDir) }
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     try { graft.queries.Relational.warmViews(spark, sfDir) }
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     try { graft.queries.Pipeline.warmViews(spark, sfDir) }
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     // the shared VM shows occasional 5-10× single-query stalls with zero
     // code difference (neighbor contention; round-2 full-run recorded
     // g_label_prop at 25.5 s vs 3.5 s isolated on the same commit).
@@ -96,7 +99,7 @@ object Bench {
         triggerBuf.synchronized(triggerBuf.clear())
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             failed += name
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         }
@@ -107,7 +110,7 @@ object Bench {
         // outside the timed window)
         try org.apache.spark.sql.graftbridge.Bridge
           .flushListenerBus(spark.sparkContext, 5000L)
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
         dropPersisted() // cleanup stays outside the measured window
         if (sys.env.contains("GRAFT_DEBUG_STAGES")) {
           // whole-stage-codegen compilation volume per query (debug
@@ -168,7 +171,7 @@ object Bench {
       "bench_full.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
       (fullLine + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write $fullPath: ${e.getMessage}")
     }
     spark.stop()

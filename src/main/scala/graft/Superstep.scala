@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions.{count, lit}
 
 /** The superstep discipline of the iterative graph loops, written once
@@ -12,8 +13,46 @@ import org.apache.spark.sql.functions.{count, lit}
   * inside [[scope]], which pins the session conf every round plan needs.
   * No loop observes, taps or sets session conf itself (SuperstepSpec
   * scans the sources for it).
+  *
+  * Superstep also owns where loop state lives. A round has more than
+  * one physical plan, and the size of the state picks it (the Pregelix
+  * framing), by two bounds in bytes ([[bytes]]: rows × Spark's per-row
+  * estimate). Below [[DriverBytes]] a loop collects its live state once
+  * and finishes the identical recurrence on the driver; below
+  * [[BroadcastBytes]] it broadcasts its state each round instead of
+  * co-partitioning it with the edges. Every loop with a driver tail or
+  * a broadcast fork takes the bound as a parameter (`driverBytes`,
+  * `broadcastBytes`) defaulting to these constants; pass 0 to force the
+  * distributed (or co-partitioned) path and `Long.MaxValue` to force
+  * the driver (or broadcast) path. Both paths give identical results.
+  * Each decision reads a row count the loop already has (a step's
+  * observed row or an existing `count()`), so deciding runs no job.
   */
 object Superstep {
+
+  /** Live loop state at or below this many bytes finishes on the driver
+    * (about 350k rows of (long, long) edges). Placed by an A/B of the
+    * loop faces at sf0.1 (4 CPUs): every tail decision there is the same
+    * anywhere from 3.8 to 7 MB, except MIS, whose first-round state
+    * (7.0 MB) fits 8 MiB and finished faster on the driver; at 64 MiB
+    * g_cc's 57 MB edge set went to the driver and ran slower than the
+    * distributed loop. */
+  val DriverBytes: Long = 8L << 20
+
+  /** Loop state at or below this many bytes is broadcast each round;
+    * above it the state is co-partitioned with the edges and joined
+    * shuffle-hash, the formulation that also works when state outgrows
+    * one executor. 100k rows of (long, long) state, where the A/B at
+    * sf0.1 put the crossover (a ~20k-row broadcast build costs ~20 ms;
+    * at 186k rows the per-round collect and build dominated). */
+  val BroadcastBytes: Long = 2400000L
+
+  /** Spark's size estimate for `rows` rows of `df`: rows × the per-row
+    * size Catalyst's statistics use (8 bytes of row overhead plus each
+    * column type's default size; a string counts 20, an array one
+    * element). Reads only the analyzed schema, so it runs no job. */
+  def bytes(df: DataFrame, rows: Long): Long =
+    rows * EstimationUtils.getSizePerRow(df.queryExecution.analyzed.output).toLong
 
   /** One metric name for every round. Reuse is safe because [[step]]
     * checkpoints each observed frame at once and returns only the

@@ -7,12 +7,15 @@ import org.apache.spark.sql.graftbridge.LoopCheckpoint
 
 /** Distributed graph algorithms over (gsrc, gdst) edge DataFrames.
   *
-  * All loops are DataFrame-iterative with `localCheckpoint` per round to
-  * truncate lineage (a 100-iteration lazy chain would blow up the
-  * Catalyst plan); convergence checks use `isEmpty` on a changed-set,
-  * never a count of the whole graph. The reference computes none of
-  * these (its MATCH stops at property filters), but they are the
-  * analytics payoff of holding the graph in Spark.
+  * All loops are DataFrame-iterative: each round is one lazy plan that
+  * [[Superstep.step]] taps, checkpoints (truncating lineage: a
+  * 100-iteration lazy chain would blow up the Catalyst plan) and
+  * observes, so a convergence count rides the checkpoint job. Where the
+  * state lives, on the driver, broadcast or co-partitioned, is decided
+  * by Superstep's two byte bounds, passed in as `driverBytes` and
+  * `broadcastBytes`. The reference computes none of these (its MATCH
+  * stops at property filters), but they are the analytics payoff of
+  * holding the graph in Spark.
   */
 object Algorithms {
 
@@ -25,24 +28,6 @@ object Algorithms {
     * sized for 100 TB work.
     */
   private val BroadcastRowBound = 5000000L
-  /** Frontier size below which an iterative straggler tail may finish
-    * with a driver-side simulation of the identical recurrence (see
-    * [[speculativeColoring]]) — the bounded-driver-state budget, same
-    * posture as the broadcast codebooks.
-    */
-  private val StragglerFinishBound = 20000L
-
-  /** Coloring's straggler cutover runs at a DELIBERATE 3.2× of
-    * [[StragglerFinishBound]] (A/B-measured at sf0.1: the conflict
-    * cascade's tail is ~17 rounds carrying < 8% of the nodes, so each
-    * skipped distributed round saves the ~0.25 s scheduling floor —
-    * 64k beat 20k by ~0.7 s isolated, r9 SURVEY §5). The driver state
-    * stays HARD-bounded by the cutover guard itself (≤ finishBelow
-    * uncolored rows plus ≤ 50× finishBelow live edges ≈ 55 MB worst
-    * case — the same bounded-driver-codebook envelope, just with its
-    * own measured constant).
-    */
-  private[graft] val ColoringFinishBound = 64000L
 
   private def hintSmall(df: DataFrame, rows: Long): DataFrame =
     if (rows <= BroadcastRowBound) broadcast(df) else df
@@ -51,17 +36,19 @@ object Algorithms {
     * how many rows of the round changed their `changed`-flagged label. */
   private def changedRows: Column = coalesce(sum(col("changed").cast("long")), lit(0L))
 
-  /** Driver-side min-root union-find over an edge array, the straggler
-    * cutover of the label loops: returns `find`, which maps every
-    * endpoint to its component's minimum id (union points the larger
-    * root at the smaller, so each root IS the component minimum — the
-    * exact min-label fixpoint). The find is iterative: union-by-value has
-    * no depth bound (a sorted path-shaped edge order builds an O(n)
-    * chain), and a recursive walk at the cutover budget can overflow a
-    * thread stack (streaming foreachBatch threads have ~1 MB) — it walks
-    * to the root first, then compresses the path in a second pass.
+  /** The driver tail of the min-label loops (CC, `ccIncremental`, the
+    * MSF contraction): collect the (long, long) edge frame `e` and run a
+    * min-root union-find over it, returning (gid, comp) for every
+    * endpoint. Union points the larger root at the smaller, so each root
+    * IS the component minimum: the exact min-label fixpoint. The find is
+    * iterative: union-by-value has no depth bound (a sorted path-shaped
+    * edge order builds an O(n) chain), and a recursive walk at the
+    * driver budget can overflow a thread stack (streaming foreachBatch
+    * threads have ~1 MB), so it walks to the root first, then compresses
+    * the path in a second pass.
     */
-  private def minRoots(es: Array[(Long, Long)]): Long => Long = {
+  private def minRootFrame(e: DataFrame): DataFrame = {
+    val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(v: Long): Long = {
       var r = v
@@ -74,7 +61,8 @@ object Algorithms {
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    find
+    e.sparkSession.createDataFrame(es.iterator.flatMap { case (a, b) => Iterator(a, b) }
+      .toSeq.distinct.map(v => (v, find(v)))).toDF("gid", "comp")
   }
 
   /** Collect a (src, dst) long edge frame into a driver adjacency map —
@@ -90,19 +78,9 @@ object Algorithms {
     adj
   }
 
-  /** Iterative-loop state strategy crossover, chosen by A/B measurement
-    * at sf0.1: below this row count, re-broadcasting the state vector
-    * every round beats co-partitioning (a ~20k-row broadcast build is
-    * ~20 ms; the co-partitioned loop's fixed exchange latency isn't);
-    * above it the per-round broadcast collect+build dominates (measured
-    * at 186k rows in pageRank) and the co-partitioned shuffle-hash loop
-    * wins — and it is also the only formulation that still works when
-    * state outgrows executor memory.
-    */
-  private def BroadcastStateBound: Long =
-    sys.props.get("graft.broadcastStateBound")
-      .orElse(sys.env.get("GRAFT_BROADCAST_STATE_BOUND"))
-      .map(_.toLong).getOrElse(100000L)
+  /** The state side of a loop join: broadcast when the state fits
+    * [[Superstep.BroadcastBytes]] (`small`), else shuffle-hash over the
+    * co-partitioned layout. */
   private def stateHint(df: DataFrame, small: Boolean): DataFrame =
     if (small) broadcast(df) else df.hint("shuffle_hash")
 
@@ -383,27 +361,20 @@ object Algorithms {
     * nodes keep their own id. Returns (gid, comp).
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame, maxIter: Int = 50,
-      cutoverBelow: Long = 8L * StragglerFinishBound): DataFrame = {
+      driverBytes: Long = Superstep.DriverBytes,
+      broadcastBytes: Long = Superstep.BroadcastBytes): DataFrame = {
     val und0 = edges.select(col("gsrc").as("a"), col("gdst").as("b"))
       .unionByName(edges.select(col("gdst").as("a"), col("gsrc").as("b")))
       .distinct().localCheckpoint()
     val undRows = und0.count()
-    // Straggler cutover (the SCC/MIS/coloring bounded-driver class):
-    // when the whole edge set fits the budget, a min-root union-find
-    // replaces the O(diameter)-round loop — the label map is
+    // Driver tail: when the whole edge set fits the budget, a min-root
+    // union-find replaces the O(diameter)-round loop; the label map is
     // endpoint-bounded metadata, broadcast back onto the node set
-    // (isolated nodes keep their own id, as in the loop). Union points
-    // the larger root at the smaller, so each root IS the component
-    // minimum — the exact min-label fixpoint, at any round budget.
-    if (undRows <= cutoverBelow) {
-      val es = und0.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val find = minRoots(es)
-      val sess = und0.sparkSession
-      import sess.implicits._
-      val mapDf = es.iterator.map(_._1).toSeq.distinct
-        .map(v => (v, find(v))).toDF("gid", "__c")
+    // (isolated nodes keep their own id, as in the loop).
+    if (Superstep.bytes(und0, undRows) <= driverBytes) {
       return nodes.select(col("gid"))
-        .join(broadcast(mapDf), Seq("gid"), "left")
+        .join(broadcast(minRootFrame(und0).withColumnRenamed("comp", "__c")),
+          Seq("gid"), "left")
         .select(col("gid"), coalesce(col("__c"), col("gid")).as("comp"))
     }
     val width = Width.forRows(edges, undRows)
@@ -416,8 +387,7 @@ object Algorithms {
     // no requirement that state fit in one executor.
     Superstep.scope(edges, width) {
     var comp = nodes.select(col("gid"), col("gid").as("comp"))
-    val nRows = comp.count()
-    val small = nRows <= BroadcastStateBound
+    val small = Superstep.bytes(comp, comp.count()) <= broadcastBytes
     val undirected =
       if (small) und0.coalesce(width)
       else und0.repartition(width, col("b")).localCheckpoint()
@@ -543,13 +513,12 @@ object Algorithms {
           .join(x.hint("shuffle_hash"), g.e("gsrc") === col("gid"))
           .groupBy(g.e("gdst").as("cgid"))
           .agg(sum(col("x")).as("contrib"))
-        x = g.base0.select(col("gid"))
+        x = Superstep.step("rank.round", g.base0.select(col("gid"))
           .join(contribs.hint("shuffle_hash"), col("gid") === col("cgid"),
             "left")
           .select(col("gid"),
             (lit(1.0) + lit(alpha) * coalesce(col("contrib"), lit(0.0)))
-              .as("x"))
-          .localCheckpoint()
+              .as("x")))._1
       }
       x
     }
@@ -965,7 +934,7 @@ object Algorithms {
     var h = base.withColumn("hub", lit(1.0))
     for (_ <- 1 to iters) {
       val a = authOf(h)
-      h = base
+      h = Superstep.step("rank.round", base
         .join(eDst
             .join(a.filter(col("auth") =!= 0.0).hint("shuffle_hash"),
               eDst("gdst") === col("gid"))
@@ -973,8 +942,7 @@ object Algorithms {
             .agg(sum(col("auth")).as("raw"))
             .hint("shuffle_hash"),
           col("gid") === col("hgid"), "left")
-        .select(col("gid"), coalesce(col("raw"), lit(0.0)).as("hub"))
-        .localCheckpoint()
+        .select(col("gid"), coalesce(col("raw"), lit(0.0)).as("hub")))._1
     }
     // final auth off the last hub state; checkpointed because it feeds
     // both the norm scalar and the output join
@@ -1022,7 +990,7 @@ object Algorithms {
     *         the round attribution doubles as a convergence trace
     */
   def maximalIndependentSet(nodes: DataFrame, edges: DataFrame,
-      maxIter: Int = 100): DataFrame = {
+      maxIter: Int = 100, driverBytes: Long = Superstep.DriverBytes): DataFrame = {
     val und0 = edges.select(col("gsrc").as("a"), col("gdst").as("b"))
       .filter(col("a") =!= col("b"))
       .unionByName(edges.select(col("gdst").as("a"), col("gsrc").as("b"))
@@ -1063,18 +1031,19 @@ object Algorithms {
         undec = undecNext
         undecRows = mUnd.getLong(0)
         mis = if (mis == null) sel else mis.unionByName(sel)
-        // Straggler cutover (the speculativeColoring pattern): finish
-        // the identical recurrence driver-side once the undecided
-        // frontier and its induced edges fit the bounded-state budget
-        // — the tail rounds are scheduling floor.
-        if (undecRows > 0 && undecRows <= StragglerFinishBound) {
+        // Driver tail (the speculativeColoring pattern): finish the
+        // identical recurrence driver-side once the undecided frontier
+        // and its induced edges fit the driver budget — the tail rounds
+        // are scheduling floor.
+        val undecBytes = Superstep.bytes(undec, undecRows)
+        if (undecRows > 0 && undecBytes <= driverBytes) {
           val liveE = e
             .join(hintSmall(undec.select(col("gid").as("ua")), undecRows),
               col("a") === col("ua"), "left_semi")
             .join(hintSmall(undec.select(col("gid").as("ub")), undecRows),
               col("b") === col("ub"), "left_semi")
             .localCheckpoint()
-          if (liveE.count() <= 8L * StragglerFinishBound) {
+          if (undecBytes + Superstep.bytes(liveE, liveE.count()) <= driverBytes) {
             val adj = collectAdj(liveE)
             val pri = scala.collection.mutable.Map.empty[Long, String]
             undec.collect().foreach(r => pri(r.getLong(0)) = r.getString(1))
@@ -1091,9 +1060,8 @@ object Algorithms {
             }
             require(u.isEmpty,
               s"maximalIndependentSet: $maxIter rounds exhausted with ${u.size} undecided")
-            val sess = nodes.sparkSession
-            import sess.implicits._
-            mis = mis.unionByName(out.toSeq.toDF("gid", "mis_round"))
+            mis = mis.unionByName(
+              nodes.sparkSession.createDataFrame(out.toSeq).toDF("gid", "mis_round"))
             undecRows = 0
           }
         }
@@ -1140,14 +1108,14 @@ object Algorithms {
     *         the round attribution doubles as a convergence trace
     */
   def speculativeColoring(nodes: DataFrame, edges: DataFrame,
-      maxIter: Int = 100): DataFrame =
+      maxIter: Int = 100, driverBytes: Long = Superstep.DriverBytes): DataFrame =
     speculativeColoringUnd(nodes,
       edges.select(col("gsrc").as("a"), col("gdst").as("b"))
         .filter(col("a") =!= col("b"))
         .unionByName(edges.select(col("gdst").as("a"), col("gsrc").as("b"))
           .filter(col("a") =!= col("b")))
         .distinct().localCheckpoint(),
-      maxIter)
+      maxIter, driverBytes)
 
   /** [[speculativeColoring]] over an already-canonicalized (and
     * materialized) undirected edge table (a, b) in both directions —
@@ -1174,7 +1142,7 @@ object Algorithms {
     */
   def speculativeColoringUnd(nodes: DataFrame, und0: DataFrame,
       maxIter: Int = 100,
-      finishBelow: Long = ColoringFinishBound,
+      driverBytes: Long = Superstep.DriverBytes,
       round1Palette: Boolean = false): DataFrame = {
     val width = Width.forRows(und0, und0.count())
     Superstep.scope(und0, width) {
@@ -1265,17 +1233,17 @@ object Algorithms {
             .join(hintSmall(loserIds.select(col("gid").as("sb")), loserRows),
               col("b") === col("sb"), "left_semi")
             .localCheckpoint()
-          // Straggler cutover: the conflict cascade shrinks
-          // geometrically, but each distributed round still pays the
-          // fixed scheduling floor (~0.25 s at 32 threads) — measured
-          // 17 tail rounds carrying < 8% of the nodes. Once the live
-          // frontier fits the driver bound, finish the IDENTICAL
+          // Driver tail: the conflict cascade shrinks geometrically,
+          // but each distributed round still pays the fixed scheduling
+          // floor (~0.25 s at 32 threads) — measured 17 tail rounds
+          // carrying < 8% of the nodes. Once the uncolored frontier and
+          // its live edges fit the driver budget, finish the IDENTICAL
           // recurrence in memory: same tentative/mex, same conflict
           // rule, same round numbering — bit-equal to the distributed
-          // rounds (the equality the RandomizedAlgSpec replay pins),
-          // with state bounded like every other driver-side codebook.
-          if (uncolRows <= finishBelow &&
-              eLive.count() <= 50L * finishBelow) {
+          // rounds (the equality the RandomizedAlgSpec replay pins).
+          val uncolBytes = Superstep.bytes(uncol, uncolRows)
+          if (uncolBytes <= driverBytes &&
+              uncolBytes + Superstep.bytes(eLive, eLive.count()) <= driverBytes) {
             val adj = collectAdj(eLive)
             val pri = scala.collection.mutable.Map.empty[Long, String]
             val cs = scala.collection.mutable.Map.empty[Long, scala.collection.mutable.Set[Long]]
@@ -1303,9 +1271,8 @@ object Algorithms {
             }
             require(undec.isEmpty,
               s"speculativeColoring: $maxIter rounds exhausted with ${undec.size} uncolored")
-            val sess = nodes.sparkSession
-            import sess.implicits._
-            sels += out.toSeq.toDF("gid", "color", "colored_round")
+            sels += nodes.sparkSession.createDataFrame(out.toSeq)
+              .toDF("gid", "color", "colored_round")
             uncolRows = 0
           }
         }
@@ -1361,28 +1328,27 @@ object Algorithms {
     val width = Width.forRows(und0, und0.count())
     Superstep.scope(und0, width) {
       val e = und0.coalesce(width)
-      var st = nodes.groupBy(col("gid"))
-        .agg(hll_sketch_agg(col("gid"), lgK).as("sk"))
-        .localCheckpoint()
-      // hll_sketch_estimate is integer-valued (LongType) in Spark, so
-      // the per-hop total is an exact integer sum — no float order
+      // each hop's total rides its checkpoint job as the observed
+      // aggregate. hll_sketch_estimate is integer-valued (LongType) in
+      // Spark, so the total is an exact integer sum — no float order
       // sensitivity anywhere in the output
-      def total(s: DataFrame): Long =
-        s.agg(sum(hll_sketch_estimate(col("sk")))).first().getLong(0)
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
-      out += ((0, total(st)))
+      val total = sum(hll_sketch_estimate(col("sk")))
+      val (st0, m0) = Superstep.step("frontier.round", nodes.groupBy(col("gid"))
+        .agg(hll_sketch_agg(col("gid"), lgK).as("sk")), total)
+      var st = st0
+      val out = scala.collection.mutable.ArrayBuffer((0, m0.getLong(0)))
       for (h <- 1 to maxHops) {
-        st = e.join(st.select(col("gid").as("bg"), col("sk")),
-            col("b") === col("bg"))
-          .select(col("a").as("gid"), col("sk"))
-          .unionByName(st)
-          .groupBy(col("gid")).agg(hll_union_agg(col("sk")).as("sk"))
-          .localCheckpoint()
-        out += ((h, total(st)))
+        val (next, mh) = Superstep.step("frontier.round",
+          e.join(st.select(col("gid").as("bg"), col("sk")),
+              col("b") === col("bg"))
+            .select(col("a").as("gid"), col("sk"))
+            .unionByName(st)
+            .groupBy(col("gid")).agg(hll_union_agg(col("sk")).as("sk")),
+          total)
+        st = next
+        out += ((h, mh.getLong(0)))
       }
-      val sess = nodes.sparkSession
-      import sess.implicits._
-      out.toSeq.toDF("hop", "n_reachable_pairs")
+      nodes.sparkSession.createDataFrame(out.toSeq).toDF("hop", "n_reachable_pairs")
     } // scope
   }
 
@@ -1405,7 +1371,8 @@ object Algorithms {
     *
     * @return (a, b, match_round) for matched edges, rounds from 1
     */
-  def maximalMatching(edges: DataFrame, maxIter: Int = 100): DataFrame = {
+  def maximalMatching(edges: DataFrame, maxIter: Int = 100,
+      driverBytes: Long = Superstep.DriverBytes): DataFrame = {
     val canon0 = edges.select(
         least(col("gsrc"), col("gdst")).as("a"),
         greatest(col("gsrc"), col("gdst")).as("b"))
@@ -1441,12 +1408,12 @@ object Algorithms {
             col("b") === col("mb"), "left_anti"))
         live = liveNext
         liveRows = mLive.getLong(0)
-        // Straggler cutover (the speculativeColoring pattern): once the
-        // live edge set fits the driver bound, finish the identical
+        // Driver tail (the speculativeColoring pattern): once the live
+        // edge set fits the driver budget, finish the identical
         // recurrence in memory — the tail rounds are scheduling floor,
         // and the in-memory rounds are the same recurrence the
         // RandomizedAlgSpec sequential-greedy equality pins.
-        if (liveRows > 0 && liveRows <= 8L * StragglerFinishBound) {
+        if (liveRows > 0 && Superstep.bytes(live, liveRows) <= driverBytes) {
           val rows = live.collect().map(r =>
             (r.getLong(0), r.getLong(1), r.getString(2)))
           var liveSeq = rows.toSeq
@@ -1467,9 +1434,7 @@ object Algorithms {
           }
           require(liveSeq.isEmpty,
             s"maximalMatching: $maxIter rounds exhausted with ${liveSeq.size} live edges")
-          val sess = live.sparkSession
-          import sess.implicits._
-          sels += out.toSeq.toDF("a", "b", "match_round")
+          sels += live.sparkSession.createDataFrame(out.toSeq).toDF("a", "b", "match_round")
           liveRows = 0
         }
       }
@@ -1637,7 +1602,7 @@ object Algorithms {
     */
   def ccIncremental(prevLabels: DataFrame, newEdges: DataFrame,
       maxIter: Int = 50,
-      cutoverBelow: Long = 8L * StragglerFinishBound): DataFrame = {
+      driverBytes: Long = Superstep.DriverBytes): DataFrame = {
     // materializeInvariant, not an unconditional checkpoint: in the
     // chained-fold faces prevLabels is ALREADY the previous trigger's
     // checkpointed label state, and re-copying a node-scale table per
@@ -1654,27 +1619,18 @@ object Algorithms {
       .select(coalesce(col("csrc"), col("gsrc")).as("gsrc"),
         coalesce(col("cdst"), col("gdst")).as("gdst")))
     val relRows = mRel.getLong(0)
-    // Straggler cutover (the SCC-reach / MIS / coloring discipline):
-    // the contracted graph is delta-scale BY CONSTRUCTION — when it
-    // fits the bounded-driver budget, a min-root union-find replaces
+    // Driver tail: the contracted graph is delta-scale BY CONSTRUCTION
+    // — when it fits the driver budget, a min-root union-find replaces
     // the multi-round distributed CC loop (the per-trigger fold faces
-    // otherwise pay the whole loop's scheduling floor per batch).
-    // Union always points the LARGER root at the smaller, so each
-    // final root IS the component minimum — exactly the min-label CC
-    // contract. Past the budget the checkpointed loop takes over.
-    val merged = if (relRows <= cutoverBelow) {
-      val es = rel.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val find = minRoots(es)
-      val sess = rel.sparkSession
-      import sess.implicits._
-      es.iterator.flatMap { case (a, b) => Iterator(a, b) }.toSeq.distinct
-        .map(v => (v, find(v))).toDF("gid", "comp")
-    } else {
+    // otherwise pay the whole loop's scheduling floor per batch). Past
+    // the budget the checkpointed loop takes over.
+    val merged = if (Superstep.bytes(rel, relRows) <= driverBytes) minRootFrame(rel)
+    else {
       val cNodes = rel.select(col("gsrc").as("gid"))
         .unionByName(rel.select(col("gdst").as("gid"))).distinct()
       // the CC loop already returns a projection over its checkpointed
       // final round — materializeInvariant skips the redundant copy
-      materializeInvariant(connectedComponents(cNodes, rel, maxIter))
+      materializeInvariant(connectedComponents(cNodes, rel, maxIter, driverBytes))
     }
     // remap previous labels through the merge map (untouched components
     // pass through), then add the delta-only nodes with their labels
@@ -2251,8 +2207,8 @@ object Algorithms {
     * @return forest edges (a, b, w), a < b
     */
   def minimumSpanningForest(nodes: DataFrame, edges: DataFrame,
-      maxRounds: Int = 20): DataFrame =
-    minimumSpanningForestWithComponents(nodes, edges, maxRounds)._1
+      maxRounds: Int = 20, driverBytes: Long = Superstep.DriverBytes): DataFrame =
+    minimumSpanningForestWithComponents(nodes, edges, maxRounds, driverBytes)._1
 
   /** [[minimumSpanningForest]] plus the forest's connected components
     * (gid, comp) for free: Borůvka's contraction merges labels exactly
@@ -2263,7 +2219,8 @@ object Algorithms {
     * over the forest they just built.
     */
   def minimumSpanningForestWithComponents(nodes: DataFrame, edges: DataFrame,
-      maxRounds: Int = 20): (DataFrame, DataFrame) = {
+      maxRounds: Int = 20,
+      driverBytes: Long = Superstep.DriverBytes): (DataFrame, DataFrame) = {
     val canon = edges.select(
         least(col("gsrc"), col("gdst")).as("a"),
         greatest(col("gsrc"), col("gdst")).as("b"), col("w"))
@@ -2299,25 +2256,16 @@ object Algorithms {
         picked += sel.select(col("a"), col("b"), col("w"))
         // contract along the selected component graph. The pair table is
         // component-count bounded and halves per round — when it fits
-        // the broadcast-state bound, a driver union-find replaces the
-        // distributed CC loop (same hybrid as [[stateHint]]: the
-        // mapping is label-sized metadata, never node-sized data);
-        // past the bound the checkpointed CC loop takes over.
-        val mapping = if (selCnt <= BroadcastStateBound) {
-            val pairs = sel.select(col("c"), col("oc")).collect()
-              .map(r => (r.getLong(0), r.getLong(1)))
-            val find = minRoots(pairs)
-            val rows = pairs.flatMap { case (c, oc) => Seq(c, oc) }.distinct
-              .map(c => (c, find(c)))
-            val spark = comp.sparkSession
-            import spark.implicits._
-            broadcast(rows.toSeq.toDF("oldc", "newc"))
-          } else {
-            connectedComponents(
-                comp.select(col("comp").as("gid")).distinct(),
-                sel.select(col("c").as("gsrc"), col("oc").as("gdst")))
-              .select(col("gid").as("oldc"), col("comp").as("newc"))
-          }
+        // the driver budget, a driver union-find replaces the
+        // distributed CC loop (the mapping is label-sized metadata,
+        // never node-sized data); past the budget the checkpointed CC
+        // loop takes over.
+        val pairs = sel.select(col("c").as("gsrc"), col("oc").as("gdst"))
+        val mapping = (if (Superstep.bytes(pairs, selCnt) <= driverBytes)
+            broadcast(minRootFrame(pairs))
+          else connectedComponents(comp.select(col("comp").as("gid")).distinct(),
+            pairs, driverBytes = driverBytes))
+          .select(col("gid").as("oldc"), col("comp").as("newc"))
         comp = comp.select(col("gid"), col("comp").as("oldc"))
           .join(mapping, Seq("oldc"), "left")
           .select(col("gid"), coalesce(col("newc"), col("oldc")).as("comp"))
@@ -2489,26 +2437,22 @@ object Algorithms {
     // 100-query bench run (5.3 s vs 9-26 s) — the per-round driver
     // collect+build behind each broadcast is the part that stalls under
     // full-run driver-heap pressure, and this path does zero of them.
-    // (Override knob retained for future A/Bs via
-    // -Dgraft.broadcastStateBound=<huge> is deliberately NOT honored
-    // here: the broadcast formulation lost both measurements.)
     Superstep.scope(edges, width) {
-    var labels = nodes.select(col("gid"), col("gid").as("community"))
-    val small = false
     val undirected = und0.repartition(width, col("b")).localCheckpoint()
-    labels = labels.repartition(width, col("gid")).localCheckpoint()
+    var labels = nodes.select(col("gid"), col("gid").as("community"))
+      .repartition(width, col("gid")).localCheckpoint()
     for (_ <- 1 to iters) {
       // majority vote with smallest-label tie-break in ONE aggregation:
       // mode(deterministic = true) is "most frequent, ties broken by the
       // lowest value" — exactly these semantics — and as a typed
       // imperative aggregate it partial-merges per-group count maps, so
       // one exchange per round instead of the count-then-argmax pair
-      val best = undirected.join(stateHint(labels, small), col("b") === col("gid"))
+      val best = undirected.join(labels.hint("shuffle_hash"), col("b") === col("gid"))
         .groupBy(col("a"))
         .agg(mode(col("community"), deterministic = true).as("newc"))
-      labels = labels.join(stateHint(best, small), labels("gid") === col("a"), "left")
-        .select(labels("gid"), coalesce(col("newc"), col("community")).as("community"))
-        .localCheckpoint()
+      labels = Superstep.step("frontier.round", labels
+        .join(best.hint("shuffle_hash"), labels("gid") === col("a"), "left")
+        .select(labels("gid"), coalesce(col("newc"), col("community")).as("community")))._1
     }
     labels
     } // scope
@@ -2535,21 +2479,20 @@ object Algorithms {
       .localCheckpoint()
     val width = Width.forRows(wEdges, und0.count())
     Superstep.scope(wEdges, width) {
-    var labels = nodes.select(col("gid"), col("gid").as("community"))
-    val small = false
     val undirected = und0.repartition(width, col("b")).localCheckpoint()
-    labels = labels.repartition(width, col("gid")).localCheckpoint()
+    var labels = nodes.select(col("gid"), col("gid").as("community"))
+      .repartition(width, col("gid")).localCheckpoint()
     for (_ <- 1 to iters) {
-      val votes = undirected.join(stateHint(labels, small), col("b") === col("gid"))
+      val votes = undirected.join(labels.hint("shuffle_hash"), col("b") === col("gid"))
         .groupBy(col("a"), col("community")).agg(sum(col("w")).as("wv"))
       // max(struct(wv, -community)): heaviest vote mass first, then the
       // LOWEST label on a tie — the weighted mirror of deterministic mode
       val best = votes.groupBy(col("a"))
         .agg(max(struct(col("wv"), (-col("community")).as("negc"))).as("m"))
         .select(col("a"), (-col("m.negc")).as("newc"))
-      labels = labels.join(stateHint(best, small), labels("gid") === col("a"), "left")
-        .select(labels("gid"), coalesce(col("newc"), col("community")).as("community"))
-        .localCheckpoint()
+      labels = Superstep.step("frontier.round", labels
+        .join(best.hint("shuffle_hash"), labels("gid") === col("a"), "left")
+        .select(labels("gid"), coalesce(col("newc"), col("community")).as("community")))._1
     }
     labels
     } // scope
@@ -2577,24 +2520,23 @@ object Algorithms {
     *
     * Each inner fixpoint round is one join + groupBy-min on the live
     * edge set (same shape as [[connectedComponents]], directed); rounds
-    * are bounded by the longest min-label chain. Straggler cutover: once
-    * the unsettled frontier fits the bounded-driver-state budget AND the
-    * remainder-INDUCED edge set fits the edge budget (50× the node
-    * bound — a ≤20k-node remainder can still carry a dense million-edge
-    * subgraph, the MIS/matching edge-guard lesson), finish with a
-    * driver-side Tarjan — legitimate here BECAUSE the output is
+    * are bounded by the longest min-label chain. Driver tail: once the
+    * unsettled nodes AND their remainder-INDUCED edge set together fit
+    * the driver budget (a small remainder can still carry a dense
+    * million-edge subgraph, the MIS/matching edge-guard lesson), finish
+    * with a driver-side Tarjan — legitimate here BECAUSE the output is
     * canonical (SccSpec pins distributed ≡ driver on random digraphs).
     * The collected edge set is always the remainder-induced one; over
-    * the edge budget the distributed phases simply continue.
+    * the budget the distributed phases simply continue.
     */
   def stronglyConnectedComponents(nodes: DataFrame, edges: DataFrame,
       maxRounds: Int = 500,
-      cutoverBelow: Long = StragglerFinishBound): DataFrame = {
+      driverBytes: Long = Superstep.DriverBytes,
+      broadcastBytes: Long = Superstep.BroadcastBytes): DataFrame = {
     val dirE = edges.select(col("gsrc").as("a"), col("gdst").as("b"))
       .filter(col("a") =!= col("b")).distinct().localCheckpoint()
     val dirECount = dirE.count()
     val width = Width.forRows(edges, dirECount)
-    val edgeBound = 50L * cutoverBelow
     Superstep.scope(edges, width) {
       var remaining = nodes.select(col("gid")).distinct().localCheckpoint()
       var remRows = remaining.count()
@@ -2604,9 +2546,10 @@ object Algorithms {
       // phase, and liveECount tracks it — at entry the remainder is all
       // of `nodes`, so dirE is trivially induced
       var liveECount = dirECount
+      def liveBytes = Superstep.bytes(remaining, remRows) + Superstep.bytes(liveE, liveECount)
       var rounds = 0
       var phase = 0
-      while (remRows > cutoverBelow || (remRows > 0 && liveECount > edgeBound)) {
+      while (remRows > 0 && liveBytes > driverBytes) {
         phase += 1
         require(phase <= maxRounds,
           s"stronglyConnectedComponents: $maxRounds phases exhausted with $remRows unsettled")
@@ -2614,8 +2557,8 @@ object Algorithms {
         // the live subgraph; both run the connectedComponents loop
         // shape with the state broadcast/shuffle crossover
         def minLabel(e: DataFrame): DataFrame = {
-          val small = remRows <= BroadcastStateBound
           var lab = remaining.select(col("gid"), col("gid").as("m"))
+          val small = Superstep.bytes(lab, remRows) <= broadcastBytes
           lab = (if (small) lab else lab.repartition(width, col("gid")))
             .localCheckpoint()
           var converged = false
@@ -2665,22 +2608,14 @@ object Algorithms {
         // min-member labeling is algorithm-independent, so this is the
         // identical FUNCTION, not merely the identical recurrence. The
         // loop condition guarantees the collected set is the
-        // remainder-induced edge set within the edge budget — never the
-        // raw edge table (the r8 latent-OOM finding)
-        require(liveECount <= edgeBound,
-          s"scc cutover: $liveECount induced edges exceed budget $edgeBound")
+        // remainder-induced edge set within the driver budget — never
+        // the raw edge table (the r8 latent-OOM finding)
+        require(liveBytes <= driverBytes,
+          s"scc driver tail: $liveECount induced edges exceed $driverBytes bytes")
         val remSet = remaining.collect().map(_.getLong(0)).toSet
-        val adj = scala.collection.mutable.Map
-          .empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
-        liveE.collect().foreach { r =>
-          val (s, d) = (r.getLong(0), r.getLong(1))
-          if (remSet.contains(s) && remSet.contains(d))
-            adj.getOrElseUpdate(s, scala.collection.mutable.ArrayBuffer.empty) += d
-        }
-        val out = tarjanSccMin(remSet, adj)
-        val sess = nodes.sparkSession
-        import sess.implicits._
-        val local = out.toSeq.toDF("gid", "scc")
+        val out = tarjanSccMin(remSet,
+          collectAdj(liveE).map { case (v, ws) => v -> ws.filter(remSet) })
+        val local = nodes.sparkSession.createDataFrame(out.toSeq).toDF("gid", "scc")
         result = if (result == null) local else result.unionByName(local)
       }
       if (result == null)
@@ -2729,7 +2664,7 @@ object Algorithms {
     * modularity ≥ the label-prop partition on the real graph.
     */
   def louvain(nodes: DataFrame, edges: DataFrame, levels: Int = 2,
-      rounds: Int = 8): DataFrame = {
+      rounds: Int = 8, broadcastBytes: Long = Superstep.BroadcastBytes): DataFrame = {
     val canon0 = edges.select(
         least(col("gsrc"), col("gdst")).as("a"),
         greatest(col("gsrc"), col("gdst")).as("b"))
@@ -2763,8 +2698,7 @@ object Algorithms {
         val m = (if (mRow.isNullAt(0)) 0L else mRow.getLong(0)) +
           (if (swRow.isNullAt(0)) 0L else swRow.getLong(0))
         var lab = ck(strength.select(col("gid"), col("gid").as("community")))
-        val nRows = lab.count()
-        val small = nRows <= BroadcastStateBound
+        val small = Superstep.bytes(lab, lab.count()) <= broadcastBytes
         // convergence is parity-aware: round r only admits movers of
         // parity r mod 2, so a single zero-mover round proves nothing
         // about the OTHER class — stop only after two consecutive zero
@@ -2932,7 +2866,7 @@ object Algorithms {
     */
   def sccIncrementalWithDag(prevLabels: DataFrame, baseDag: DataFrame,
       deltaEdges: DataFrame,
-      reachCutoverBelow: Long = 8L * StragglerFinishBound)
+      driverBytes: Long = Superstep.DriverBytes)
       : (DataFrame, DataFrame) = {
     // materializeInvariant, not an unconditional checkpoint: chained
     // folds pass the previous trigger's already-checkpointed labels
@@ -2953,10 +2887,10 @@ object Algorithms {
       .distinct().localCheckpoint()
     // the frontier sweeps run over COMPONENT edges (condensation +
     // delta images), never corpus edges — when that table fits the
-    // bounded-driver budget, two in-memory reachability sweeps replace
-    // 2×(DAG-depth) scheduling-floor rounds (the straggler-cutover
+    // driver budget, two in-memory reachability sweeps replace
+    // 2×(DAG-depth) scheduling-floor rounds (the driver-tail
     // discipline; set is exact either way, SccSpec runs both paths)
-    val affected = (if (h.count() <= reachCutoverBelow) {
+    val affected = (if (Superstep.bytes(h, h.count()) <= driverBytes) {
       val es = h.collect().map(r => (r.getLong(0), r.getLong(1)))
       val starts = rel.select(col("cs"), col("cd")).collect()
         .map(r => (r.getLong(0), r.getLong(1)))
@@ -2989,7 +2923,8 @@ object Algorithms {
       .join(affected.select(col("gid").as("ib")), col("b") === col("ib"),
         "left_semi")
     val merged = stronglyConnectedComponents(affected,
-        induced.select(col("a").as("gsrc"), col("b").as("gdst")))
+        induced.select(col("a").as("gsrc"), col("b").as("gdst")),
+        driverBytes = driverBytes)
       .filter(col("gid") =!= col("scc"))
       .select(col("gid").as("c"), col("scc").as("nc"))
       .localCheckpoint()
@@ -3023,7 +2958,8 @@ object Algorithms {
     * levels (callers feed condensation DAGs, which are acyclic by
     * definition).
     */
-  def dagLevels(edges: DataFrame, maxIter: Int = 2000): DataFrame = {
+  def dagLevels(edges: DataFrame, maxIter: Int = 2000,
+      broadcastBytes: Long = Superstep.BroadcastBytes): DataFrame = {
     val dirE = edges.select(col("a"), col("b"))
       .filter(col("a") =!= col("b")).distinct().localCheckpoint()
     val nodes = dirE.select(col("a").as("gid"))
@@ -3031,8 +2967,7 @@ object Algorithms {
     val width = Width.forRows(edges, dirE.count())
     Superstep.scope(edges, width) {
       var lev = nodes.select(col("gid"), lit(0L).as("lev")).localCheckpoint()
-      val nRows = lev.count()
-      val small = nRows <= BroadcastStateBound
+      val small = Superstep.bytes(lev, lev.count()) <= broadcastBytes
       var converged = false
       var iter = 0
       while (!converged) {
@@ -3082,7 +3017,8 @@ object Algorithms {
     */
   def temporalEarliestArrival(edges: DataFrame, seeds: DataFrame,
       t0: Column, maxIter: Int = 500,
-      init: Option[DataFrame] = None): DataFrame = {
+      init: Option[DataFrame] = None,
+      broadcastBytes: Long = Superstep.BroadcastBytes): DataFrame = {
     val e = edges.select(col("a"), col("b"), col("t"))
       .filter(col("a") =!= col("b")).distinct().localCheckpoint()
     val eCnt = e.count()
@@ -3093,7 +3029,7 @@ object Algorithms {
         .select(col("gid"), col("arr")).localCheckpoint()
       // state grows toward the reached set; bound it by dst-count + seeds,
       // not the seed count, so the broadcast decision survives growth
-      val small = (eCnt + arr.count()) <= BroadcastStateBound
+      val small = Superstep.bytes(arr, eCnt + arr.count()) <= broadcastBytes
       var converged = false
       var iter = 0
       while (!converged) {

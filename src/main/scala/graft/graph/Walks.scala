@@ -18,9 +18,10 @@ import org.apache.spark.sql.functions._
   *
   * Loop discipline matches [[Algorithms]]: AQE off with the width
   * pinned, the edge list hash-partitioned by source ONCE, the walk
-  * state hash-partitioned by walk_id ONCE and preserved by
-  * localCheckpoint. Per step only the (walk_id, cur) frontier shuffles
-  * — the growing path strings never leave their walk_id partition: the
+  * state hash-partitioned by walk_id ONCE and preserved by each step's
+  * checkpoint ([[graft.Superstep.step]], family tag `walk.step`). Per
+  * step only the (walk_id, cur) frontier shuffles — the growing path
+  * strings never leave their walk_id partition: the
   * neighbor selection is ONE fused codegen loop over the node-keyed
   * sorted adjacency array ([[graft.functions.WalkPick]]), and the
   * join-back onto the path state is exchange-free on both sides.
@@ -98,13 +99,13 @@ object Walks {
         .select(col("walk_id"),
           graft.functions.WalkFunctions
             .uniformWalkPick(col("walk_id"), col("nbrs"), step).as("nb"))
-      walks = walks.join(pick.hint("shuffle_hash"), Seq("walk_id"))
+      walks = Superstep.step("walk.step", walks
+        .join(pick.hint("shuffle_hash"), Seq("walk_id"))
         .select(col("walk_id"),
           coalesce(col("nb"), col("cur")).as("cur"),
           when(col("nb").isNotNull,
             concat(col("path"), lit("->"), col("nb")))
-            .otherwise(col("path")).as("path"))
-        .localCheckpoint()
+            .otherwise(col("path")).as("path")))._1
     }
     walks.select(col("walk_id"), col("path"))
     } // scope
@@ -186,7 +187,8 @@ object Walks {
         .select(col("walk_id"), col("nbrs"),
           graft.functions.WalkFunctions.node2vecWalkPick(col("walk_id"),
             col("nbrs"), col("pnbrs"), col("prev"), step, p, q).as("nb"))
-      walks = walks.join(pick.hint("shuffle_hash"), Seq("walk_id"))
+      walks = Superstep.step("walk.step", walks
+        .join(pick.hint("shuffle_hash"), Seq("walk_id"))
         .select(col("walk_id"),
           when(col("nb").isNotNull, col("cur")).otherwise(col("prev"))
             .as("prev"),
@@ -195,8 +197,7 @@ object Walks {
             concat(col("path"), lit("->"), col("nb")))
             .otherwise(col("path")).as("path"),
           when(col("nb").isNotNull, col("nbrs")).otherwise(col("pnbrs"))
-            .as("pnbrs"))
-        .localCheckpoint()
+            .as("pnbrs")))._1
     }
     walks.select(col("walk_id"), col("path"))
     } // scope

@@ -316,12 +316,15 @@ final class Interpreter private[graft] (spark: SparkSession, driverBytes: Long) 
     }
   }
 
-  private def fieldType(label: String, name: String, isNode: Boolean): Ast.TypeSpec = {
+  private def fieldSpec(label: String, name: String, isNode: Boolean) = {
     val spec =
       if (isNode) cat.nodes(label).field(name)
       else cat.edges(label).prop(name)
-    spec.getOrElse(throw ExecError(s"unknown field '$name' on $label")).tpe
+    spec.getOrElse(throw ExecError(s"unknown field '$name' on $label"))
   }
+
+  private def fieldType(label: String, name: String, isNode: Boolean): Ast.TypeSpec =
+    fieldSpec(label, name, isNode).tpe
 
   /** CHECK literal typing — the ONE rule shared with the batch finder
     * (Constraints.complementColumn): numeric literals type LEXICALLY
@@ -749,12 +752,19 @@ final class Interpreter private[graft] (spark: SparkSession, driverBytes: Long) 
     }
 
   /** UPDATE: the SET literals and the WHERE, each checked and typed
-    * before the label changes.
+    * before the label changes. A null SET on a NOT NULL field is
+    * rejected as INSERT rejects it: the check is on the literal, once
+    * per statement.
     */
   private def update(label: String, set: Seq[Ast.Property], where: Seq[Ast.Property],
       isNode: Boolean): Unit = {
     val st = stateOf(label, isNode)
-    val sets = set.map(p => p.name -> (typed(label, p, isNode): Expression)).toMap
+    val sets = set.map { p =>
+      val v = typed(label, p, isNode)
+      if (v.value == null && fieldSpec(label, p.name, isNode).notNull)
+        throw ExecError(s"required field '${p.name}' is null")
+      p.name -> (v: Expression)
+    }.toMap
     st.update(whereCond(label, where, isNode), sets)
   }
 

@@ -457,7 +457,7 @@ object GraphOps {
     */
   private[graft] def gCcLoop(spark: SparkSession, dir: String): DataFrame = {
     val (nodes, edges) = copurchaseGraph(spark, dir)
-    Algorithms.connectedComponents(nodes, edges, cutoverBelow = 0L)
+    Algorithms.connectedComponents(nodes, edges, driverBytes = 0L)
       .groupBy(col("comp")).agg(count(lit(1)).as("size"))
       .groupBy(col("size")).agg(count(lit(1)).as("n_components"))
   }
@@ -2051,7 +2051,7 @@ object GraphOps {
     * the distinct + self-join + distinct formulation's four, and the
     * intra-order pair blowup happens in a map stage, never on the wire.
     */
-  private def copurchaseGraph(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
+  private[graft] def copurchaseGraph(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
     // derived table shared by g_cc / g_triangles / g_label_prop:
     // materialize once per (session, dir) and pin — a materialized view,
     // not a per-query recomputation (~20 MB cached at sf0.1)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.execution.QueryExecution
 
 /** Per-round plan hygiene for the iterative loop families (rank / peel /
-  * frontier / stream-fold) — the faces the global PlanShapeSpec sweep
+  * frontier / stream-fold / drain / walk) — the faces the global PlanShapeSpec sweep
   * excludes because their CONSTRUCTORS run the loops. The loops already
   * checkpoint a representative DataFrame per round; [[PlanAudit.tap]]
   * hands those QueryExecutions out, and this spec runs the same
@@ -130,6 +130,38 @@ class LoopBodyPlanSpec extends SparkSpec with PlanWalk {
     val rounds = captured {
       queries.GraphOps.gTruss(spark, sf()).collect() }
     assertClean("peel(truss)", rounds.filter(_._1 == "peel.contract"))
+  }
+
+  test("rank family: every Katz and HITS round plan is product-free and pruned") {
+    val rounds = captured {
+      queries.GraphOps.gKatz(spark, sf()).collect()
+      queries.GraphOps.gHits(spark, sf()).collect()
+    }
+    // 8 rounds each
+    assertClean("rank(katz, hits)", rounds.filter(_._1 == "rank.round"))
+  }
+
+  test("frontier family: every ANF hop and label-propagation round plan is product-free and pruned") {
+    // the faces read per-session pinned fits, so call the loops directly
+    // over the same co-purchase graph: the rounds run here
+    import org.apache.spark.sql.functions._
+    val (nodes, edges) = queries.GraphOps.copurchaseGraph(spark, sf())
+    val weighted = edges.select(col("gsrc"), col("gdst"), lit(1L).as("w"))
+      .filter(col("gsrc") < col("gdst"))
+    val rounds = captured {
+      graph.Algorithms.neighborhoodFunction(nodes, edges, maxHops = 3).collect()
+      graph.Algorithms.labelPropagation(nodes, edges, iters = 3).collect()
+      graph.Algorithms.labelPropagationWeighted(nodes, weighted, iters = 3).collect()
+    }
+    assertClean("frontier(anf, label prop)", rounds.filter(_._1 == "frontier.round"))
+  }
+
+  test("walk family: every uniform and node2vec walk step plan is product-free and pruned") {
+    val rounds = captured {
+      queries.GraphOps.gRandomWalks(spark, sf()).collect()
+      queries.GraphOps.gNode2vec(spark, sf()).collect()
+    }
+    assertClean("walk", rounds.filter(_._1 == "walk.step"))
   }
 
   test("tap self-test: a planted cartesian seen through the tap is reported") {

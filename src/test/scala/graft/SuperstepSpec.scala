@@ -105,19 +105,41 @@ class SuperstepSpec extends SparkSpec {
     assert(keys.map(conf.get) === before)
   }
 
-  test("no file outside Superstep.scala and PlanAudit.scala observes, taps or sets conf") {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory)
-    val allowed = Set("graft/Superstep.scala", "graft/PlanAudit.scala")
-      .map(p => new java.io.File(root, p).getCanonicalFile)
-    val banned = Seq(".observe(", "observedMetrics", "PlanAudit.tap(", "conf.set(")
+  private val root = new java.io.File("src/main/scala")
+
+  /** (file, 1-based line number, line) for every Scala source line under
+    * `dir`, skipping `allowed` paths (relative to src/main/scala). */
+  private def sourceLines(dir: java.io.File, allowed: Set[String] = Set.empty)
+      : Seq[(java.io.File, Int, String)] = {
+    assert(dir.isDirectory)
+    val skip = allowed.map(p => new java.io.File(root, p).getCanonicalFile)
     def files(d: java.io.File): Seq[java.io.File] =
       d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    for {
+      f <- files(dir) if f.getName.endsWith(".scala") && !skip(f.getCanonicalFile)
+      (line, i) <- java.nio.file.Files.readAllLines(f.toPath).asScala.toSeq.zipWithIndex
+    } yield (f, i + 1, line)
+  }
+
+  test("no file outside Superstep.scala and PlanAudit.scala observes, taps or sets conf") {
+    val banned = Seq(".observe(", "observedMetrics", "PlanAudit.tap(", "conf.set(")
     val hits = for {
-      f <- files(root) if f.getName.endsWith(".scala") && !allowed(f.getCanonicalFile)
-      (line, i) <- java.nio.file.Files.readAllLines(f.toPath).asScala.zipWithIndex
+      (f, n, line) <- sourceLines(root, Set("graft/Superstep.scala", "graft/PlanAudit.scala"))
       b <- banned if line.contains(b)
-    } yield s"${f.getPath}:${i + 1}: $b"
+    } yield s"${f.getPath}:$n: $b"
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("graph loops read no env or system property, and only Superstep defines a size bound") {
+    val envReads = for {
+      (f, n, line) <- sourceLines(new java.io.File(root, "graft/graph"))
+      b <- Seq("sys.env", "sys.props", "System.getProperty") if line.contains(b)
+    } yield s"${f.getPath}:$n: $b"
+    val bound = """\b(val|def)\s+\w*(FinishBound|StateBound)\b""".r
+    val bounds = for {
+      (f, n, line) <- sourceLines(root, Set("graft/Superstep.scala"))
+      if bound.findFirstIn(line).nonEmpty
+    } yield s"${f.getPath}:$n: ${line.trim}"
+    assert((envReads ++ bounds).isEmpty, (envReads ++ bounds).mkString("\n"))
   }
 }

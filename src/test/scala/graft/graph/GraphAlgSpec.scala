@@ -360,23 +360,51 @@ class GraphAlgSpec extends SparkSpec {
 
   test("co-partitioned (large-state) path matches the broadcast path") {
     // force the shuffle-hash loop the bench only exercises at scale:
-    // with the state bound at 0 every loop takes the co-partitioned
-    // branch; results must be identical to the broadcast branch
+    // with broadcastBytes = 0 every loop takes the co-partitioned
+    // branch, with Long.MaxValue the broadcast one; results must be
+    // identical for every loop that has both formulations
+    import spark.implicits._
     val rnd = new scala.util.Random(7)
     val nodes = nodeDf(1L to 60L: _*)
-    val edges = edgeDf(Seq.fill(120)((rnd.nextInt(60) + 1L, rnd.nextInt(60) + 1L))
-      .filter(p => p._1 != p._2): _*)
-    def run[T](body: => T): (T, T) = {
-      val a = body
-      System.setProperty("graft.broadcastStateBound", "0")
-      try { (a, body) } finally System.clearProperty("graft.broadcastStateBound")
+    val pairs = Seq.fill(120)((rnd.nextInt(60) + 1L, rnd.nextInt(60) + 1L))
+      .filter(p => p._1 != p._2)
+    val edges = edgeDf(pairs: _*)
+    // (broadcast, shuffle-hash) joins in the tapped round plans: proves
+    // each bound really switched the formulation
+    def joins[T](body: => T): (T, (Int, Int)) = {
+      import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
+      val plans = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.execution.SparkPlan]
+      graft.PlanAudit.hook = (_, qe) => plans.synchronized { plans += qe.executedPlan }
+      val out = try body finally graft.PlanAudit.hook = null
+      val ops = plans.synchronized(plans.toList).flatMap(_.collect { case p => p })
+      (out, (ops.count(_.isInstanceOf[BroadcastHashJoinExec]),
+        ops.count(_.isInstanceOf[ShuffledHashJoinExec])))
     }
-    val (ccA, ccB) = run(Algorithms.connectedComponents(nodes, edges)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
-    assert(ccA === ccB)
-    val (lpA, lpB) = run(Algorithms.labelPropagation(nodes, edges, iters = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
-    assert(lpA === lpB)
+    def both[T](body: Long => T): Unit = {
+      val (co, (coB, coS)) = joins(body(0L))
+      val (bc, (bcB, bcS)) = joins(body(Long.MaxValue))
+      assert(co === bc)
+      assert(bcB > coB && coS > bcS, s"co ($coB, $coS) vs broadcast ($bcB, $bcS)")
+    }
+    def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    both(b => pairSet(Algorithms.connectedComponents(nodes, edges,
+      driverBytes = 0L, broadcastBytes = b)))
+    // SCC's minLabel fixpoint: driver tail off, so every phase loops
+    both(b => pairSet(Algorithms.stronglyConnectedComponents(nodes, edges,
+      driverBytes = 0L, broadcastBytes = b)))
+    // dagLevels over the acyclic orientation of the same edges
+    val dag = pairs.map { case (a, b) => (math.min(a, b), math.max(a, b)) }
+      .toDF("a", "b")
+    both(b => pairSet(Algorithms.dagLevels(dag, broadcastBytes = b)))
+    val temporal = pairs.zipWithIndex
+      .map { case ((a, b), i) => (a, b, (i % 17).toLong) }.toDF("a", "b", "tsec")
+      .select(col("a"), col("b"), timestamp_seconds(col("tsec")).as("t"))
+    both(b => Algorithms.temporalEarliestArrival(temporal, nodeDf(1L, 2L),
+        timestamp_seconds(lit(0L)), broadcastBytes = b)
+      .select(col("gid"), unix_timestamp(col("arr"))).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet)
+    both(b => pairSet(Algorithms.louvain(nodes, edges, broadcastBytes = b)))
   }
 
   test("adamic-adar scores non-adjacent pairs by hub-discounted common neighbors") {

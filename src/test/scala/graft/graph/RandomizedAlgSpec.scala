@@ -237,10 +237,10 @@ class RandomizedAlgSpec extends SparkSpec {
     (301 to 306).foreach { seed =>
       val (nodes, edges) = randomGraph(seed)
       val (ndf, edf) = toDf(nodes, edges)
-      val viaLoop = Algorithms.connectedComponents(ndf, edf, cutoverBelow = 0L)
+      val viaLoop = Algorithms.connectedComponents(ndf, edf, driverBytes = 0L)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val viaCutover = Algorithms
-        .connectedComponents(ndf, edf, cutoverBelow = Long.MaxValue)
+        .connectedComponents(ndf, edf, driverBytes = Long.MaxValue)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(viaLoop === viaCutover, s"seed=$seed")
       // same identity for the incremental fold's contracted graph
@@ -256,10 +256,10 @@ class RandomizedAlgSpec extends SparkSpec {
       val de = if (deltaE.isEmpty) Seq((0L, 0L)).toDF("gsrc", "gdst").limit(0)
         else deltaE.toDF("gsrc", "gdst")
       val prev = Algorithms.connectedComponents(bn, be).localCheckpoint()
-      val iLoop = Algorithms.ccIncremental(prev, de, cutoverBelow = 0L)
+      val iLoop = Algorithms.ccIncremental(prev, de, driverBytes = 0L)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val iCut = Algorithms.ccIncremental(prev, de,
-          cutoverBelow = Long.MaxValue)
+          driverBytes = Long.MaxValue)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(iLoop === iCut, s"seed=$seed incremental")
     }
@@ -277,10 +277,51 @@ class RandomizedAlgSpec extends SparkSpec {
     val prev = Seq.empty[(Long, Long)].toDF("gid", "comp")
     val de = ((n - 1) to 1 by -1).map(k => (k.toLong, (k + 1).toLong))
       .toDF("gsrc", "gdst")
-    val got = Algorithms.ccIncremental(prev, de, cutoverBelow = Long.MaxValue)
+    val got = Algorithms.ccIncremental(prev, de, driverBytes = Long.MaxValue)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size === n)
     assert(got.values.forall(_ == 1L), "every node joins the min-label component")
+  }
+
+  test("driver tails ≡ distributed rounds (driverBytes 0 vs Long.MaxValue): MIS, matching, coloring, MSF, SCC reach") {
+    // each loop finishes on the driver once its live state fits
+    // driverBytes: 0 keeps every round distributed, Long.MaxValue takes
+    // the driver tail after the first round; both must agree exactly
+    import spark.implicits._
+    def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+      df.collect().map(_.toSeq).toSet
+    (601 to 604).foreach { seed =>
+      val rnd = new Random(seed)
+      val n = 30 + rnd.nextInt(30)
+      val edges = Seq.fill(3 * n)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      val ndf = (0L until n.toLong).toDF("gid")
+      val edf = edges.toDF("gsrc", "gdst")
+      def same(what: String)(run: Long => org.apache.spark.sql.DataFrame): Unit =
+        assert(rows(run(0L)) === rows(run(Long.MaxValue)), s"seed=$seed $what")
+      same("MIS")(d => Algorithms.maximalIndependentSet(ndf, edf, driverBytes = d))
+      same("matching")(d => Algorithms.maximalMatching(edf, driverBytes = d))
+      same("coloring")(d => Algorithms.speculativeColoring(ndf, edf, driverBytes = d))
+      val wdf = edges.map { case (a, b) => (a, b, (1 + rnd.nextInt(4)).toDouble) }
+        .toDF("gsrc", "gdst", "w")
+      same("MSF forest")(d =>
+        Algorithms.minimumSpanningForestWithComponents(ndf, wdf, driverBytes = d)._1)
+      same("MSF components")(d =>
+        Algorithms.minimumSpanningForestWithComponents(ndf, wdf, driverBytes = d)._2)
+      // SCC fold: base labels + condensation, then a delta batch
+      val (base, delta) = edges.filter(e => e._1 != e._2).splitAt(2 * n)
+      val be = base.toDF("gsrc", "gdst")
+      val labels = Algorithms.stronglyConnectedComponents(ndf, be).localCheckpoint()
+      val dag = be
+        .join(labels.select(col("gid").as("gsrc"), col("scc").as("ca")), Seq("gsrc"))
+        .join(labels.select(col("gid").as("gdst"), col("scc").as("cb")), Seq("gdst"))
+        .filter(col("ca") =!= col("cb"))
+        .select(col("ca").as("a"), col("cb").as("b")).distinct().localCheckpoint()
+      val de = delta.toDF("gsrc", "gdst")
+      same("SCC fold labels")(d =>
+        Algorithms.sccIncrementalWithDag(labels, dag, de, driverBytes = d)._1)
+      same("SCC fold DAG")(d =>
+        Algorithms.sccIncrementalWithDag(labels, dag, de, driverBytes = d)._2)
+    }
   }
 
   test("bfs hop distances match driver BFS on random digraphs") {

@@ -6,18 +6,18 @@ import org.apache.spark.sql.functions._
 /** Strongly connected components: the distributed forward–backward
   * min-label peeling must equal the canonical (min-member) labeling —
   * checked against an independent driver-side Tarjan on planted and
-  * randomized digraphs, with the straggler cutover BOTH forced off
-  * (cutoverBelow = 0: the distributed loop runs to empty) and forced on
-  * (cutoverBelow = huge: pure Tarjan path) to pin their identity.
+  * randomized digraphs, with the driver tail BOTH forced off
+  * (driverBytes = 0: the distributed loop runs to empty) and forced on
+  * (driverBytes = huge: pure Tarjan path) to pin their identity.
   */
 class SccSpec extends SparkSpec {
 
-  private def run(edges: Seq[(Long, Long)], cutover: Long): Map[Long, Long] = {
+  private def run(edges: Seq[(Long, Long)], driverBytes: Long): Map[Long, Long] = {
     import spark.implicits._
     val e = edges.toDF("gsrc", "gdst")
     val n = e.select(col("gsrc").as("gid"))
       .unionByName(e.select(col("gdst").as("gid"))).distinct()
-    Algorithms.stronglyConnectedComponents(n, e, cutoverBelow = cutover)
+    Algorithms.stronglyConnectedComponents(n, e, driverBytes = driverBytes)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
@@ -35,8 +35,8 @@ class SccSpec extends SparkSpec {
       (1, 2), (2, 3), (3, 1), (10, 11), (11, 10), (20, 21), (21, 22), (3, 10))
     val want = Map[Long, Long](1L -> 1L, 2L -> 1L, 3L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 21L, 22L -> 22L)
-    assert(run(edges, cutover = 0L) == want)
-    assert(run(edges, cutover = 1000000L) == want)
+    assert(run(edges, driverBytes = 0L) == want)
+    assert(run(edges, driverBytes = Long.MaxValue) == want)
   }
 
   test("distributed path ≡ driver Tarjan on random digraphs (both cutover regimes)") {
@@ -47,41 +47,42 @@ class SccSpec extends SparkSpec {
       val edges = Seq.fill(m)(
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)).filter(e => e._1 != e._2)
       val want = reference(edges)
-      assert(run(edges, cutover = 0L) == want, s"distributed, trial $trial")
-      assert(run(edges, cutover = 1000000L) == want, s"cutover, trial $trial")
+      assert(run(edges, driverBytes = 0L) == want, s"distributed, trial $trial")
+      assert(run(edges, driverBytes = Long.MaxValue) == want, s"cutover, trial $trial")
     }
   }
 
   test("acyclic graph: every node its own SCC") {
     val edges = Seq[(Long, Long)]((1, 2), (1, 3), (2, 4), (3, 4), (4, 5))
     val want = (1L to 5L).map(v => v -> v).toMap
-    assert(run(edges, cutover = 0L) == want)
+    assert(run(edges, driverBytes = 0L) == want)
   }
 
   test("one giant cycle settles in a single phase") {
     val n = 40L
     val edges = (1L to n).map(i => (i, i % n + 1))
     val want = (1L to n).map(v => v -> 1L).toMap
-    assert(run(edges, cutover = 0L) == want)
+    assert(run(edges, driverBytes = 0L) == want)
   }
 
   test("edge-budget guard: a dense sub-node-bound remainder stays distributed, and the driver collect is remainder-induced") {
     // complete digraph on 56 nodes (3,080 edges) + a 5-node chain:
-    // with cutoverBelow = 61 the node count is already at the cutover
-    // bound at ENTRY, but the edge set exceeds 50×61 — the r8 latent
-    // hazard shape, where the old code collected the FULL edge table.
-    // Now the loop must run a distributed phase first (settling the
-    // dense SCC and the chain head), leaving a 4-node / 3-edge
-    // remainder for the driver — the in-loop require asserts the
-    // collected set is remainder-induced-bounded.
+    // the budget holds 61 node rows (16 B each: gid) and 3,050 edge
+    // rows (24 B each: a, b), so the nodes alone fit at ENTRY but nodes
+    // plus the 3,084 edges do not — the r8 latent hazard shape, where
+    // the old code collected the FULL edge table. Now the loop must run
+    // a distributed phase first (settling the dense SCC and the chain
+    // head), leaving a 4-node / 3-edge remainder for the driver — the
+    // in-loop require asserts the collected set is within budget.
     val dense = for { a <- 100L to 155L; b <- 100L to 155L; if a != b }
       yield (a, b)
     val chain = Seq[(Long, Long)]((1, 2), (2, 3), (3, 4), (4, 5))
     val edges = dense ++ chain
     val want = reference(edges)
-    assert(run(edges, cutover = 61L) == want, "edge-budget-forced phase")
+    assert(run(edges, driverBytes = 61L * 16 + 3050L * 24) == want,
+      "edge-budget-forced phase")
     // plain within-budget cutover unchanged
-    assert(run(edges, cutover = 1000000L) == want, "immediate cutover")
+    assert(run(edges, driverBytes = Long.MaxValue) == want, "immediate cutover")
   }
 
   private def foldVsRefit(edges: Seq[(Long, Long)], isBase: ((Long, Long)) => Boolean): Unit = {
@@ -106,7 +107,7 @@ class SccSpec extends SparkSpec {
     // the distributed frontier-sweep path (cutover forced off) computes
     // the identical labeling — both reachability regimes stay covered
     val gotDist = Algorithms.sccIncrementalWithDag(baseLabels, baseDag,
-        delta.toDF("gsrc", "gdst"), reachCutoverBelow = 0L)._1
+        delta.toDF("gsrc", "gdst"), driverBytes = 0L)._1
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotDist == got, "distributed reachability path diverged")
     // chained folds with DAG maintenance (the s_scc_incr contract):

@@ -984,4 +984,25 @@ class InterpreterSpec extends SparkSpec with graft.TempDirs {
       assert(got === Seq(("x", 5L, 5L), ("b", 2L, 2L)), path)
     }
   }
+
+  test("UPDATE rejects a null SET on a NOT NULL field before any state changes") {
+    for ((path, it) <- Seq("budget 0" -> sparkPath(), "default" -> fresh())) {
+      it.executeScript(
+        """CREATE NODE P (name: string NOT NULL, n: int);
+          |CREATE EDGE E (FROM P ONE, TO P ONE, PROPS (weight: int NOT NULL, note: string));
+          |INSERT NODE P (name: 'a', n: 1);
+          |INSERT NODE P (name: 'b', n: 2);
+          |INSERT EDGE E FROM P (name: 'a') TO P (name: 'b') (weight: 3);""".stripMargin)
+      val e = intercept[ExecError](
+        it.executeScript("UPDATE NODE P SET n: 9, name: null WHERE n: 1;"))
+      assert(e.getMessage.contains("'name'"), path)
+      assertThrows[ExecError](it.executeScript("UPDATE EDGE E SET weight: null;"))
+      // nothing changed, and a null on a nullable field still applies
+      it.executeScript("UPDATE EDGE E SET note: null;")
+      val nodes = it.nodes("P").orderBy("_id").collect()
+        .map(r => (r.getAs[String]("name"), r.getAs[Long]("n"))).toSeq
+      assert(nodes === Seq(("a", 1L), ("b", 2L)), path)
+      assert(it.edges("E").collect().map(_.getAs[Long]("weight")).toSeq === Seq(3L), path)
+    }
+  }
 }
