@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{And, BoundReference, EqualNullSafe,
   Expression, InterpretedPredicate, InterpretedProjection, Literal}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.graftbridge.{Bridge, DriverParquet}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -51,11 +51,14 @@ final case class ExecError(msg: String) extends RuntimeException(msg)
   *  - an INSERT EDGE endpoint on a Spark table resolves with an ordered
   *    take of one row (`TakeOrderedAndProject`): one job, where a `min`
   *    aggregate runs two under adaptive execution;
-  *  - `compact` writes each label as parquet (a driver-resident label
-  *    as one file; its rows stay the live state), and `bootFrom` loads
-  *    each snapshot label whose files fit the budget left with one
-  *    bounded collect, so a label within the budget boots onto the
-  *    driver and replaying the suffix log runs no job.
+  *  - `compact` writes a driver-resident label as one parquet file and
+  *    `bootFrom` reads a snapshot label whose files fit the budget left
+  *    back onto the driver, both on the driver with Spark's own parquet
+  *    row support and no job ([[org.apache.spark.sql.graftbridge.DriverParquet]]);
+  *    the read stops one row past what the budget holds. A Spark-resident
+  *    label is written and read by Spark. So a store whose labels all
+  *    fit the budget compacts, boots and replays its suffix log with no
+  *    job.
   *
   * Statement WAL semantics: `replay(script)` reconstructs state by
   * re-executing the ordered log, exactly like the reference server's
@@ -150,11 +153,11 @@ final class Interpreter private[graft] (spark: SparkSession, driverBytes: Long) 
       width = math.max(1, read.rdd.getNumPartitions)
     }
 
-    /** Boot from a snapshot table onto the driver with one collect,
-      * when its files are no larger than `room` and the rows it reads
-      * fit it; else read it from Spark. The collect stops one row past
-      * the most all-null rows `room` holds, so a label of small rows
-      * that does not fit is not read in whole.
+    /** Boot from a snapshot table onto the driver, when its files are no
+      * larger than `room` and the rows it reads fit it; else read it from
+      * Spark. The driver reads the files itself, with no job, and stops
+      * one row past the most all-null rows `room` holds, so a label of
+      * small rows that does not fit is not read in whole.
       */
     def boot(path: java.nio.file.Path): Unit = {
       val files = java.nio.file.Files.walk(path)
@@ -163,18 +166,18 @@ final class Interpreter private[graft] (spark: SparkSession, driverBytes: Long) 
         .map(java.nio.file.Files.size).sum finally files.close()
       if (onDisk <= room) {
         val most = room / Interpreter.rowBytes(Row.fromSeq(schema.map(_ => null)))
-        keep(Interpreter.collectRows(spark.read.schema(schema).parquet(path.toString)
-          .limit(math.min(most + 1, Int.MaxValue.toLong).toInt)))
+        keep(DriverParquet.read(spark, schema, path, most + 1))
       } else rows = None
       repoint(path)
     }
 
-    /** The table to write as this label's snapshot: a driver-resident
-      * label writes one file, so its boot reads one split.
+    /** Write this label's snapshot table to `path`: driver rows as one
+      * file, written on the driver with no job; a Spark table with
+      * Spark's writer.
       */
-    def snapshot(): DataFrame = {
-      val table = materialize()
-      if (rows.isDefined) table.coalesce(1) else table
+    def snapshot(path: java.nio.file.Path): Unit = local() match {
+      case Some(rs) => DriverParquet.write(spark, rowSchema, rs, path)
+      case None => materialize().write.mode("overwrite").parquet(path.toString)
     }
 
     def materialize(): DataFrame = local() match {
@@ -633,14 +636,8 @@ final class Interpreter private[graft] (spark: SparkSession, driverBytes: Long) 
       graft.catalog.CatalogJson.write(cat))
     val nodeLabels = nodeState.keys.toSeq.sorted
     val edgeLabels = edgeState.keys.toSeq.sorted
-    nodeLabels.foreach { l =>
-      nodeState(l).snapshot().write.mode("overwrite")
-        .parquet(dir.resolve("nodes").resolve(l).toString)
-    }
-    edgeLabels.foreach { l =>
-      edgeState(l).snapshot().write.mode("overwrite")
-        .parquet(dir.resolve("edges").resolve(l).toString)
-    }
+    nodeLabels.foreach(l => nodeState(l).snapshot(dir.resolve("nodes").resolve(l)))
+    edgeLabels.foreach(l => edgeState(l).snapshot(dir.resolve("edges").resolve(l)))
     Snapshot.publishMeta(dir,
       Snapshot.Meta(gen, nextId, nodeLabels, edgeLabels))
     val log = Snapshot.openLog(dataDir, gen, format)

@@ -18,6 +18,10 @@ import org.json4s.jackson.JsonMethods.{compact => jcompact, render}
   *   snapshot-G/catalog.json      full catalog at compaction time
   *   snapshot-G/nodes/<label>/    parquet, one dir per node label
   *   snapshot-G/edges/<label>/    parquet, one dir per edge label
+  *                                (a driver-resident label's dir holds
+  *                                one file, part-00000.parquet, and no
+  *                                _SUCCESS; a Spark-resident one holds
+  *                                Spark's output)
   *   snapshot-G/meta.json         {generation, nextId, nodes, edges}
   *   commit.G.log                 statements appended AFTER snapshot G
   *                                (generation 0 is plain commit.log)

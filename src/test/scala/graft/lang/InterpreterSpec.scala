@@ -869,6 +869,182 @@ class InterpreterSpec extends SparkSpec with graft.TempDirs {
     assert(stateOf(booted, Seq("P", "Q"), Seq("E")) === stateOf(it, Seq("P", "Q"), Seq("E")))
   }
 
+  /** `body` with the session conf `kv` set, restored after. */
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** Names of the entries of a snapshot label's dir, checksums left out. */
+  private def snapshotFiles(dir: java.nio.file.Path): Set[String] = {
+    val ls = java.nio.file.Files.list(dir)
+    try scala.jdk.CollectionConverters.IteratorHasAsScala(ls.iterator).asScala
+      .map(_.getFileName.toString).filterNot(_.endsWith(".crc")).toSet
+    finally ls.close()
+  }
+
+  // arrays take no literal in a statement, so a Spark-written snapshot
+  // brings them in: it boots onto the driver, which compacts it again
+  test("driver snapshots: every catalog type round-trips through spark.read.parquet and bootFrom, under either write rebase") {
+    import graft.store.Snapshot
+    val it = fresh()
+    it.executeScript(
+      """CREATE NODE T (s: string, x: text, i: int, f: float, b: bool, u: uuid, d: date,
+        |  tm: time, ts: datetime, j: json, bl: blob, e: enum<'lo', 'hi'>,
+        |  ai: array<int>, ast: array<string>);
+        |CREATE NODE Empty (s: string);
+        |INSERT NODE T (s: 'str', x: 'long text', i: 42, f: 2.5, b: true,
+        |  u: '123e4567-e89b-12d3-a456-426614174000', d: '1500-03-01', tm: '12:34:56',
+        |  ts: '1400-06-15T10:20:30', j: '{"k": [1, 2]}', bl: 'bytes', e: 'hi');
+        |INSERT NODE T (s: null);""".stripMargin)
+    val schema = it.nodes("T").schema
+    val withArrays = org.apache.spark.sql.Row(3L, "s3", "t3", -7L, -1.25, false, "u3",
+      java.sql.Date.valueOf("1000-01-01"), "00:00:01",
+      java.sql.Timestamp.valueOf("1582-10-04 23:59:59"), "[]", Array[Byte](0, 1, -1), "lo",
+      Seq(1L, null, 3L), Seq("a", null, ""))
+    val table = it.nodes("T").unionByName(
+      spark.createDataFrame(java.util.List.of(withArrays), schema))
+    def rowsOf(df: org.apache.spark.sql.DataFrame) = df.orderBy("_id").collect().toSeq
+    val want = rowsOf(table)
+    assert(want.length === 3)
+    val dir = tempDir("graft-types").toString
+    val first = Snapshot.snapDir(dir, 1)
+    java.nio.file.Files.createDirectories(first)
+    java.nio.file.Files.writeString(first.resolve("catalog.json"),
+      graft.catalog.CatalogJson.write(it.catalog))
+    table.write.parquet(first.resolve("nodes").resolve("T").toString)
+    it.nodes("Empty").write.parquet(first.resolve("nodes").resolve("Empty").toString)
+    Snapshot.publishMeta(first, Snapshot.Meta(1, 4, Seq("Empty", "T"), Nil))
+    def check(booted: Interpreter, what: String): Unit = {
+      assert(rowsOf(booted.nodes("T")) === want, what)
+      assert(booted.nodes("Empty").count() === 0, what)
+      // on the driver: a LocalRelation reads no file
+      assert(booted.nodes("T").inputFiles.isEmpty, what)
+    }
+    for (mode <- Seq("CORRECTED", "LEGACY"))
+      withConf("spark.sql.parquet.datetimeRebaseModeInWrite" -> mode,
+          "spark.sql.parquet.int96RebaseModeInWrite" -> mode) {
+        // the last generation Spark wrote boots onto the driver
+        val driver = fresh()
+        assert(jobsOf(driver.bootFrom(dir)) === 0, mode)
+        check(driver, s"$mode: a Spark-written snapshot booted")
+        // the driver writes it again: one file, which Spark reads equal
+        assert(jobsOf(driver.compact(dir)) === 0, mode)
+        val gen = Snapshot.latest(dir).get._1
+        val labels = Snapshot.snapDir(dir, gen).resolve("nodes")
+        for (l <- Seq("T", "Empty"))
+          assert(snapshotFiles(labels.resolve(l)) === Set("part-00000.parquet"), s"$mode $l")
+        assert(rowsOf(spark.read.parquet(labels.resolve("T").toString)) === want, mode)
+        assert(spark.read.parquet(labels.resolve("Empty").toString).count() === 0, mode)
+        val again = fresh()
+        again.bootFrom(dir)
+        check(again, s"$mode: a driver-written snapshot booted")
+        // budget 0 boots it with Spark's reader and writes it with Spark's writer
+        val viaSpark = sparkPath()
+        viaSpark.bootFrom(dir)
+        assert(viaSpark.nodes("T").inputFiles.nonEmpty, mode)
+        assert(rowsOf(viaSpark.nodes("T")) === want, mode)
+        viaSpark.compact(dir)
+      }
+    val last = fresh()
+    last.bootFrom(dir)
+    check(last, "a LEGACY Spark-written snapshot booted")
+  }
+
+  test("compact and bootFrom of an all-driver store run no job; at budget 0 Spark's writer and reader run") {
+    import graft.store.Snapshot
+    for ((path, make) <- Seq("default" -> (() => fresh()), "budget 0" -> (() => sparkPath()))) {
+      val dir = tempDir("graft-nojob").toString
+      val it = make()
+      val log = graft.store.CommitLog.open(dir)
+      it.executeLogged(
+        """CREATE NODE P (name: string, n: int);
+          |CREATE NODE Q (tag: string);
+          |CREATE EDGE E (FROM P ONE, TO Q MANY, PROPS (w: float));""".stripMargin, log)
+      for (r <- 1 to 6)
+        it.executeLogged(s"INSERT NODE P (name: 'a$r', n: $r); INSERT NODE Q (tag: 't$r');", log)
+      it.executeLogged("INSERT EDGE E FROM P (name: 'a1') TO Q (tag: 't2') (w: 0.5);", log)
+      val compactJobs = jobsOf { it.compact(dir); () }
+      val booted = make()
+      val bootJobs = jobsOf { booted.bootFrom(dir); () }
+      assert(stateOf(booted, Seq("P", "Q"), Seq("E")) === stateOf(it, Seq("P", "Q"), Seq("E")), path)
+      val snap = Snapshot.snapDir(dir, 1)
+      val labels = Seq("nodes/P", "nodes/Q", "edges/E").map(snap.resolve)
+      val frames = Seq(booted.nodes("P"), booted.nodes("Q"), booted.edges("E"))
+      if (path == "default") {
+        assert((compactJobs, bootJobs) === ((0, 0)))
+        labels.foreach(l => assert(snapshotFiles(l) === Set("part-00000.parquet"), l))
+        assert(frames.forall(_.inputFiles.isEmpty))
+      } else {
+        assert(compactJobs >= labels.size, "Spark's writer runs a job per label")
+        labels.foreach(l => assert(snapshotFiles(l).contains("_SUCCESS"), l))
+        assert(frames.forall(_.inputFiles.nonEmpty))
+      }
+    }
+  }
+
+  test("a snapshot label whose files fit the budget but whose rows do not boots to Spark; the driver read stops one row past the bound") {
+    import graft.store.Snapshot
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.graftbridge.DriverParquet
+    val dir = tempDir("graft-expand").toString
+    val it = fresh()
+    it.executeScript("CREATE NODE P (name: string, n: int);" +
+      (1 to 1000).map(r => s"INSERT NODE P (name: 'a${r % 10}', n: ${r % 7});").mkString)
+    it.compact(dir)
+    val path = Snapshot.snapDir(dir, 1).resolve("nodes").resolve("P")
+    val files = java.nio.file.Files.walk(path)
+    val onDisk = try scala.jdk.CollectionConverters.IteratorHasAsScala(files.iterator).asScala
+      .filter(java.nio.file.Files.isRegularFile(_)).map(java.nio.file.Files.size).sum
+      finally files.close()
+    // room for the files on disk, not for the rows they hold
+    val budget = 2 * onDisk
+    assert(1000 * Interpreter.rowBytes(Row(1L, "a1", 1L)) > budget)
+    val booted = new Interpreter(spark, budget)
+    booted.bootFrom(dir)
+    assert(booted.nodes("P").inputFiles.nonEmpty)
+    assert(updateJobs(booted, "P") > 0)
+    assert(stateOf(booted, Seq("P")) === stateOf(it, Seq("P")))
+    // boot reads one row past the most all-null rows the budget holds
+    val most = budget / Interpreter.rowBytes(Row(null, null, null))
+    assert(most + 1 < 1000)
+    assert(DriverParquet.read(spark, it.nodes("P").schema, path, most + 1).size === most + 1)
+  }
+
+  test("a driver write that throws mid-compaction leaves the generation unpublished; boot falls back to the previous one and its full log") {
+    import graft.store.Snapshot
+    val dir = tempDir("graft-crash").toString
+    val it = fresh()
+    var log = graft.store.CommitLog.open(dir)
+    it.executeLogged(
+      """CREATE NODE A (s: string);
+        |CREATE NODE B (d: date);
+        |INSERT NODE A (s: 'a1');
+        |INSERT NODE B (d: '2020-01-01');""".stripMargin, log)
+    log = it.compact(dir)
+    it.executeLogged("INSERT NODE A (s: 'a2'); INSERT NODE B (d: '1500-01-01');", log)
+    // Spark's write support refuses an ancient date in EXCEPTION mode:
+    // A is written, B throws
+    val thrown = intercept[RuntimeException](
+      withConf("spark.sql.parquet.datetimeRebaseModeInWrite" -> "EXCEPTION")(it.compact(dir)))
+    assert(thrown.getMessage.contains("WRITE_ANCIENT_DATETIME"), thrown.getMessage)
+    val partial = Snapshot.snapDir(dir, 2)
+    assert(java.nio.file.Files.exists(partial.resolve("nodes").resolve("A").resolve("part-00000.parquet")))
+    assert(!java.nio.file.Files.exists(partial.resolve("meta.json")))
+    assert(Snapshot.latest(dir).map(_._1) === Some(1L))
+    // the live log goes on; boot sweeps the partial and replays it whole
+    it.executeLogged("INSERT NODE A (s: 'a3');", log)
+    assert(log.entryCount === 3)
+    val booted = fresh()
+    booted.bootFrom(dir)
+    assert(!java.nio.file.Files.exists(partial))
+    assert(stateOf(booted, Seq("A", "B")) === stateOf(it, Seq("A", "B")))
+    assert(booted.nodes("B").collect().map(_.getDate(1).toString).sorted.toSeq
+      === Seq("1500-01-01", "2020-01-01"))
+  }
+
   test("driver rows serve with the catalog's nullability: a WHERE-less UPDATE does not make a later insert's null read 0") {
     val it = fresh()
     it.executeScript(
